@@ -120,18 +120,12 @@ class CypherEngine:
 
     # ------------------------------------------------- staged literal writes
     def _ensure_id_base(self) -> int:
-        """Current next-free-id watermark, scanning max(id) per table
-        only on the first write of a session (same contract as
-        WriteExecutor._next_id_base)."""
-        from pyspark.sql import functions as F
+        """Current next-free-id watermark, read (one job) only on the
+        first write of a session."""
+        from samyama_graph_spark.cypher.writes import next_free_id
 
         if getattr(self, "_id_hint", None) is None:
-            cur = 0
-            for df in self._graph.nodes.values():
-                m = df.agg(F.max("id")).first()[0]
-                if m is not None:
-                    cur = max(cur, int(m))
-            self._id_hint = cur + 1
+            self._id_hint = next_free_id(self._graph.nodes.values())
         return self._id_hint
 
     def _try_stage_literal_create(
@@ -494,17 +488,20 @@ class CypherEngine:
                     idx.options.pop("layout_path", None)
             self.catalog.version += 1
             # carry the id watermark across statements: only the first
-            # write of a session scans per-table max(id)
+            # write of a session reads max(id) (next_free_id, one job)
             self._id_hint = wx.id_hint
             # Compact periodically: interactive CREATE/MERGE sessions
             # otherwise stack one union + a few partitions per write,
             # and plan depth / task counts grow without bound (a
             # 500-statement fixture build ends up with >100k tasks).
-            # Lazy localCheckpoint truncates lineage at the next action
-            # without running an extra job per write.  Every 8: A/B on
-            # the 12-statement write pipeline showed 8 beats both 4
-            # (one fewer checkpoint round) and never (deep plans tax
-            # every subsequent analysis).
+            # Lazy localCheckpoint truncates lineage at the next action;
+            # compaction itself runs no job while the touched tables'
+            # deltas are exchange- and broadcast-free (literal-path
+            # writes), and pre-builds every broadcast of a frame-path
+            # delta otherwise.  Every 8: A/B on the 12-statement write
+            # pipeline showed 8 beats both 4 (one fewer checkpoint
+            # round) and never (deep plans tax every subsequent
+            # analysis).
             self._writes = getattr(self, "_writes", 0) + 1
             if self._writes % 8 == 0:
                 self.graph = self.graph.compacted(
@@ -585,30 +582,52 @@ class CypherEngine:
         """EXPLAIN: planner candidate/cost diagnostics + the Catalyst
         physical plan (the reference's EXPLAIN likewise reports the
         candidate plans it ranked, planner.rs:73, executor/mod.rs:
-        229-260).  Write statements fall back to the execute path."""
+        229-260).  A write statement is planned, never applied: see
+        :meth:`_explain_write`."""
         from samyama_graph_spark.cypher.writes import has_write_clause
 
         ddl = self._try_ddl(text)
-        if ddl is None:
-            ast = self._parse_cached(text)
-            if len(ast.parts) == 1 and not has_write_clause(ast.parts[0]):
-                comp = Compiler(self.graph, params, catalog=self.catalog)
-                df = comp.compile_query(ast)
-                header = ""
-                if comp.plan_trace:
-                    header = (
-                        "== Planner Candidates ==\n"
-                        + "\n".join(comp.plan_trace)
-                        + "\n\n"
-                    )
-                return header + df._jdf.queryExecution().explainString(
-                    df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                        "formatted"
-                    )
-                )
-        df = ddl if ddl is not None else self.query(text, params)
-        return df._jdf.queryExecution().explainString(
-            df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
+        if ddl is not None:
+            return _explain_string(ddl)
+        ast = self._parse_cached(text)
+        if len(ast.parts) == 1 and has_write_clause(ast.parts[0]):
+            return self._explain_write(ast.parts[0], params)
+        comp = Compiler(self.graph, params, catalog=self.catalog)
+        df = comp.compile_query(ast)
+        header = ""
+        if comp.plan_trace:
+            header = (
+                "== Planner Candidates ==\n"
+                + "\n".join(comp.plan_trace)
+                + "\n\n"
             )
+        return header + _explain_string(df)
+
+    def _explain_write(self, sq, params: dict[str, Any] | None) -> str:
+        """Plan a write on a detached WriteExecutor: the session graph,
+        id watermark and staged CREATEs are left as they were.  Reports
+        which delta each write-key site chose (literal with its key
+        count, or the join-based frame path — resolving the key set
+        runs its one bounded read job) and the plan of every table the
+        write would replace."""
+        from samyama_graph_spark.cypher.writes import WriteExecutor
+
+        g = self.graph
+        wx = WriteExecutor(g, params, id_hint=getattr(self, "_id_hint", None))
+        g2, _ = wx.execute(sq)
+        out = ["== Write Key Paths ==", *(wx.key_paths or ["(no key set)"])]
+        for kind, old, new in (
+            ("node", g.nodes, g2.nodes), ("edge", g.edges, g2.edges)
+        ):
+            for name, df in new.items():
+                if old.get(name) is not df:
+                    out += ["", f"== {kind} table {name} ==", _explain_string(df)]
+        return "\n".join(out)
+
+
+def _explain_string(df: DataFrame) -> str:
+    return df._jdf.queryExecution().explainString(
+        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
         )
+    )

@@ -8,18 +8,30 @@ union/join/anti-join deltas — the session (CypherEngine) swaps its
 graph pointer, so subsequent queries see the mutation (the reference's
 MutQueryExecutor equivalent, executor/mod.rs:311-366).
 
-Scale note: deltas are DataFrame unions, never collected; only new-id
-assignment reads one scalar (current max id).  Periodically persisting
-the graph back to parquet compacts the union chain.
+Write keys.  SET / REMOVE / DELETE and MERGE-edge first resolve the
+statement's matched key set (node ids, or (src, dst) pairs) on the
+driver in one bounded job.  Up to ``LITERAL_KEYS_MAX`` keys the delta
+is written as literals over the table's previous version only: a
+``NOT id IN (...)`` Filter or a ``CASE WHEN id IN (...)`` Project, so a
+table's plan grows by one node per write and never re-embeds the MATCH
+frame.  Larger key sets keep the join-based frame delta, whose plan
+holds the previous version twice (the table and the MATCH over it).
+
+Scale note: CREATE deltas are unions of literal rows, never collected;
+new-id assignment reads one scalar per session (``next_free_id``).
+``PropertyGraph.compacted`` truncates the chain every few writes, and
+it runs no Spark job only while every delta is exchange- and
+broadcast-free (literal-path deltas are; frame-path ones are not).
 """
 
 from __future__ import annotations
 
-from dataclasses import replace
+import functools
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from samyama_graph_spark.cypher import ast as A
 from samyama_graph_spark.cypher.compiler import Compiler, State
@@ -30,6 +42,11 @@ from samyama_graph_spark.cypher.expressions import (
     compile_expr,
 )
 from samyama_graph_spark.graph import EdgeMeta, PropertyGraph
+
+# Largest matched key set a write inlines as plan literals (node ids
+# for SET / REMOVE / DELETE, (src, dst) pairs for MERGE edge).  Larger
+# sets keep the join-based frame delta.
+LITERAL_KEYS_MAX = 1024
 
 WRITE_CLAUSES = (
     A.CreateClause, A.MergeClause, A.SetClause, A.RemoveClause, A.DeleteClause,
@@ -75,6 +92,9 @@ class WriteExecutor:
         # (frame-bound CREATE/MERGE/DELETE) — the carried value goes
         # stale, which the planner tolerates by design.
         self._node_delta: dict[str, int | None] = {}
+        # which delta each write-key site used ("literal, n keys" or
+        # "frame"), in statement order: EXPLAIN prints it
+        self.key_paths: list[str] = []
 
     # ------------------------------------------------------------- entry
     def execute(self, sq: A.SingleQuery) -> tuple[PropertyGraph, DataFrame]:
@@ -181,15 +201,46 @@ class WriteExecutor:
 
     # -------------------------------------------------------------- utils
     def _next_id_base(self) -> int:
-        if self.id_hint is not None:
-            return self.id_hint
-        cur = 0
-        for df in self.nodes.values():
-            m = df.agg(F.max("id")).first()[0]
-            if m is not None:
-                cur = max(cur, int(m))
-        self.id_hint = cur + 1
+        if self.id_hint is None:
+            self.id_hint = next_free_id(self.nodes.values())
         return self.id_hint
+
+    def _resolve_keys(
+        self, site: str, rows: DataFrame, key: list[str], order: tuple = ()
+    ) -> dict[tuple, dict[str, str]] | None:
+        """The write's matched key set, read on the driver in ONE
+        bounded job: a top-(LITERAL_KEYS_MAX + 1) by key, which Spark
+        runs as a per-partition take-ordered plus a driver merge (no
+        exchange, unlike ``limit().collect()``'s incremental partition
+        scans or a limit-then-aggregate).
+
+        Returns key tuple -> the first row in ``key, *order`` order as
+        column -> typed SQL literal, skipping keys with a NULL part
+        (they match no row).  Returns None when ``rows`` holds more
+        than LITERAL_KEYS_MAX rows or a column type has no literal
+        form: the caller then keeps the frame delta."""
+        dtypes = {f.name: f.dataType for f in rows.schema.fields}
+        bad = [c for c, t in dtypes.items() if not _has_literal_form(t)]
+        if bad:
+            self.key_paths.append(f"{site}: frame (no literal form: {bad[0]})")
+            return None
+        got = (
+            rows.orderBy(*key, *order).limit(LITERAL_KEYS_MAX + 1).collect()
+        )
+        if len(got) > LITERAL_KEYS_MAX:
+            self.key_paths.append(
+                f"{site}: frame (> {LITERAL_KEYS_MAX} keys)"
+            )
+            return None
+        first: dict[tuple, dict[str, str]] = {}
+        for r in got:
+            k = tuple(r[c] for c in key)
+            if None not in k and k not in first:
+                first[k] = {
+                    c: _typed_literal(r[c], t) for c, t in dtypes.items()
+                }
+        self.key_paths.append(f"{site}: literal, {len(first)} keys")
+        return first
 
     def _literal_props(self, props: dict[str, A.Expr], scope: Scope) -> dict[str, Any]:
         out = {}
@@ -493,19 +544,23 @@ class WriteExecutor:
                 c = F.col(k) == F.lit(v)
                 cond = c if cond is None else (cond & c)
             match_df = existing.filter(cond) if cond is not None else existing
-        # FULLY LAZY merge — no existence-check job per statement (an
+        # LAZY merge — no existence-check job per statement (an
         # interactive fixture build is otherwise one blocking driver
         # round-trip per MERGE):
-        #   ON MATCH SET applies to whatever matches (empty -> no-op),
-        #   and the ON CREATE literal row survives an anti-join against
+        #   the ON CREATE literal row survives an anti-join against
         #   the first match, so exactly one branch is live at execution
         #   time.  The minted id is wasted when the node existed — ids
         #   are internal and gaps are fine (same as a rolled-back
         #   sequence).  Created-count defers to the lazy summary.
+        # ON MATCH SET resolves the matched ids (one job) to write its
+        # literal delta, which also settles which branch is live.
+        matched = None
         if match_df is not None and clause.on_match:
-            self._apply_set_to_ids(
+            matched = self._apply_set_to_ids(
                 label, match_df.select("id"), clause.on_match, scope
             )
+            if matched:
+                return
         nid = self._next_id_base()
         self.id_hint = nid + 1
         all_props = dict(props)
@@ -515,7 +570,8 @@ class WriteExecutor:
                 v.value if isinstance(v, A.Literal) else self.params[v.name]
             )
         row = _literal_row(self.g.spark, {"id": nid, **all_props})
-        if match_df is not None:
+        lazy = match_df is not None and matched is None
+        if lazy:
             row = row.join(
                 F.broadcast(
                     match_df.limit(1).select(F.lit(1).alias("__m"))
@@ -523,7 +579,7 @@ class WriteExecutor:
                 F.lit(True),
                 "left_anti",
             )
-        self._append_nodes(label, row, n=None if match_df is not None else 1)
+        self._append_nodes(label, row, n=None if lazy else 1)
 
     def _merge_node_from_frame(
         self, st: State, np: A.NodePattern, clause: A.MergeClause,
@@ -541,12 +597,12 @@ class WriteExecutor:
         bindable by later clauses.
 
         Scale shape: the match/anti-join is a distributed equi-join on
-        the key tuple; the ONE blocking job is counting the missing
-        set (the id watermark must advance by the real delta), and id
-        minting is a row_number over that missing DELTA only — fine
-        while deltas are bounded; a full-corpus initial load should
-        use CREATE (no window) instead."""
-        import functools
+        the key tuple; the blocking reads are counting the missing
+        set (the id watermark must advance by the real delta) and, with
+        ON MATCH SET, resolving the matched ids.  Id minting is a
+        row_number over that missing DELTA only — fine while deltas are
+        bounded; a full-corpus initial load should use CREATE (no
+        window) instead."""
         import operator as _op
 
         from pyspark.sql import Window
@@ -615,26 +671,52 @@ class WriteExecutor:
         if lvar not in st.scope.vars or rvar not in st.scope.vars:
             raise CompileError("MERGE edge endpoints must be bound")
         src, dst = (lvar, rvar) if ep.direction != "in" else (rvar, lvar)
+        labels = dict(
+            src_label=st.scope.vars[src].label,
+            dst_label=st.scope.vars[dst].label,
+        )
+        props = {
+            k: (v.value if isinstance(v, A.Literal) else self.params[v.name])
+            for k, v in ep.properties.items()
+        }
         want = st.frame.select(
             F.col(f"{src}.id").alias("src"), F.col(f"{dst}.id").alias("dst")
-        ).distinct()
+        ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         existing = self.edges.get(et)
+        keyed = self._resolve_keys("MERGE", want, ["src", "dst"])
+        if keyed is not None:
+            # one existence probe against the edge table, then the
+            # missing pairs as one VALUES relation: the edge table's
+            # plan gains a Union of literals, not a join against the
+            # MATCH frame
+            if keyed and existing is not None:
+                pairs = ", ".join(
+                    f"({k['src']}, {k['dst']})" for k in keyed.values()
+                )
+                for r in (
+                    existing.select("src", "dst")
+                    .filter(f"(`src`, `dst`) IN ({pairs})")
+                    .collect()
+                ):
+                    keyed.pop((r["src"], r["dst"]), None)
+            if keyed:
+                rows = [{"src": s, "dst": d, **props} for s, d in keyed]
+                self._append_edges(
+                    et,
+                    _literal_rows(self.g.spark, ["src", "dst", *props], rows),
+                    n=len(keyed),
+                    **labels,
+                )
+            return
+        want = want.distinct()
         missing = (
             want if existing is None
             else want.join(existing.select("src", "dst"), ["src", "dst"], "left_anti")
         )
-        cols = [F.col("src"), F.col("dst")]
-        out = missing.select(*cols)
-        for k, v in ep.properties.items():
-            out = out.withColumn(
-                k, F.lit(v.value if isinstance(v, A.Literal) else self.params[v.name])
-            )
-        self._append_edges(
-            et,
-            out,
-            src_label=st.scope.vars[src].label,
-            dst_label=st.scope.vars[dst].label,
-        )
+        out = missing.select(F.col("src"), F.col("dst"))
+        for k, v in props.items():
+            out = out.withColumn(k, F.lit(v))
+        self._append_edges(et, out, **labels)
 
     # ---------------------------------------------------------- set/remove
     def _set(self, st: State, items: list[A.SetItem]) -> None:
@@ -651,6 +733,7 @@ class WriteExecutor:
             if info is None or info.kind != "node" or info.label is None:
                 raise CompileError(f"SET target {var} must be a labeled node")
             valnames = [f"__new_{it.target.key}" for it in var_items]
+            mapping = dict(zip((it.target.key for it in var_items), valnames))
             sel = [
                 F.col(f"{var}.id").alias("id"),
                 *[
@@ -658,11 +741,20 @@ class WriteExecutor:
                     for it, n in zip(var_items, valnames)
                 ],
             ]
-            if "__foreach_pos" in st.frame.columns:
-                # several update rows per id (FOREACH): the highest
-                # list position wins — sequential-iteration semantics
+            # several update rows per id (FOREACH): the highest list
+            # position wins — sequential-iteration semantics
+            foreach = "__foreach_pos" in st.frame.columns
+            rows = st.frame.select(*sel, *(["__foreach_pos"] if foreach else []))
+            keyed = self._resolve_keys(
+                "SET", rows, ["id"],
+                (F.col("__foreach_pos").desc(),) if foreach else (),
+            )
+            if keyed is not None:
+                self._apply_literal_updates(info.label, keyed, mapping, rows)
+                continue
+            if foreach:
                 updates = (
-                    st.frame.select(*sel, "__foreach_pos")
+                    rows
                     .groupBy("id")
                     .agg(
                         F.max_by(
@@ -673,19 +765,61 @@ class WriteExecutor:
                                     for n in valnames])
                 )
             else:
-                updates = st.frame.select(*sel).dropDuplicates(["id"])
-            self._apply_updates(info.label, updates,
-                                {it.target.key: f"__new_{it.target.key}" for it in var_items})
+                updates = rows.dropDuplicates(["id"])
+            self._apply_updates(info.label, updates, mapping)
 
     def _apply_set_to_ids(self, label, ids, items, scope):
-        updates = ids.dropDuplicates(["id"])
+        updates = ids.select("id")
         mapping = {}
         for it in items:
             v = it.value
             val = v.value if isinstance(v, A.Literal) else self.params[v.name]
             updates = updates.withColumn(f"__new_{it.target.key}", F.lit(val))
             mapping[it.target.key] = f"__new_{it.target.key}"
-        self._apply_updates(label, updates, mapping)
+        keyed = self._resolve_keys("SET", updates, ["id"])
+        if keyed is not None:
+            self._apply_literal_updates(label, keyed, mapping, updates)
+        else:
+            self._apply_updates(label, updates.dropDuplicates(["id"]), mapping)
+        return keyed
+
+    def _apply_literal_updates(
+        self, label: str, keyed: dict[tuple, dict[str, str]],
+        mapping: dict[str, str], rows: DataFrame,
+    ) -> None:
+        """The literal form of :meth:`_apply_updates`: ``CASE WHEN id
+        IN (keys) THEN <value> ELSE col END`` per set property, where
+        the value is one literal, or ``map(key, value, ...)[id]`` when
+        the keys carry different values.  Membership in the key set is
+        the ``__touched`` test, so SET to NULL and REMOVE overwrite."""
+        tbl = self.nodes[label]
+        cols = {}
+        if keyed:
+            ids = ", ".join(k["id"] for k in keyed.values())
+            for prop, vcol in mapping.items():
+                lits = [k[vcol] for k in keyed.values()]
+                val = lits[0] if len(set(lits)) == 1 else (
+                    "map(" + ", ".join(
+                        f"{k['id']}, {k[vcol]}" for k in keyed.values()
+                    ) + ")[`id`]"
+                )
+                old = _q(prop) if prop in tbl.columns else "NULL"
+                cols[prop] = F.expr(
+                    f"CASE WHEN `id` IN ({ids}) THEN {val} ELSE {old} END"
+                )
+        else:  # nothing matched: only the schema change, as the join does
+            dtypes = {f.name: f.dataType for f in rows.schema.fields}
+            cols = {
+                prop: F.expr(_typed_literal(None, dtypes[vcol]))
+                for prop, vcol in mapping.items() if prop not in tbl.columns
+            }
+        if cols:
+            self.nodes[label] = tbl.select(
+                *[cols[c].alias(c) if c in cols else F.col(c)
+                  for c in tbl.columns],
+                *[e.alias(p) for p, e in cols.items() if p not in tbl.columns],
+            )
+        self.counters["properties_set"] += len(mapping)
 
     def _apply_updates(self, label: str, updates: DataFrame,
                        mapping: dict[str, str]) -> None:
@@ -726,10 +860,14 @@ class WriteExecutor:
                 raise CompileError(f"unknown variable {it.var}")
             if it.label not in self.nodes:
                 continue  # removing an absent label is a no-op
-            ids = st.frame.select(
-                F.col(f"{info.column}.id").alias("__rm")
-            ).distinct()
+            ids = st.frame.select(F.col(f"{info.column}.id").alias("id"))
             tbl = self.nodes[it.label]
+            keyed = self._resolve_keys("REMOVE", ids, ["id"])
+            if keyed is not None:
+                if keyed:
+                    self.nodes[it.label] = tbl.filter(_not_in("id", keyed))
+                continue
+            ids = ids.select(F.col("id").alias("__rm")).distinct()
             self.nodes[it.label] = tbl.join(
                 ids, tbl["id"] == ids["__rm"], "left_anti"
             )
@@ -773,7 +911,12 @@ class WriteExecutor:
             if info.kind == "node":
                 if info.label is None:
                     raise CompileError("DELETE of unlabeled nodes unsupported")
-                ids = st.frame.select(F.col(f"{var}.id").alias("id")).distinct()
+                ids = st.frame.select(F.col(f"{var}.id").alias("id"))
+                keyed = self._resolve_keys("DELETE", ids, ["id"])
+                if keyed is not None:
+                    self._delete_literal(info.label, keyed, clause.detach)
+                    continue
+                ids = ids.distinct()
                 self.nodes[info.label] = self.nodes[info.label].join(
                     ids, "id", "left_anti"
                 )
@@ -818,6 +961,101 @@ class WriteExecutor:
                 raise CompileError(
                     "DELETE of edge variables lands with edge identity support"
                 )
+
+    def _delete_literal(
+        self, label: str, keyed: dict[tuple, dict[str, str]], detach: bool
+    ) -> None:
+        """The literal form of the DELETE anti-joins: a null-safe ``NOT
+        id IN (keys)`` Filter on the node table and, for DETACH, one on
+        each edge type the frame path would scrub, with the same
+        endpoint-label scoping and ``__src_label``/``__dst_label``
+        provenance conditions."""
+        self.counters["nodes_deleted"] += len(keyed)
+        d = self._node_delta.get(label, 0)
+        if d is not None:
+            self._node_delta[label] = d - len(keyed)
+        if not keyed:
+            return
+        self.nodes[label] = self.nodes[label].filter(_not_in("id", keyed))
+        if not detach:
+            return
+        ids = ", ".join(k["id"] for k in keyed.values())
+        for et, edf in list(self.edges.items()):
+            hits = []
+            for side, admits in zip(("src", "dst"), self._endpoint_label_sets(et)):
+                if admits is not None and label not in admits:
+                    continue
+                hit = f"{_q(side)} IN ({ids})"
+                prov = f"__{side}_label"
+                if prov in edf.columns:
+                    hit += (
+                        f" AND ({_q(prov)} IS NULL"
+                        f" OR {_q(prov)} = {_sql_literal(label)})"
+                    )
+                hits.append(f"({hit})")
+            if hits:
+                self.edges[et] = edf.filter(
+                    f"NOT coalesce({' OR '.join(hits)}, false)"
+                )
+
+
+def next_free_id(tables) -> int:
+    """The next free node id: 1 + the largest ``id`` over every node
+    table, read in ONE job — a top-1 over the union of the id columns,
+    which runs per partition with a driver-side merge and no exchange.
+    The engine and the write executor both seed their watermark here."""
+    ids = [df.select(F.col("id").cast("long").alias("id")) for df in tables]
+    if not ids:
+        return 1
+    top = (
+        functools.reduce(DataFrame.unionAll, ids)
+        .orderBy(F.col("id").desc_nulls_last())
+        .limit(1)
+        .collect()
+    )
+    return int(top[0]["id"]) + 1 if top and top[0]["id"] is not None else 1
+
+
+def _q(name: str) -> str:
+    """Backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _not_in(col: str, keyed: dict[tuple, dict[str, str]]) -> str:
+    """Null-safe keep-predicate: a NULL ``col`` survives, as it does a
+    left-anti join."""
+    ids = ", ".join(k[col] for k in keyed.values())
+    return f"NOT coalesce({_q(col)} IN ({ids}), false)"
+
+
+_LITERAL_TYPES = (
+    T.NullType, T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
+    T.LongType, T.FloatType, T.DoubleType, T.StringType,
+)
+
+
+def _has_literal_form(dtype: T.DataType) -> bool:
+    """Whether :func:`_typed_literal` can write values of ``dtype``."""
+    if isinstance(dtype, T.ArrayType):
+        return _has_literal_form(dtype.elementType)
+    return isinstance(dtype, _LITERAL_TYPES)
+
+
+def _typed_literal(v: Any, dtype: T.DataType) -> str:
+    """SQL text for a collected value that evaluates back to the same
+    value AND Spark type, so a literal delta coerces exactly as the
+    frame delta it replaces."""
+    if isinstance(dtype, T.NullType):
+        return "NULL"
+    t = dtype.simpleString()
+    if v is None:
+        return f"CAST(NULL AS {t})"
+    if isinstance(dtype, T.ArrayType):
+        items = ", ".join(_typed_literal(x, dtype.elementType) for x in v)
+        return f"CAST(array({items}) AS {t})"
+    if isinstance(dtype, (T.BooleanType, T.LongType, T.DoubleType, T.StringType)):
+        return _sql_literal(v)
+    return f"CAST({_sql_literal(v)} AS {t})"
 
 
 def _static_value(e: A.Expr, params: dict[str, Any]) -> Any:
@@ -869,17 +1107,13 @@ def _literal_row(spark, cols: dict[str, Any]) -> DataFrame:
     ``createDataFrame([python_tuple])`` backs the frame with a pickled
     Python RDD — every downstream stage that rescans it (joins, unions,
     broadcasts) spins up Python workers, costing seconds per statement
-    on the write path.  A single ``spark.sql`` SELECT of literals is a
-    Catalyst LocalRelation: zero Python involvement forever after, and
-    (unlike building Columns one py4j call at a time) one driver round
-    trip for the whole row — measured ~45 ms -> ~5 ms per row on the
-    12-statement write pipeline.
+    on the write path.  A ``VALUES`` row is a Catalyst LocalRelation:
+    zero Python involvement, one driver round trip for the whole row,
+    and collecting it (a write's summary) runs no Spark job — a bare
+    ``SELECT <literals>`` scans a parallelized one-row RDD instead,
+    one job per collect.
     """
-    return spark.sql(
-        "SELECT " + ", ".join(
-            f"{_sql_literal(v)} AS `{k}`" for k, v in cols.items()
-        )
-    )
+    return _literal_rows(spark, list(cols), [cols])
 
 
 def _literal_rows(spark, columns: list[str], rows: list[dict]) -> DataFrame:

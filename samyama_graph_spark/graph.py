@@ -182,6 +182,14 @@ class PropertyGraph:
         the next action).  Interactive write sessions call this every
         few statements; bulk loads never need it.
 
+        It runs no Spark job when the touched tables' plans hold no
+        exchange or broadcast: turning a plan into the checkpoint's RDD
+        starts every broadcast build in it on the spot (one job each),
+        AQE or not.  Literal-path write deltas (unions of VALUES rows,
+        and Filter / Project over the previous version,
+        cypher/writes.py) hold neither; a frame-path delta holds a join
+        against its MATCH frame, whose broadcasts run here.
+
         ``touched`` (keys ``("n", label)`` / ``("e", edge_type)``)
         restricts checkpointing to the tables writes actually changed
         since the last compaction — untouched tables keep their frame
@@ -199,12 +207,9 @@ class PropertyGraph:
 
         # AQE OFF while the checkpoints are planned: under AQE,
         # localCheckpoint's plan->RDD conversion EXECUTES every shuffle
-        # stage of the delta chain on the spot (several real jobs per
-        # compaction, measured 1-8 on a 12-statement fixture); with a
-        # static plan the conversion is pure compilation and the
-        # checkpoint truly defers to the next action.  Write-delta
-        # plans are tiny unions/joins — adaptive re-planning has
-        # nothing to add.
+        # stage of the delta chain on the spot; with a static plan the
+        # shuffles defer to the next action.  Broadcasts do not: their
+        # builds start at conversion either way (see the docstring).
         prev = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
         try:
             self.spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -376,3 +376,193 @@ def test_staged_literal_creates_fold_and_flush(spark):
         "MATCH (p:P {name: 'd'}) RETURN p.tags AS tags"
     ).first()["tags"]
     assert list(lst) == ["x", "y"]
+
+
+# ----------------------------------------------------- literal write keys
+
+
+def _last_job(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = sc.statusTracker().getJobIdsForGroup(None)
+    return max(ids) if ids else -1
+
+
+def _table_rows(g: PropertyGraph) -> dict:
+    """Every node and edge table as (schema, sorted rows)."""
+    out = {}
+    for kind, tables in (("n", g.nodes), ("e", g.edges)):
+        for name, df in tables.items():
+            out[(kind, name)] = (
+                df.schema.simpleString(),
+                sorted((tuple(r) for r in df.collect()), key=repr),
+            )
+    return out
+
+
+def test_compaction_after_literal_writes_runs_no_job(spark, tmp_path):
+    """SET, MERGE and DETACH DELETE write literal deltas over the
+    previous table version: no table plan joins against a MATCH frame,
+    so compaction has no broadcast to pre-build and launches no job.
+    The tables are parquet scans: building a broadcast of a scan runs a
+    job, where one of an in-memory local relation would not."""
+    spark.createDataFrame(
+        [(1, "Alice", 30), (2, "Bob", 25)], "id long, name string, age long"
+    ).write.parquet(str(tmp_path / "person"))
+    spark.createDataFrame(
+        [(1, 2, 2020)], "src long, dst long, since long"
+    ).write.parquet(str(tmp_path / "knows"))
+    engine = CypherEngine(PropertyGraph(
+        spark,
+        {"Person": spark.read.parquet(str(tmp_path / "person"))},
+        {"KNOWS": spark.read.parquet(str(tmp_path / "knows"))},
+    ))
+    engine.query("MATCH (p:Person {name:'Bob'}) SET p.age = 26")
+    engine.query(
+        "MATCH (a:Person {name:'Bob'}), (b:Person {name:'Alice'}) "
+        "MERGE (a)-[:KNOWS]->(b)"
+    )
+    engine.query("MATCH (p:Person {name:'Alice'}) DETACH DELETE p")
+    g = engine.graph
+    for df in [*g.nodes.values(), *g.edges.values()]:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan, plan
+    j0 = _last_job(spark)
+    engine.graph = g.compacted()
+    assert _last_job(spark) == j0
+    assert names(engine) == ["Bob"]
+    assert engine.query(
+        "MATCH (p:Person {name:'Bob'}) RETURN p.age AS a"
+    ).first()["a"] == 26
+    assert engine.query(
+        "MATCH ()-[k:KNOWS]->() RETURN count(*) AS n"
+    ).first()["n"] == 0
+
+
+_KEY_PATH_SCRIPT = [
+    "MATCH (p:Person) WHERE p.age > 20 SET p.age = p.age + 1",
+    "MATCH (p:Person {name:'Bob'}) SET p.city = 'SF', p.score = 1.5",
+    "MATCH (p:Person {name:'Nobody'}) SET p.ghost = 'x'",
+    "MATCH (p:Person {name:'Carl'}) SET p.age = null",
+    "MATCH (p:Person {name:'Bob'}) REMOVE p.city",
+    "MATCH (p:Person) FOREACH (x IN [1, 2, 3] | SET p.flag = x)",
+    "MATCH (a:Person {name:'Bob'}), (b:Person) WHERE b.name <> 'Bob' "
+    "MERGE (a)-[:KNOWS {since: 2024}]->(b)",
+    "MERGE (n:Person {name: 'Alice'}) ON MATCH SET n.seen = true",
+    "MERGE (n:Person {name: 'Dora'}) ON MATCH SET n.seen = true",
+    "MATCH (p:Person {name:'Carl'}) REMOVE p:Admin",
+    "MATCH (p:Person {name:'Alice'}) DETACH DELETE p",
+]
+
+
+def _key_path_engine(spark):
+    persons = spark.createDataFrame(
+        [(1, "Alice", 30), (2, "Bob", 25), (3, "Carl", 19)],
+        "id long, name string, age long",
+    )
+    admins = spark.createDataFrame([(3, "all")], "id long, scope string")
+    knows = spark.createDataFrame(
+        [(1, 2, 2020), (2, 3, 2021)], "src long, dst long, since long"
+    )
+    return CypherEngine(PropertyGraph(
+        spark, {"Person": persons, "Admin": admins}, {"KNOWS": knows}
+    ))
+
+
+def test_literal_and_frame_key_paths_agree(spark, monkeypatch):
+    """Both sides of LITERAL_KEYS_MAX leave identical node and edge
+    rows, schemas and summary counters."""
+    from samyama_graph_spark.cypher import writes
+
+    results = {}
+    for cap in (writes.LITERAL_KEYS_MAX, 0):
+        monkeypatch.setattr(writes, "LITERAL_KEYS_MAX", cap)
+        eng = _key_path_engine(spark)
+        plan = eng.explain(_KEY_PATH_SCRIPT[0])
+        assert ("literal, 2 keys" if cap else "frame (> 0 keys)") in plan
+        summaries = [
+            tuple(eng.query(q).first()) for q in _KEY_PATH_SCRIPT
+        ]
+        results[cap] = (summaries, _table_rows(eng.graph))
+    assert results[0] == results[writes.LITERAL_KEYS_MAX]
+    summaries, tables = results[0]
+    assert summaries[-1][3] == 1  # nodes_deleted
+    people = {r[1]: r for r in tables[("n", "Person")][1]}
+    assert sorted(people) == ["Bob", "Carl", "Dora"]
+    assert tables[("n", "Admin")][1] == []
+
+
+def test_literal_path_null_set_remove_and_provenance_scrub(spark):
+    """Literal-path semantics: SET to NULL and REMOVE overwrite (key
+    membership is the touched test, not the value), and DETACH DELETE
+    on a multi-pair edge type scrubs NULL-provenance rows by id but
+    spares same-id rows stamped with another label."""
+    from pyspark.sql import functions as F
+
+    from samyama_graph_spark.graph import EdgeMeta
+
+    people = spark.createDataFrame(
+        [(1, "p", 5, "x")], "id long, name string, age long, tag string"
+    )
+    accts = spark.createDataFrame([(3, "a"), (4, "b")], "id long, name string")
+    own = spark.createDataFrame([(1, 3)], "src long, dst long")
+    g = PropertyGraph(
+        spark,
+        {"Person": people, "Account": accts},
+        {"OWN": own},
+        {"OWN": EdgeMeta(pairs=(("Company", "Account"), ("Person", "Account")))},
+    )
+    eng = CypherEngine(g)
+    eng.query("MATCH (p:Person {name:'p'}) SET p.age = null")
+    eng.query("MATCH (p:Person {name:'p'}) REMOVE p.tag")
+    row = eng.query(
+        "MATCH (p:Person) RETURN p.age AS age, p.tag AS tag"
+    ).first()
+    assert (row["age"], row["tag"]) == (None, None)
+    # a Company whose user id collides with Person 1 owns Account 4
+    eng.query("CREATE (c:Company {id: 1})")
+    eng.query(
+        "MATCH (c:Company {id: 1}), (a:Account {name: 'b'}) "
+        "CREATE (c)-[:OWN]->(a)"
+    )
+    stmt = "MATCH (p:Person {name:'p'}) DETACH DELETE p"
+    assert "DELETE: literal, 1 keys" in eng.explain(stmt)
+    eng.query(stmt)
+    own = eng.graph.edges["OWN"]
+    assert sorted(
+        (r["src"], r["dst"], r["__src_label"])
+        for r in own.select("src", "dst", F.col("__src_label")).collect()
+    ) == [(1, 4, "Company")]
+    assert eng.query("MATCH (p:Person) RETURN count(*) AS n").first()["n"] == 0
+
+
+def test_explain_write_plans_without_applying(engine):
+    """EXPLAIN of a write reports its key path and leaves the session
+    graph, id watermark and staged CREATEs untouched."""
+    count = "MATCH (p:Person) RETURN count(p) AS n"
+    plan = "\n".join(
+        r["plan"]
+        for r in engine.query("EXPLAIN CREATE (:Person {name: 'b'})").collect()
+    )
+    assert "== node table Person ==" in plan
+    assert engine.query(count).first()["n"] == 2
+    text = engine.explain("MATCH (p:Person {name:'Bob'}) SET p.age = 99")
+    assert "SET: literal, 1 keys" in text and "Join" not in text
+    assert engine.query(
+        "MATCH (p:Person {name:'Bob'}) RETURN p.age AS a"
+    ).first()["a"] == 25
+
+
+def test_next_free_id_reads_all_labels_in_one_job(spark):
+    from samyama_graph_spark.cypher.writes import next_free_id
+
+    tables = [
+        spark.range(0, 40, numPartitions=3),
+        spark.range(100, 107, numPartitions=2),
+        spark.createDataFrame([], "id long"),
+    ]
+    j0 = _last_job(spark)
+    assert next_free_id(tables) == 107
+    assert _last_job(spark) == j0 + 1
+    assert next_free_id([]) == 1
+    assert next_free_id(tables[2:]) == 1
