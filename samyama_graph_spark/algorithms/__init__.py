@@ -2,11 +2,28 @@
 
 Re-expresses the reference's algorithm library
 (crates/samyama-graph-algorithms: pagerank.rs, community.rs,
-pathfinding.rs, cdlp.rs, lcc.rs, topology.rs) on Spark DataFrames:
-message passing = join edges with vertex state on src, aggregate by
-dst; iteration = a driver loop with localCheckpoint() to truncate
-lineage.  No collect() of vertex state — only scalar convergence
-checks cross the driver boundary.
+pathfinding.rs, cdlp.rs, lcc.rs, topology.rs) on Spark DataFrames.
+
+PageRank, WCC, CDLP, BFS and SSSP (and SCC's reachability labels) are
+vertex programs run by one kernel, ``util.superstep``, modelled on
+Pregelix's superstep (vertex ⨝ messages → group-by combine → update):
+
+- Below a size guard (``util.DRIVER_EDGE_GUARD`` edges, ×8 for BFS and
+  SSSP, read at call time) one bounded Arrow probe collects the edges
+  and a numpy kernel settles the fixpoint on the driver — the
+  reference's own solvers are sequential.
+- Above it, inside one ``iteration_scope`` (AQE off, shuffle partitions
+  sized from the input), the edges are persisted hash-partitioned on
+  ``src``, so each round's join against the sending vertices moves only
+  the vertex side (shuffle-hash, never broadcast).  Each round's output
+  is a lazy ``localCheckpoint`` materialized by the round's single
+  action — a count of active rows, a row count, or PageRank's message
+  sum — so a round costs one Spark job and lineage stays flat.  Loops
+  with an ``active`` flag send only from active vertices and halt when
+  none is left; WCC checks every 2 rounds, SCC every 3.
+
+No vertex state is collected on the distributed path; only scalars
+cross to the driver.
 """
 
 from samyama_graph_spark.algorithms.components import cdlp, wcc

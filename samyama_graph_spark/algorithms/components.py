@@ -12,12 +12,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from samyama_graph_spark.algorithms.util import (
-    DRIVER_EDGE_GUARD,
     checkpoint,
     driver_union_find,
-    edges_pdf_if_small,
     iteration_scope,
-    partitioned,
+    superstep,
     symmetrize,
     vertices_from_edges,
 )
@@ -112,37 +110,53 @@ def wcc_two_phase(
     )
 
 
+def min_label_step(joined: DataFrame, state: DataFrame) -> DataFrame:
+    """Min-label propagation superstep over ``(id, label, chg)``: each
+    vertex takes the least label its changed in-neighbors sent, and
+    stays active (``chg``) only if that lowered its label."""
+    cand = joined.groupBy(F.col("dst").alias("id")).agg(
+        F.min("label").alias("nbr_min")
+    )
+    return state.join(cand.hint("shuffle_hash"), "id", "left").select(
+        "id",
+        F.least("label", "nbr_min").alias("label"),  # least skips nulls
+        F.coalesce(F.col("nbr_min") < F.col("label"), F.lit(False)).alias(
+            "chg"
+        ),
+    )
+
+
+def _wcc_driver(spark, pdf):
+    """Components by union-find over a collected edge list."""
+    import pandas as pd
+
+    comp_map = driver_union_find(
+        zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist())
+    )
+    if not comp_map:
+        return spark.createDataFrame([], "id long, label long")
+    # pandas frame -> Arrow-serialized transfer; a plain list of tuples
+    # pickles row-by-row (measured ~1 s at 165k vertices vs ~0.1 s)
+    out = pd.DataFrame(sorted(comp_map.items()), columns=["id", "label"])
+    return spark.createDataFrame(out, schema="id long, label long")
+
+
 def wcc(
     edges: DataFrame,
     max_iterations: int = 50,
     check_interval: int = 2,
-    driver_guard: int = DRIVER_EDGE_GUARD,
     variant: str = "hash_to_min",
 ) -> DataFrame:
     """Weakly connected components: ``(id, component)`` where component
     is the minimum vertex id in the component.
 
     Min-id propagation over the undirected edge set until fixpoint —
-    O(diameter) rounds of (join on src, min by dst).  Each round is
-    two shuffles on the same key layout; lineage checkpointed per
-    round.  (Hash-to-min converges fine at this diameter; large-star/
-    small-star would cut round count on very-high-diameter graphs.)
-
-    The convergence count runs every ``check_interval`` rounds, not
-    every round: a fixpoint is reached exactly when the LAST round
-    changed nothing, so intermediate rounds need no action — on a
-    scheduler-bound local run (and on a busy cluster) the per-job floor
-    dominates the tiny per-round work, and batching checks cuts the
-    scheduled-job count by the interval factor.
-
-    ``driver_guard > 0`` (the default) enables a guarded driver fast
-    path: if the edge list fits under the guard (one early-out probe,
-    Arrow-batched transfer), components are settled by union-find on
-    the driver — the reference's own WCC is sequential
-    (community.rs:58), and post-filter graphs like dup-pair clusters
-    or Borůvka contraction are bounded by construction.  Components
-    are unique, so both paths return identical output; pass 0 to
-    force the distributed loop.
+    O(diameter) rounds.  The fixpoint test runs every ``check_interval``
+    rounds: the fixpoint is reached exactly when the last round changed
+    nothing, so batching the checks cuts the job count by that factor.
+    Small graphs are settled by union-find on the driver (the
+    reference's own WCC is sequential, community.rs:58); components are
+    unique, so both paths return identical output.
 
     ``variant='two_phase'`` switches to large-star/small-star
     contraction (wcc_two_phase) for very-high-diameter graphs.
@@ -151,84 +165,25 @@ def wcc(
         return wcc_two_phase(edges, max_iterations)
     if variant != "hash_to_min":
         raise ValueError(f"unknown wcc variant {variant!r}")
-    if driver_guard > 0:
-        pdf = edges_pdf_if_small(
-            edges.select("src", "dst"), driver_guard
-        )
-        if pdf is not None:
-            import pandas as pd
-
-            comp_map = driver_union_find(
-                zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist())
-            )
-            spark = edges.sparkSession
-            if not comp_map:
-                return spark.createDataFrame([], "id long, component long")
-            # pandas frame -> Arrow-serialized transfer; a plain list of
-            # tuples pickles row-by-row (measured ~1 s at 165k vertices
-            # vs ~0.1 s through Arrow)
-            out = pd.DataFrame(
-                sorted(comp_map.items()), columns=["id", "component"]
-            )
-            return spark.createDataFrame(
-                out, schema="id long, component long"
-            )
-    with iteration_scope(edges.sparkSession, edges):
-        # distinct=False: min-aggregation is idempotent, so duplicate
-        # (src, dst) rows cannot change the fixpoint — skipping the
-        # dedup saves a full shuffle of the edge set.  Vertices come
-        # from the RAW edge list: symmetrize drops self-loops, and a
-        # vertex whose only edges are self-loops must still appear as
-        # its own singleton component (parity with the driver path).
-        und = partitioned(symmetrize(edges, distinct=False), "src")
-        comp = vertices_from_edges(edges).select(
-            "id", F.col("id").alias("component")
-        )
-        comp = checkpoint(comp, eager=False)
-
-        it = 0
-        while it < max_iterations:
-            steps = min(max(check_interval, 1), max_iterations - it)
-            for _ in range(steps):
-                # candidate = min component among in-neighbors
-                # (undirected); und side is exchange-free (partitioned
-                # on src), comp reshuffles hash(id) each round — only
-                # the vertex frame moves
-                cand = (
-                    und.join(
-                        comp.hint("shuffle_hash"), und["src"] == comp["id"]
-                    )
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(F.min("component").alias("nbr_min"))
-                )
-                # carry the changed flag INSIDE the checkpointed frame
-                # so the convergence check is a count() on it —
-                # materializing the lazy checkpoints and testing the
-                # fixpoint in ONE job per batch
-                new_comp = (
-                    comp.join(cand, "id", "left")
-                    .select(
-                        "id",
-                        F.least(
-                            F.col("component"),
-                            F.coalesce(F.col("nbr_min"), F.col("component")),
-                        ).alias("component"),
-                        F.coalesce(
-                            F.col("nbr_min") < F.col("component"),
-                            F.lit(False),
-                        ).alias("chg"),
-                    )
-                )
-                new_comp = checkpoint(new_comp, eager=False)
-                comp = new_comp.select("id", "component")
-                it += 1
-            changed = new_comp.filter("chg").count()
-            if changed == 0:
-                break
-        # the count above materialized the final round's checkpoint, so
-        # the persisted edge frame is no longer needed
-        und.unpersist()
-    return comp
+    spark = edges.sparkSession
+    # vertices come from the RAW edge list: symmetrize drops self-loops,
+    # and a vertex whose only edges are self-loops is still its own
+    # singleton component.  distinct=False: min is idempotent, so
+    # duplicate edges cannot change the fixpoint.
+    comp = superstep(
+        "wcc",
+        edges.select("src", "dst"),
+        lambda e: vertices_from_edges(edges).select(
+            "id", F.col("id").alias("label"), F.lit(True).alias("chg")
+        ),
+        min_label_step,
+        rounds=max_iterations,
+        driver=lambda pdf: _wcc_driver(spark, pdf),
+        view=lambda e: symmetrize(e, distinct=False),
+        active="chg",
+        halt_every=check_interval,
+    )
+    return comp.select("id", F.col("label").alias("component"))
 
 
 def _cdlp_driver(spark, pdf, iterations):
@@ -276,11 +231,7 @@ def _cdlp_driver(spark, pdf, iterations):
     )
 
 
-def cdlp(
-    edges: DataFrame,
-    iterations: int = 10,
-    driver_guard: int = DRIVER_EDGE_GUARD,
-) -> DataFrame:
+def cdlp(edges: DataFrame, iterations: int = 10) -> DataFrame:
     """Community detection by synchronous label propagation.
 
     LDBC/Graphalytics CDLP rule (reference cdlp.rs:84-120): each round
@@ -288,66 +239,45 @@ def cdlp(
     labels of its neighbor MULTISET — successors plus predecessors,
     no dedup, so a reciprocal edge pair contributes the neighbor's
     label twice, exactly like the reference's successors()/
-    predecessors() double loop.  Returns ``(id, label)``.
-
-    Driver fast path (same guard as BFS/SSSP/PageRank): below
-    ``driver_guard`` edges the propagation settles on the driver with
-    one numpy lexsort per round instead of one shuffle job per round;
-    the distributed loop below is the ≥guard path, same rule.
+    predecessors() double loop.  Returns ``(id, label)``.  Small graphs
+    run the same rule on the driver.
     """
     spark = edges.sparkSession
-    pdf = edges_pdf_if_small(edges.select("src", "dst"), driver_guard)
-    if pdf is not None:
-        return _cdlp_driver(spark, pdf, iterations)
-    with iteration_scope(edges.sparkSession, edges):
-        fwd = edges.select("src", "dst")
-        rev = edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-        nbrs = partitioned(fwd.unionAll(rev), "src")
-        labels = vertices_from_edges(nbrs).select(
-            "id", F.col("id").alias("label")
-        )
-        labels = checkpoint(labels)
 
-        for _ in range(iterations):
-            counts = (
-                nbrs.join(
-                    labels.hint("shuffle_hash"), nbrs["src"] == labels["id"]
-                )
-                .groupBy(F.col("dst").alias("vid"), F.col("label"))
-                .agg(F.count(F.lit(1)).alias("cnt"))
+    def step(joined, labels):
+        counts = joined.groupBy(F.col("dst").alias("vid"), "label").agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+        # smallest among the most-frequent labels == min of (-cnt,
+        # label): a partial-aggregating hash agg instead of a
+        # partition-sort window
+        best = (
+            counts.groupBy(F.col("vid").alias("id"))
+            .agg(
+                F.min(
+                    F.struct(
+                        (-F.col("cnt")).alias("nc"),
+                        F.col("label").alias("l"),
+                    )
+                ).alias("m")
             )
-            # smallest among the most-frequent labels == min of (-cnt,
-            # label): a partial-aggregating hash agg instead of a
-            # partition-sort window (same shuffle key, no sort, and
-            # map-side combine shrinks what's shuffled)
-            best = (
-                counts.groupBy(F.col("vid").alias("id"))
-                .agg(
-                    F.min(
-                        F.struct(
-                            (-F.col("cnt")).alias("nc"),
-                            F.col("label").alias("l"),
-                        )
-                    ).alias("m")
-                )
-                .select("id", F.col("m.l").alias("new_label"))
-            )
-            labels = (
-                labels.join(best.hint("shuffle_hash"), "id", "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("new_label"), F.col("label")).alias(
-                        "label"
-                    ),
-                )
-            )
-            # eager checkpoint EVERY round: exactly one scheduled job
-            # per round, each round computed exactly once.  (The prior
-            # cache-with-no-action scheme let the two consumers of a
-            # round race to compute it lazily — measured 6× slower at
-            # 10 iterations than this, the round-3 wall-time fragility.)
-            labels = checkpoint(labels)
-        nbrs.unpersist()
-    return labels
+            .select("id", F.col("m.l").alias("new_label"))
+        )
+        return labels.join(best.hint("shuffle_hash"), "id", "left").select(
+            "id",
+            F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
+        )
+
+    return superstep(
+        "cdlp",
+        edges.select("src", "dst"),
+        lambda e: vertices_from_edges(e).select(
+            "id", F.col("id").alias("label")
+        ),
+        step,
+        rounds=iterations,
+        driver=lambda pdf: _cdlp_driver(spark, pdf, iterations),
+        view=lambda e: e.unionAll(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ),
+    )

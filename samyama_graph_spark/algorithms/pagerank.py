@@ -1,21 +1,12 @@
-"""PageRank as iterative DataFrame joins.
+"""PageRank as a vertex program.
 
 Semantics follow the reference implementation
 (crates/samyama-graph-algorithms/src/pagerank.rs:35; configurable
 iterations + damping) and LDBC Graphalytics: fixed iteration count,
 uniform init 1/N, dangling-node mass redistributed uniformly each
-iteration.
-
-Scale notes: contributions = edges ⋈ ranks on src (shuffle on src),
-aggregated by dst (shuffle on dst).  Both shuffles reuse the same
-hash partitioning across iterations.  The loop runs EXACTLY ONE job
-per iteration: the per-vertex message frame is a lazy localCheckpoint
-whose materialization is triggered by the same tiny ``first()`` that
-reads off the global message sum, and the dangling mass follows from
-the rank-sum invariant (sum(msg) = S - dangling, S tracked as an O(1)
-driver scalar) — no per-iteration broadcast exchange, no separate
-dangling-aggregate leg, and every iteration's lineage is flat
-(checkpointed deg ⋈ checkpointed contrib).
+iteration.  The dangling mass follows from the rank-sum invariant
+(sum(msg) = S - dangling, S tracked as a driver scalar), so each
+superstep's one action is the message sum.
 """
 
 from __future__ import annotations
@@ -23,13 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from samyama_graph_spark.algorithms import util
 from samyama_graph_spark.algorithms.util import (
-    DRIVER_EDGE_GUARD,
     collect_if_small,
-    edges_pdf_if_small,
-    iteration_scope,
     partitioned,
-    trace_plan,
+    superstep,
     vertices_from_edges,
 )
 
@@ -78,112 +67,81 @@ def pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     vertices: DataFrame | None = None,
-    driver_guard: int = DRIVER_EDGE_GUARD,
 ) -> DataFrame:
     """Returns ``(id, rank)``; ranks sum to ~1.
 
     ``vertices`` may be passed to include isolated vertices; it must be
     a superset of the edge endpoints (the rank-sum bookkeeping assumes
-    every edge source holds a rank).
-
-    Driver fast path (same guard as BFS/SSSP/MST/SCC): below
-    ``driver_guard`` edges the power iteration settles on the driver as
-    an O(E) numpy bincount per round — the reference's own solver is
-    sequential in-memory — instead of scheduling one shuffle job per
-    iteration.  The distributed loop below is the ≥guard path and is
-    semantically identical.
+    every edge source holds a rank).  Small graphs run the numpy power
+    iteration on the driver (the reference's own solver is sequential);
+    both paths return the same ranks.
     """
     spark = edges.sparkSession
-    pdf = edges_pdf_if_small(edges.select("src", "dst"), driver_guard)
-    if pdf is not None:
-        vrows = None
-        if vertices is not None:
-            vrows = collect_if_small(vertices, driver_guard, "id")
-        if vertices is None or vrows is not None:
-            return _pagerank_driver(
-                spark,
-                pdf,
-                iterations,
-                damping,
-                None if vrows is None else [r[0] for r in vrows],
-            )
-    with iteration_scope(edges.sparkSession, edges):
-        # persist the edge list hash-partitioned on src: every
-        # iteration's rank join is then exchange-free on the edge side
-        # (only the small vertex frame moves) and the blocks are read
-        # from executor storage instead of re-running the source scan —
-        # the GraphX-style iterative-workload pattern.  A localCheckpoint
-        # would lose the partitioning (Scan ExistingRDD), forcing a
-        # re-shuffle of the edges EVERY iteration.
-        e = partitioned(edges.select("src", "dst"), "src")
+    deg, n = None, 1
+    s_total = 1.0  # exact rank sum, tracked on the driver
+
+    def driver(pdf):
         if vertices is None:
-            vertices = vertices_from_edges(e)
-        v = vertices.select("id")
+            return _pagerank_driver(spark, pdf, iterations, damping, None)
+        vrows = collect_if_small(vertices, util.DRIVER_EDGE_GUARD, "id")
+        if vrows is None:
+            return None
+        return _pagerank_driver(
+            spark, pdf, iterations, damping, [r[0] for r in vrows]
+        )
+
+    def start(e):
+        nonlocal deg, n
+        v = vertices if vertices is not None else vertices_from_edges(e)
         out_deg = e.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).alias("out_deg")
         )
-        # (id, out_deg) with 0 for sinks; reused every iteration.  n
-        # comes from counting the persisted blocks — no separate
-        # distinct job.
+        # (id, out_deg) with 0 for sinks, joined by every round's update;
+        # counting it materializes it and the edge frame in one job
         deg = partitioned(
-            v.join(out_deg, "id", "left").fillna(0, subset=["out_deg"]), "id"
+            v.select("id")
+            .join(out_deg, "id", "left")
+            .fillna(0, subset=["out_deg"]),
+            "id",
         )
-        n = deg.count()
-        if n == 0:
-            e.unpersist()
-            deg.unpersist()
-            return v.withColumn("rank", F.lit(0.0))
+        n = max(deg.count(), 1)
+        return deg.withColumn("rank", F.lit(1.0 / n))
 
-        ranks = deg.withColumn("rank", F.lit(1.0 / n))
-        s_total = 1.0  # exact rank sum, tracked on the driver
+    def step(joined, ranks):
+        return (
+            joined.select(
+                F.col("dst").alias("id"),
+                (F.col("rank") / F.col("out_deg")).alias("c"),
+            )
+            .groupBy("id")
+            .agg(F.sum("c").alias("msg"))
+        )
 
-        for _ in range(iterations):
-            # shuffle-hash joins: the persisted sides are already laid
-            # out on the join key, so with AQE's re-planning disabled
-            # the whole iteration is ONE scheduled job — join, message
-            # aggregation, checkpoint materialization, and the global
-            # sum readout below
-            contrib = (
-                e.join(ranks.hint("shuffle_hash"), e["src"] == ranks["id"])
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("rank") / F.col("out_deg")).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("msg"))
-                .localCheckpoint(eager=False)
-            )
-            # Each source's rank splits across its out-edges and sums
-            # back, so sum(msg) = S - dangling_mass — the reference's
-            # explicit dangling pass (pagerank.rs:35) folded into the
-            # aggregate that's already being computed.
-            total_msg = float(
-                contrib.agg(F.coalesce(F.sum("msg"), F.lit(0.0))).first()[0]
-            )
-            # superseded contribution checkpoints: iteration i's blocks
-            # are last read by iteration i+1's join; once the Python
-            # reference is dropped the ContextCleaner unpersists them,
-            # so live storage is bounded at ~2 message frames + deg + e
-            # regardless of iteration count.
-            dang = s_total - total_msg
-            base = (1.0 - damping) / n + damping * dang / n
-            ranks = deg.join(
-                contrib.hint("shuffle_hash"), "id", "left"
-            ).select(
-                "id",
-                "out_deg",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("msg"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            s_total = (1.0 - damping) + damping * dang + damping * total_msg
+    def advance(contrib, total_msg):
+        nonlocal s_total
+        # each source's rank splits across its out-edges and sums back,
+        # so sum(msg) = S - dangling mass
+        dang = s_total - total_msg
+        base = (1.0 - damping) / n + damping * dang / n
+        s_total = (1.0 - damping) + damping * dang + damping * total_msg
+        return deg.join(
+            contrib.hint("shuffle_hash"), "id", "left"
+        ).select(
+            "id",
+            "out_deg",
+            (
+                F.lit(base)
+                + F.lit(damping) * F.coalesce(F.col("msg"), F.lit(0.0))
+            ).alias("rank"),
+        )
 
-        # materialize the final ranks inside the loop scope (one job),
-        # then drop the loop-state persists — nothing leaks into a
-        # long-lived session
-        trace_plan("pagerank", ranks)
-        ranks = ranks.select("id", "rank").localCheckpoint()
-        e.unpersist()
-        deg.unpersist()
-    return ranks
+    return superstep(
+        "pagerank",
+        edges.select("src", "dst"),
+        start,
+        step,
+        rounds=iterations,
+        driver=driver,
+        total="msg",
+        advance=advance,
+    ).select("id", "rank")

@@ -5,6 +5,7 @@ Reference semantics: crates/samyama-graph-algorithms/src/pathfinding.rs
 (src/query/executor/operator.rs:7527).  Dijkstra's priority queue is
 inherently sequential; the distributed equivalent is frontier-based
 Bellman-Ford relaxation — same fixpoint, O(shortest-path-hops) rounds.
+BFS is the same relaxation with unit weights.
 """
 
 from __future__ import annotations
@@ -12,28 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from samyama_graph_spark.algorithms.util import (
-    DRIVER_EDGE_GUARD,
-    checkpoint,
-    iteration_scope,
-    partitioned,
-    symmetrize,
-)
-
-
-def _edges_pdf_if_small(df: DataFrame, guard: int):
-    """Shared probe, kept as a module alias so existing plan tests and
-    the guard monkeypatch pattern keep working."""
-    from samyama_graph_spark.algorithms.util import edges_pdf_if_small
-
-    return edges_pdf_if_small(df, guard)
-
+from samyama_graph_spark.algorithms.util import superstep, symmetrize
 
 # BFS/SSSP settle driver-side under an ELEVATED guard: their fast paths
 # are vectorized numpy (int64/float64 arrays, ~16-24 B per edge), not
 # Python-object adjacency, so the driver-memory bound that caps the
-# other algorithms at DRIVER_EDGE_GUARD sits ~8x higher here.  The
-# multiplier composes with the monkeypatchable base guard (0 -> 0).
+# other algorithms at DRIVER_EDGE_GUARD sits ~8x higher here.
 _VEC_GUARD_MULT = 8
 
 
@@ -186,6 +171,62 @@ def _sssp_driver(spark, pdf, source, max_rounds, directed):
     )
 
 
+def _relax(col: str):
+    """Frontier Bellman-Ford superstep over ``(id, <col>, parent,
+    chg)``: each vertex takes the least ``(cost, parent)`` candidate its
+    changed in-neighbors offer and stays active only on a strict
+    improvement; unreached vertices join the state as they are
+    reached."""
+
+    def step(joined: DataFrame, state: DataFrame) -> DataFrame:
+        cand = (
+            joined.select(
+                F.col("dst").alias("id"),
+                # least cost, parent as the deterministic tie-break
+                F.struct(
+                    (F.col(col) + F.col("w")).alias("d"),
+                    F.col("src").alias("p"),
+                ).alias("dp"),
+            )
+            .groupBy("id")
+            .agg(F.min("dp").alias("dp"))
+        )
+        better = F.col("dp").isNotNull() & (
+            F.col(col).isNull() | (F.col("dp.d") < F.col(col))
+        )
+        return state.join(cand, "id", "full_outer").select(
+            "id",
+            F.when(better, F.col("dp.d")).otherwise(F.col(col)).alias(col),
+            F.when(better, F.col("dp.p"))
+            .otherwise(F.col("parent"))
+            .alias("parent"),
+            better.alias("chg"),
+        )
+
+    return step
+
+
+def _shortest_paths(name, edges, view, source, col, rounds, driver, directed):
+    """Run :func:`_relax` from ``source`` over the ``(src, dst, w)``
+    edge ``view``; ``edges`` is what the driver fast path reads."""
+    spark = edges.sparkSession
+    source = int(source)
+    return superstep(
+        name,
+        edges,
+        lambda e: spark.createDataFrame(
+            [(source, 0.0, None, True)],
+            f"id long, {col} double, parent long, chg boolean",
+        ),
+        _relax(col),
+        rounds=rounds,
+        driver=lambda pdf: driver(spark, pdf, source, rounds, directed),
+        guard_mult=_VEC_GUARD_MULT,
+        view=view,
+        active="chg",
+    )
+
+
 def bfs(
     edges: DataFrame,
     source: int,
@@ -196,88 +237,22 @@ def bfs(
     """Unweighted BFS from one source: ``(id, depth)`` for reachable ids
     (plus a deterministic min-``parent`` column when ``parents=True``).
 
-    Frontier expansion: each round joins the frontier against edges on
-    src and anti-joins the visited set — the reference's visited-set
-    BFS (operator.rs:3003) in shuffle form.
-
-    Driver fast path (same guard as MST/SCC/max-flow): below
-    DRIVER_EDGE_GUARD edges the level sets settle on the driver in
-    microseconds — mirroring the reference's own sequential BFS
-    (pathfinding.rs:19) — instead of scheduling one job per level.
-    The distributed loop is the ≥guard path.
+    The distributed path relaxes unit weights: a vertex is improved
+    exactly once, in the round of its first reach, with the least
+    parent among the previous level — the reference's visited-set BFS
+    (operator.rs:3003).  Small graphs settle the same levels on the
+    driver, like the reference's sequential BFS (pathfinding.rs:19).
     """
-    spark = edges.sparkSession
-    pdf = _edges_pdf_if_small(
-        edges.select("src", "dst"), DRIVER_EDGE_GUARD * _VEC_GUARD_MULT
-    )
-    if pdf is not None:
-        out = _bfs_driver(spark, pdf, source, max_depth, directed)
-        return out if parents else out.select("id", "depth")
-    if max_depth <= 2:
-        # bounded shallow BFS: one lazy unrolled plan, zero per-depth
-        # count/checkpoint jobs (AQE skips empty frontiers and picks
-        # broadcast sides at runtime).  Threshold is 2: beyond that the
-        # unrolled plan re-derives the edge union per depth and loses to
-        # the persisted-edge loop (measured 3.9s vs 3.1s at depth 3).
-        e = edges.select("src", "dst") if directed else symmetrize(edges)
-        visited = spark.createDataFrame(
-            [(source, 0, None)], "id long, depth int, parent long"
-        )
-        frontier = visited
-        for d in range(1, max_depth + 1):
-            nxt = (
-                e.join(frontier, e["src"] == frontier["id"])
-                .select(F.col("dst").alias("id"), F.col("src").alias("parent"))
-                .groupBy("id")
-                .agg(F.min("parent").alias("parent"))
-                .join(visited.select("id"), "id", "left_anti")
-                .withColumn("depth", F.lit(d))
-                .select("id", "depth", "parent")
-            )
-            visited = visited.unionByName(nxt)
-            frontier = nxt
-        return visited if parents else visited.select("id", "depth")
-    with iteration_scope(spark, edges):
-        # edges persisted hash(src): the frontier join is exchange-free
-        # on the (large) edge side every round — only the frontier and
-        # visited vertex frames shuffle, and with AQE re-planning off
-        # each round is exactly ONE scheduled job (the count below)
-        e = partitioned(
-            edges.select("src", "dst") if directed else symmetrize(edges),
-            "src",
-        )
-        visited = spark.createDataFrame(
-            [(source, 0, None)], "id long, depth int, parent long"
-        )
-        frontier = visited
 
-        for d in range(1, max_depth + 1):
-            nxt = (
-                e.join(
-                    frontier.hint("shuffle_hash"), e["src"] == frontier["id"]
-                )
-                .select(
-                    F.col("dst").alias("id"), F.col("src").alias("parent")
-                )
-                .groupBy("id")
-                .agg(F.min("parent").alias("parent"))
-                .join(
-                    visited.select("id").hint("shuffle_hash"),
-                    "id",
-                    "left_anti",
-                )
-                .withColumn("depth", F.lit(d))
-                .select("id", "depth", "parent")
-            )
-            # lazy checkpoint: materialized by the count() in one job
-            nxt = checkpoint(nxt, eager=False)
-            frontier_n = nxt.count()
-            if frontier_n == 0:
-                break
-            visited = visited.unionByName(nxt)  # union of checkpoints
-            frontier = nxt
-        e.unpersist()
-    return visited if parents else visited.select("id", "depth")
+    def view(e):
+        e = e if directed else symmetrize(e)
+        return e.withColumn("w", F.lit(1.0))
+
+    out = _shortest_paths(
+        "bfs", edges.select("src", "dst"), view, source, "depth", max_depth,
+        _bfs_driver, directed,
+    ).select("id", F.col("depth").cast("int").alias("depth"), "parent")
+    return out if parents else out.select("id", "depth")
 
 
 def sssp(
@@ -292,94 +267,30 @@ def sssp(
     predecessor on a min-cost path as ``parent`` when ``parents=True``).
 
     Frontier Bellman-Ford: only vertices whose distance improved last
-    round propagate relaxations, so each round shuffles just the
-    active frontier joined to its out-edges.  Converges to Dijkstra's
-    fixpoint for non-negative weights.
-
-    Driver fast path (same guard as MST/SCC/max-flow): below
-    DRIVER_EDGE_GUARD edges the SAME frontier relaxation settles on
-    the driver — the reference's Dijkstra is likewise sequential
-    (pathfinding.rs:91) — instead of one scheduled job per round.
-    Identical results including the (dist, parent) struct-min
-    tie-break and the strict-improvement rule.
+    round propagate relaxations.  Converges to Dijkstra's fixpoint for
+    non-negative weights.  Edges whose weight is null, NaN or infinite
+    are dropped.  Small graphs run the same relaxation on the driver
+    (the reference's Dijkstra is sequential, pathfinding.rs:91), with
+    the same (dist, parent) tie-break and strict-improvement rule.
     """
-    pdf = _edges_pdf_if_small(
-        edges.select(
-            "src", "dst", F.col(weight_col).cast("double").alias("w")
-        ),
-        DRIVER_EDGE_GUARD * _VEC_GUARD_MULT,
+    w = F.col(weight_col).cast("double")
+    # abs(w) < inf is false for NaN and +-inf and null for null
+    weighted = edges.select("src", "dst", w.alias("w")).filter(
+        F.abs("w") < F.lit(float("inf"))
     )
-    if pdf is not None:
-        out = _sssp_driver(
-            edges.sparkSession, pdf, int(source), max_rounds, directed
-        )
-        return out if parents else out.select("id", "dist")
-    e = edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
-    if not directed:
-        e = e.unionByName(
-            edges.select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                F.col(weight_col).cast("double").alias("w"),
-            )
-        )
-    spark = edges.sparkSession
-    with iteration_scope(spark, edges):
-        # edges persisted hash(src): only the (small) frontier and dist
-        # vertex frames shuffle per round; each round is ONE scheduled
-        # job (the improved-count, which also materializes the lazy
-        # checkpoints of this round's improved frame and the previous
-        # round's dist merge)
-        e = partitioned(e, "src")
-        dist = spark.createDataFrame(
-            [(source, 0.0, None)], "id long, dist double, parent long"
-        )
-        frontier = dist
 
-        for _ in range(max_rounds):
-            cand = (
-                e.join(
-                    frontier.hint("shuffle_hash"), e["src"] == frontier["id"]
-                )
-                .select(
-                    F.col("dst").alias("id"),
-                    # min over (cost, parent) pairs: least cost, parent
-                    # as the deterministic tie-break
-                    F.struct(
-                        (F.col("dist") + F.col("w")).alias("d"),
-                        F.col("src").alias("p"),
-                    ).alias("dp"),
-                )
-                .groupBy("id")
-                .agg(F.min("dp").alias("dp"))
-                .select(
-                    "id", F.col("dp.d").alias("d"), F.col("dp.p").alias("p")
-                )
-            )
-            old = dist.select("id", F.col("dist").alias("old"))
-            joined = cand.join(old.hint("shuffle_hash"), "id", "left")
-            improved = checkpoint(
-                joined.filter(
-                    F.col("old").isNull() | (F.col("d") < F.col("old"))
-                ).select(
-                    "id", F.col("d").alias("dist"), F.col("p").alias("parent")
-                ),
-                eager=False,  # materialized by the count() in one job
-            )
-            frontier_n = improved.count()
-            if frontier_n == 0:
-                break
-            dist = checkpoint(
-                dist.join(
-                    improved.select("id").hint("shuffle_hash"),
-                    "id",
-                    "left_anti",
-                ).unionByName(improved),
-                eager=False,  # materialized by the NEXT round's count
-            )
-            frontier = improved
-        e.unpersist()
-    return dist if parents else dist.select("id", "dist")
+    def view(e):
+        if directed:
+            return e
+        return e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
+
+    out = _shortest_paths(
+        "sssp", weighted, view, source, "dist", max_rounds, _sssp_driver,
+        directed,
+    ).select("id", "dist", "parent")
+    return out if parents else out.select("id", "dist")
 
 
 def shortest_path_length(

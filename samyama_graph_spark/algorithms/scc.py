@@ -19,12 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from samyama_graph_spark.algorithms.components import min_label_step
 from samyama_graph_spark.algorithms.util import (
     DRIVER_EDGE_GUARD,
     checkpoint,
     collect_if_small,
     iteration_scope,
-    partitioned,
+    superstep,
     vertices_from_edges,
 )
 
@@ -88,71 +89,42 @@ def _tarjan_components(edge_rows) -> dict:
     return comp
 
 
-def _min_propagate_bidir(
-    e: DataFrame, verts: DataFrame, max_rounds: int, check_interval: int = 3
+def _reach_labels(
+    e: DataFrame, verts: DataFrame, max_rounds: int
 ) -> DataFrame:
-    """Forward AND backward min-label propagation in ONE loop: edges
-    carry a direction tag (0 = original orientation, 1 = reversed) and
-    labels are keyed (dir, id), so each round is a single join +
-    aggregation + fused convergence count instead of two independent
-    loops — half the scheduled jobs, same fixpoint.  The convergence
-    count runs every ``check_interval`` rounds (fixpoint <=> the LAST
-    round changed nothing), batching several propagation rounds into
-    one scheduled job — the job floor, not the per-round work, is the
-    binding constraint for these tiny vertex frames.  Returns
-    ``(id, f, b)``: min id that reaches v / min id v reaches."""
-    both = e.select(F.lit(0).alias("d"), "src", "dst").unionByName(
-        e.select(
-            F.lit(1).alias("d"),
-            F.col("dst").alias("src"),
-            F.col("src").alias("dst"),
+    """``(id, f, b)``: the min id that reaches v / that v reaches.
+
+    The edges and their reverses form one graph whose vertices are
+    ``(direction, id)`` pairs, so forward and backward min-label
+    propagation (WCC's step, directed) share each round's join and
+    action.  The fixpoint test runs every 3 rounds."""
+
+    def vid(d: int, c: str):
+        return F.struct(F.lit(d).alias("d"), F.col(c).alias("v"))
+
+    both = e.select(vid(0, "src").alias("src"), vid(0, "dst").alias("dst"))
+    both = both.unionByName(
+        e.select(vid(1, "dst").alias("src"), vid(1, "src").alias("dst"))
+    )
+
+    def start(_):
+        return verts.select(
+            vid(0, "id").alias("id"), F.col("id").alias("label")
+        ).unionByName(
+            verts.select(vid(1, "id").alias("id"), F.col("id").alias("label"))
+        ).withColumn("chg", F.lit(True))
+
+    labels = superstep(
+        "scc", both, start, min_label_step,
+        rounds=max_rounds, active="chg", halt_every=3,
+    )
+
+    def side(d: int, name: str) -> DataFrame:
+        return labels.filter(F.col("id.d") == d).select(
+            F.col("id.v").alias("id"), F.col("label").alias(name)
         )
-    )
-    both = checkpoint(both, eager=False)
-    labels = checkpoint(
-        verts.select("id", F.col("id").alias("label"))
-        .crossJoin(F.broadcast(
-            verts.sparkSession.range(2).select(F.col("id").alias("d"))
-        ))
-        .select("d", "id", "label"),
-        eager=False,
-    )
-    it = 0
-    while it < max_rounds:
-        steps = min(max(check_interval, 1), max_rounds - it)
-        for _ in range(steps):
-            cand = (
-                both.join(
-                    labels,
-                    (both["src"] == labels["id"]) & (both["d"] == labels["d"]),
-                )
-                .groupBy(both["d"].alias("d"), F.col("dst").alias("id"))
-                .agg(F.min("label").alias("nbr_min"))
-            )
-            # changed flag inside the frame: one job materializes the
-            # lazy checkpoints of the whole batch AND tests the fixpoint
-            new_labels = checkpoint(
-                labels.join(cand, ["d", "id"], "left").select(
-                    "d",
-                    "id",
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("nbr_min"), F.col("label")),
-                    ).alias("label"),
-                    F.coalesce(
-                        F.col("nbr_min") < F.col("label"), F.lit(False)
-                    ).alias("chg"),
-                ),
-                eager=False,
-            )
-            labels = new_labels.select("d", "id", "label")
-            it += 1
-        changed = new_labels.filter("chg").count()
-        if changed == 0:
-            break
-    fwd = labels.filter(F.col("d") == 0).select("id", F.col("label").alias("f"))
-    bwd = labels.filter(F.col("d") == 1).select("id", F.col("label").alias("b"))
-    return fwd.join(bwd, "id")
+
+    return side(0, "f").join(side(1, "b"), "id")
 
 
 def scc(
@@ -206,7 +178,7 @@ def scc(
                     singles if result is None else result.unionByName(singles)
                 )
                 break
-            fb = _min_propagate_bidir(e, remaining, max_inner)
+            fb = _reach_labels(e, remaining, max_inner)
             settled = (
                 fb.filter(F.col("f") == F.col("b"))
                 .select("id", F.col("f").alias("component"))

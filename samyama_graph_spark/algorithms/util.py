@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import contextlib
-from typing import Iterator
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,10 +93,9 @@ def iteration_scope(
         yield
     finally:
         _ACTIVE_SCOPES.pop()
-        # unpersist every frame partitioned() registered in this scope:
-        # loops unpersist explicitly on the success path (idempotent),
-        # this guarantees an exception mid-loop cannot leak executor
-        # storage in a long-lived session
+        # unpersist every frame partitioned() registered in this scope,
+        # on success and on an exception mid-loop alike, so no loop
+        # leaks executor storage into a long-lived session
         for df in frames:
             try:
                 df.unpersist()
@@ -116,8 +115,9 @@ def partitioned(df: DataFrame, *keys: str) -> DataFrame:
     Every per-iteration join against the returned frame is then
     exchange-free on this side (hash(key, shuffle.partitions) satisfies
     the join's distribution requirement), and the blocks are read from
-    executor storage instead of re-running the source scan.  Callers
-    must unpersist after the loop's result is materialized.
+    executor storage instead of re-running the source scan.  The
+    enclosing :func:`iteration_scope` unpersists it on exit, so the
+    loop's result must be materialized inside the scope.
 
     NOTE: ``localCheckpoint`` would NOT work here — it rewraps the data
     as a ``Scan ExistingRDD`` whose partitioning Catalyst forgets, so
@@ -207,6 +207,82 @@ def edges_pdf_if_small(df: DataFrame, guard: int):
     else:
         pdf = df.limit(guard + 1).toPandas()
     return None if len(pdf) > guard else pdf
+
+
+def superstep(
+    name: str,
+    edges: DataFrame,
+    start: Callable[[DataFrame], DataFrame],
+    step: Callable[[DataFrame, DataFrame], DataFrame],
+    *,
+    rounds: int,
+    driver: Callable[..., DataFrame | None] | None = None,
+    guard_mult: int = 1,
+    view: Callable[[DataFrame], DataFrame] | None = None,
+    active: str | None = None,
+    halt_every: int = 1,
+    total: str | None = None,
+    advance: Callable[[DataFrame, float], DataFrame] | None = None,
+) -> DataFrame:
+    """Run one vertex program: a driver fast path, else a superstep loop.
+
+    Driver path: when ``edges`` holds at most ``DRIVER_EDGE_GUARD *
+    guard_mult`` rows (read at call time), ``driver(pdf)`` gets them as
+    a pandas frame and its result is returned; it may decline with None.
+
+    Loop: inside one :func:`iteration_scope`, ``e`` is ``view(edges)``
+    persisted hash(src) and ``state = start(e)`` is the vertex state,
+    keyed by ``id``.  Each round joins ``e`` with the sending vertices
+    (``state``, or its rows flagged ``active``) shuffle-hash on
+    ``e.src = id``, and ``step(joined, state)`` builds the round's
+    output, which is lazily checkpointed and materialized by the round's
+    one action:
+
+    - ``total``: the output's ``sum(total)``, handed to ``advance``;
+    - ``active``: the count of flagged rows, run every ``halt_every``
+      rounds and on the last; the loop halts when it is 0;
+    - otherwise a row count, for a fixed number of ``rounds``.
+
+    The next state is ``advance(out, value)``, or the output itself.
+    A state from ``advance`` is lazy over the loop's persisted frames,
+    so it is checkpointed before they are released.  The last round's
+    plan is recorded in ``PLAN_TRACE[name]``.
+    """
+    guard = DRIVER_EDGE_GUARD * guard_mult
+    if driver is not None and guard > 0:
+        pdf = edges_pdf_if_small(edges, guard)
+        if pdf is not None:
+            out = driver(pdf)
+            if out is not None:
+                return out
+    with iteration_scope(edges.sparkSession, edges):
+        e = partitioned(view(edges) if view else edges, "src")
+        state = start(e)
+        planned = None
+        for r in range(1, rounds + 1):
+            sending = state.filter(active) if active else state
+            joined = e.join(
+                sending.hint("shuffle_hash"), e["src"] == sending["id"]
+            )
+            planned = step(joined, state)
+            out = checkpoint(planned, eager=False)
+            value = None
+            if total:
+                value = float(
+                    out.agg(F.coalesce(F.sum(total), F.lit(0.0))).first()[0]
+                )
+            elif not active:
+                out.count()
+            elif r % max(halt_every, 1) == 0 or r == rounds:
+                value = out.filter(active).count()
+            state = advance(out, value) if advance else out
+            if active and value == 0:
+                break
+        if planned is not None:
+            trace_plan(name, planned)
+        if advance:
+            state = checkpoint(state)
+    return state
 
 
 def cardinality_estimate_trustworthy(df: DataFrame) -> bool:

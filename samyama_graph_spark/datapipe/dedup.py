@@ -1299,7 +1299,6 @@ def _components_from_pairs(
     propagation with convergence checks.  Shared by dup_clusters and
     apply_dedup so the cast/guard contract lives in one place."""
     from samyama_graph_spark.algorithms.components import wcc
-    from samyama_graph_spark.algorithms.util import DRIVER_EDGE_GUARD
 
     # NOT pinned: the wcc guard does consume this frame twice (count
     # probe + bounded collect), but an interleaved A/B measured the
@@ -1311,9 +1310,7 @@ def _components_from_pairs(
         F.col("x").cast("long").alias("src"),
         F.col("y").cast("long").alias("dst"),
     )
-    return wcc(
-        edges, max_iterations=max_iterations, driver_guard=DRIVER_EDGE_GUARD
-    )
+    return wcc(edges, max_iterations=max_iterations)
 
 
 def dup_clusters(

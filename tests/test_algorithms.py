@@ -5,6 +5,8 @@ validation)."""
 
 from __future__ import annotations
 
+import importlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -360,7 +362,13 @@ def test_iteration_scope_cleans_up_on_exception(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def _random_digraph(spark, seed, n=40, m=120, self_loops=True, weights=False):
+def _random_digraph(
+    spark, path, seed, n=40, m=120, self_loops=True, weights=False
+):
+    """Random edge list written to and read back from parquet: scan
+    frames carry real size estimates, so the driver fast paths engage
+    (an in-memory frame is sized at the default estimate and never
+    does)."""
     import random
 
     rng = random.Random(seed)
@@ -373,56 +381,96 @@ def _random_digraph(spark, seed, n=40, m=120, self_loops=True, weights=False):
             rows.append((s, d, float(rng.randrange(1, 50))))
         else:
             rows.append((s, d))
-    if weights:
-        return spark.createDataFrame(rows, "src long, dst long, weight double")
-    return spark.createDataFrame(rows, "src long, dst long")
+    schema = "src long, dst long" + (", weight double" if weights else "")
+    return _parquet(spark, path / f"g{seed}", rows, schema)
 
 
-def test_wcc_driver_and_distributed_paths_agree(spark):
+def _parquet(spark, path, rows, schema):
+    spark.createDataFrame(rows, schema).write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+def _spy(monkeypatch, module, name):
+    """Wrap ``module.name`` and return the list its calls append to."""
+    calls = []
+    real = getattr(module, name)
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(module, name, spy)
+    return calls
+
+
+def _distributed(monkeypatch):
+    """Force the superstep loops past their driver fast paths."""
+    import samyama_graph_spark.algorithms.util as U
+
+    monkeypatch.setattr(U, "DRIVER_EDGE_GUARD", 0)
+
+
+def test_wcc_driver_and_distributed_paths_agree(spark, tmp_path, monkeypatch):
     """The guarded union-find fast path and the distributed min-id loop
     must return IDENTICAL components — including self-loop-only
     vertices and duplicate edges (the review-found divergence class)."""
-    from samyama_graph_spark.algorithms import wcc
+    from samyama_graph_spark.algorithms import components, wcc
 
+    ran = _spy(monkeypatch, components, "driver_union_find")
     for seed in (1, 2, 3):
-        edges = _random_digraph(spark, seed)
-        fast = sorted(map(tuple, wcc(edges, driver_guard=10**6).collect()))
-        dist = sorted(map(tuple, wcc(edges, driver_guard=0).collect()))
+        edges = _random_digraph(spark, tmp_path, seed)
+        ran.clear()
+        fast = sorted(map(tuple, wcc(edges).collect()))
+        assert ran
+        with monkeypatch.context() as m:
+            _distributed(m)
+            dist = sorted(map(tuple, wcc(edges).collect()))
         assert fast == dist, f"seed {seed}"
 
 
-def test_scc_driver_and_distributed_paths_agree(spark):
+def test_scc_driver_and_distributed_paths_agree(spark, tmp_path, monkeypatch):
     from samyama_graph_spark.algorithms.scc import scc
 
+    S = importlib.import_module("samyama_graph_spark.algorithms.scc")
+
+    ran = _spy(monkeypatch, S, "_tarjan_components")
     for seed in (4, 5):
-        edges = _random_digraph(spark, seed)
+        edges = _random_digraph(spark, tmp_path, seed)
+        ran.clear()
         fast = sorted(map(tuple, scc(edges).collect()))
+        assert ran
         dist = sorted(map(tuple, scc(edges, driver_guard=0).collect()))
         assert fast == dist, f"seed {seed}"
 
 
-def test_mst_driver_and_distributed_paths_agree(spark):
+def test_mst_driver_and_distributed_paths_agree(spark, tmp_path, monkeypatch):
     """Borůvka's per-component min-(weight,src,dst) pick rule is shared
     by both paths, so the chosen forests must be identical even under
     duplicate weights."""
     from samyama_graph_spark.algorithms.mst import mst
 
+    M = importlib.import_module("samyama_graph_spark.algorithms.mst")
+
+    ran = _spy(monkeypatch, M, "_boruvka_driver")
     for seed in (6, 7):
-        edges = _random_digraph(spark, seed, weights=True)
+        edges = _random_digraph(spark, tmp_path, seed, weights=True)
+        ran.clear()
         fast = sorted(map(tuple, mst(edges).collect()))
+        assert ran
         dist = sorted(map(tuple, mst(edges, driver_guard=0).collect()))
         assert fast == dist, f"seed {seed}"
 
 
-def test_bfs_matches_python_reference(spark):
+def test_bfs_matches_python_reference(spark, tmp_path, monkeypatch):
     """Distributed frontier BFS == driver-side BFS on random digraphs
     (depths AND deterministic min-parents)."""
     import collections
 
     from samyama_graph_spark.algorithms import bfs
 
+    _distributed(monkeypatch)
     for seed in (11, 12):
-        edges = _random_digraph(spark, seed, n=60, m=200)
+        edges = _random_digraph(spark, tmp_path, seed, n=60, m=200)
         rows = [(r["src"], r["dst"]) for r in edges.collect()]
         adj = collections.defaultdict(list)
         for s, d in rows:
@@ -451,15 +499,18 @@ def test_bfs_matches_python_reference(spark):
         assert got == want, f"seed {seed}"
 
 
-def test_sssp_matches_python_dijkstra(spark):
+def test_sssp_matches_python_dijkstra(spark, tmp_path, monkeypatch):
     """Distributed frontier Bellman-Ford == driver Dijkstra on random
     non-negative integer weights (sums exact in doubles)."""
     import heapq
 
     from samyama_graph_spark.algorithms import sssp
 
+    _distributed(monkeypatch)
     for seed in (13, 14):
-        edges = _random_digraph(spark, seed, n=50, m=180, weights=True)
+        edges = _random_digraph(
+            spark, tmp_path, seed, n=50, m=180, weights=True
+        )
         rows = [(r["src"], r["dst"], r["weight"]) for r in edges.collect()]
         adj = {}
         for s, d, w in rows:
@@ -482,45 +533,110 @@ def test_sssp_matches_python_dijkstra(spark):
         assert got == dist, f"seed {seed}"
 
 
-def test_bfs_sssp_driver_and_distributed_paths_agree(spark, monkeypatch):
+def test_bfs_sssp_driver_and_distributed_paths_agree(
+    spark, tmp_path, monkeypatch
+):
     """bfs/sssp pick a driver fast path under DRIVER_EDGE_GUARD (the
     reference's own pathfinding solvers are sequential,
     pathfinding.rs:19/:91); forcing the guard to 0 must route the SAME
     inputs through the distributed frontier loops with identical
-    results — depths, dists, and deterministic parents."""
+    results — depths, dists, and deterministic parents.  Non-finite
+    weights are dropped on both paths."""
     import samyama_graph_spark.algorithms.paths as P
 
-    edges = _random_digraph(spark, 21, n=60, m=200, weights=True)
-    fast_b = {
-        r["id"]: (r["depth"], r["parent"])
-        for r in P.bfs(edges, 0, max_depth=30, parents=True).collect()
-    }
-    fast_s = {
-        r["id"]: (r["dist"], r["parent"])
-        for r in P.sssp(edges, 0, max_rounds=60, parents=True).collect()
-    }
-    monkeypatch.setattr(P, "DRIVER_EDGE_GUARD", 0)
-    slow_b = {
-        r["id"]: (r["depth"], r["parent"])
-        for r in P.bfs(edges, 0, max_depth=30, parents=True).collect()
-    }
-    slow_s = {
-        r["id"]: (r["dist"], r["parent"])
-        for r in P.sssp(edges, 0, max_rounds=60, parents=True).collect()
-    }
-    assert fast_b == slow_b and len(fast_b) > 10
-    assert fast_s == slow_s and len(fast_s) > 10
+    ran_b = _spy(monkeypatch, P, "_bfs_driver")
+    ran_s = _spy(monkeypatch, P, "_sssp_driver")
+    nan_edges = _parquet(
+        spark, tmp_path / "nan", [(0, 1, float("nan")), (1, 2, 1.0)],
+        "src long, dst long, weight double",
+    )
+    for edges, size in (
+        (_random_digraph(spark, tmp_path, 21, n=60, m=200, weights=True), 10),
+        (nan_edges, 0),
+    ):
+        ran_b.clear()
+        ran_s.clear()
+        fast_b = {
+            r["id"]: (r["depth"], r["parent"])
+            for r in P.bfs(edges, 0, max_depth=30, parents=True).collect()
+        }
+        fast_s = {
+            r["id"]: (r["dist"], r["parent"])
+            for r in P.sssp(edges, 0, max_rounds=60, parents=True).collect()
+        }
+        assert ran_b and ran_s
+        with monkeypatch.context() as m:
+            _distributed(m)
+            slow_b = {
+                r["id"]: (r["depth"], r["parent"])
+                for r in P.bfs(edges, 0, max_depth=30, parents=True).collect()
+            }
+            slow_s = {
+                r["id"]: (r["dist"], r["parent"])
+                for r in P.sssp(
+                    edges, 0, max_rounds=60, parents=True
+                ).collect()
+            }
+        assert fast_b == slow_b and len(fast_b) > size
+        assert fast_s == slow_s and len(fast_s) > size
+    assert fast_s == {0: (0.0, None)}
 
 
-def test_bfs_sssp_driver_ids_above_2_53(spark):
+def test_superstep_job_budget(spark, monkeypatch):
+    """Spark jobs per call on the distributed path — launched inside the
+    call, then by collecting its result — stay at or under the counts
+    measured before the loops shared one superstep kernel.  The edges
+    are an in-memory frame, whose default size estimate keeps every
+    join a shuffle join, so the counts do not hinge on broadcast
+    choices."""
+    import random
+
+    from samyama_graph_spark import algorithms as A
+
+    rng = random.Random(21)
+    rows = []
+    for _ in range(200):
+        s, d = rng.randrange(60), rng.randrange(60)
+        rows.append((s, d, float(rng.randrange(1, 50))))
+    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
+    _distributed(monkeypatch)
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    budget = [
+        ("pagerank", lambda: A.pagerank(edges, iterations=4), 6, 1),
+        ("wcc", lambda: A.wcc(edges), 3, 1),
+        ("cdlp", lambda: A.cdlp(edges, iterations=3), 4, 1),
+        ("bfs", lambda: A.bfs(edges, 0, max_depth=30), 7, 1),
+        ("sssp", lambda: A.sssp(edges, 0, max_rounds=60), 9, 1),
+        ("scc", lambda: A.scc(edges, driver_guard=0), 17, 1),
+    ]
+    for name, call, fn_jobs, collect_jobs in budget:
+        a = last_job()
+        df = call()
+        b = last_job()
+        df.collect()
+        c = last_job()
+        assert b - a <= fn_jobs and c - b <= collect_jobs, (name, b - a, c - b)
+    a = last_job()
+    A.bfs(edges, 0, max_depth=2).collect()
+    assert last_job() - a <= 3
+
+
+def test_bfs_sssp_driver_ids_above_2_53(spark, tmp_path, monkeypatch):
     """Vertex ids above 2^53 survive the driver fast path intact:
     parents ride as int64 with a -1 sentinel, never through float64
     (r8 advice — NaN-in-double silently corrupted huge ids)."""
     import samyama_graph_spark.algorithms.paths as P
 
+    ran_b = _spy(monkeypatch, P, "_bfs_driver")
+    ran_s = _spy(monkeypatch, P, "_sssp_driver")
     big = 2**60 + 12345  # not representable in float64
-    edges = spark.createDataFrame(
-        [(1, big, 1.0), (big, 7, 2.0)], "src long, dst long, weight double"
+    edges = _parquet(
+        spark, tmp_path / "big", [(1, big, 1.0), (big, 7, 2.0)],
+        "src long, dst long, weight double",
     )
     b = {r["id"]: r["parent"] for r in
          P.bfs(edges, 1, max_depth=5, parents=True).collect()}
@@ -528,72 +644,92 @@ def test_bfs_sssp_driver_ids_above_2_53(spark):
     s = {r["id"]: (r["dist"], r["parent"]) for r in
          P.sssp(edges, 1, max_rounds=5, parents=True).collect()}
     assert s == {1: (0.0, None), big: (1.0, 1), 7: (3.0, big)}
+    assert ran_b and ran_s
 
 
-def test_pagerank_driver_and_distributed_paths_agree(spark):
+def test_pagerank_driver_and_distributed_paths_agree(
+    spark, tmp_path, monkeypatch
+):
     """The numpy power-iteration fast path under DRIVER_EDGE_GUARD must
     match the distributed one-job-per-iteration loop to well past the
     gate's 6-decimal rounding — including dangling-mass handling
     (sinks) and duplicate/parallel edges."""
     from samyama_graph_spark.algorithms import pagerank
 
+    PR = importlib.import_module("samyama_graph_spark.algorithms.pagerank")
+
+    ran = _spy(monkeypatch, PR, "_pagerank_driver")
     for seed in (5, 6):
-        edges = _random_digraph(spark, seed, n=50, m=160)
+        edges = _random_digraph(spark, tmp_path, seed, n=50, m=160)
+        ran.clear()
         fast = {
             r["id"]: r["rank"]
             for r in pagerank(edges, iterations=4).collect()
         }
-        slow = {
-            r["id"]: r["rank"]
-            for r in pagerank(edges, iterations=4, driver_guard=0).collect()
-        }
+        assert ran
+        with monkeypatch.context() as m:
+            _distributed(m)
+            slow = {
+                r["id"]: r["rank"]
+                for r in pagerank(edges, iterations=4).collect()
+            }
         assert fast.keys() == slow.keys() and len(fast) > 20
         for k in fast:
             assert abs(fast[k] - slow[k]) < 1e-12, (seed, k)
         assert abs(sum(fast.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_driver_vertices_superset(spark):
+def test_pagerank_driver_vertices_superset(spark, tmp_path, monkeypatch):
     """Isolated vertices passed via ``vertices`` get base-rank rows on
     the fast path, same as the distributed loop."""
     from samyama_graph_spark.algorithms import pagerank
 
-    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
-    verts = spark.createDataFrame([(1,), (2,), (9,)], "id long")
+    PR = importlib.import_module("samyama_graph_spark.algorithms.pagerank")
+
+    ran = _spy(monkeypatch, PR, "_pagerank_driver")
+    edges = _parquet(
+        spark, tmp_path / "e", [(1, 2), (2, 1)], "src long, dst long"
+    )
+    verts = _parquet(spark, tmp_path / "v", [(1,), (2,), (9,)], "id long")
     fast = {
         r["id"]: r["rank"]
         for r in pagerank(edges, iterations=3, vertices=verts).collect()
     }
-    slow = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            edges, iterations=3, vertices=verts, driver_guard=0
-        ).collect()
-    }
+    assert ran
+    with monkeypatch.context() as m:
+        _distributed(m)
+        slow = {
+            r["id"]: r["rank"]
+            for r in pagerank(edges, iterations=3, vertices=verts).collect()
+        }
     assert set(fast) == {1, 2, 9}
     for k in fast:
         assert abs(fast[k] - slow[k]) < 1e-12
 
 
-def test_cdlp_driver_and_distributed_paths_agree(spark):
+def test_cdlp_driver_and_distributed_paths_agree(spark, tmp_path, monkeypatch):
     """The numpy lexsort fast path must reproduce the distributed CDLP
     labels exactly — same smallest-among-most-frequent rule over the
     in+out neighbor multiset, reciprocal edges counted twice."""
+    import samyama_graph_spark.algorithms.components as C
     from samyama_graph_spark.algorithms import cdlp
 
+    ran = _spy(monkeypatch, C, "_cdlp_driver")
     for seed in (7, 8):
-        edges = _random_digraph(spark, seed, n=50, m=160)
+        edges = _random_digraph(spark, tmp_path, seed, n=50, m=160)
         for iters in (1, 3):
+            ran.clear()
             fast = {
                 r["id"]: r["label"]
                 for r in cdlp(edges, iterations=iters).collect()
             }
-            slow = {
-                r["id"]: r["label"]
-                for r in cdlp(
-                    edges, iterations=iters, driver_guard=0
-                ).collect()
-            }
+            assert ran
+            with monkeypatch.context() as m:
+                _distributed(m)
+                slow = {
+                    r["id"]: r["label"]
+                    for r in cdlp(edges, iterations=iters).collect()
+                }
             assert fast == slow and len(fast) > 20, (seed, iters)
 
 
@@ -631,18 +767,24 @@ def test_wcc_two_phase_parity_and_rounds(spark):
     assert stats["rounds"] <= 25, stats
 
 
-def test_triangle_stats_driver_and_distributed_agree(spark):
+def test_triangle_stats_driver_and_distributed_agree(
+    spark, tmp_path, monkeypatch
+):
     """The vectorized wedge-closing fast path must match the
     distributed closure join — degrees and per-vertex triangle counts
     — on random graphs with duplicate/reversed edges and self-loops."""
+    from samyama_graph_spark.algorithms import topology
     from samyama_graph_spark.algorithms.topology import triangle_stats
 
+    ran = _spy(monkeypatch, topology, "_triangle_stats_driver")
     for seed in (3, 4):
-        edges = _random_digraph(spark, seed, n=40, m=200)
+        edges = _random_digraph(spark, tmp_path, seed, n=40, m=200)
+        ran.clear()
         fast = {
             r["id"]: (r["deg"], r["triangles"])
             for r in triangle_stats(edges).collect()
         }
+        assert ran
         slow = {
             r["id"]: (r["deg"], r["triangles"])
             for r in triangle_stats(edges, driver_guard=0).collect()

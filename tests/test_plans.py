@@ -79,12 +79,16 @@ def test_gate_window_fully_oracled():
     assert all(REGISTRY[n].oracle for n in GATE_ORDER)
 
 
-def test_pagerank_iteration_has_no_broadcast_exchange(spark):
+def test_pagerank_iteration_has_no_broadcast_exchange(spark, monkeypatch):
     """The PageRank loop must not schedule a broadcast exchange per
     iteration (the r2 bottleneck): rank updates join shuffle-hash, and
     the dangling mass comes from the message aggregate, not a
     broadcast-joined 1-row frame."""
+    import samyama_graph_spark.algorithms.util as U
     from samyama_graph_spark.algorithms import pagerank
+
+    monkeypatch.setattr(U, "DRIVER_EDGE_GUARD", 0)
+    monkeypatch.delitem(U.PLAN_TRACE, "pagerank", raising=False)
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
@@ -795,7 +799,7 @@ def test_collect_if_small_count_probe_no_row_ship(spark, monkeypatch):
 def test_edges_pdf_count_probe_no_row_ship(spark, monkeypatch):
     from pyspark.sql import DataFrame
 
-    from samyama_graph_spark.algorithms.paths import _edges_pdf_if_small
+    from samyama_graph_spark.algorithms.util import edges_pdf_if_small
 
     left = spark.range(2000).withColumnRenamed("id", "src")
     right = spark.range(2000).withColumnRenamed("id", "dst")
@@ -806,10 +810,10 @@ def test_edges_pdf_count_probe_no_row_ship(spark, monkeypatch):
             AssertionError("over-guard frame must not ship rows")
         ),
     )
-    assert _edges_pdf_if_small(big, 10_000) is None
+    assert edges_pdf_if_small(big, 10_000) is None
     monkeypatch.undo()
     small = big.limit(100)
-    pdf = _edges_pdf_if_small(small, 10_000)
+    pdf = edges_pdf_if_small(small, 10_000)
     assert pdf is not None and len(pdf) == 100
 
 
