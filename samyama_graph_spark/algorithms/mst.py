@@ -187,7 +187,6 @@ def mst(
                 ).select("id", F.coalesce("new_comp", "comp").alias("comp")),
                 eager=False,
             )
-        e.unpersist()
     if chosen is None:
         return spark.createDataFrame([], "src long, dst long, weight double")
     return chosen

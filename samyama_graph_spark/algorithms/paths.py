@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.algorithms.util import superstep, symmetrize
 
 # BFS/SSSP settle driver-side under an ELEVATED guard: their fast paths
@@ -333,8 +334,8 @@ def shortest_path_with_cost(
             edges, source, weight_col,
             max_rounds=max_rounds, directed=directed, parents=True,
         ).select("id", F.col("dist").alias("cost"), "parent")
-    state = state.cache()
-    try:
+    with lifecycle.scope(state.sparkSession):
+        state = lifecycle.pin(state, eager=False)
         row = state.filter(F.col("id") == target).first()
         if row is None:
             return None
@@ -348,5 +349,3 @@ def shortest_path_with_cost(
             nxt = state.filter(F.col("id") == cur).first()
             cur = None if nxt is None else nxt["parent"]
         return path[::-1], cost
-    finally:
-        state.unpersist()

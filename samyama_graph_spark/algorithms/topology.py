@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.algorithms.util import (
     DRIVER_EDGE_GUARD,
     edges_pdf_if_small,
@@ -40,56 +41,13 @@ from samyama_graph_spark.algorithms.util import (
 # beyond it the closure falls back to the wedge shuffle join
 _CLOSING_BCAST_GUARD = 16_000_000
 
-# pinned frames, keyed per SparkSession (weakly — a stopped session's
-# entries vanish with it) and per scope: "closure" for pins created
-# inside closure_edges, "outer" for entry-point pins (lcc_directed's
-# ecnt/tris).  Keying per session keeps two concurrent sessions from
-# releasing each other's pins mid-plan; the scope split lets
-# closure_edges clean up after ITSELF (it is documented-public, so a
-# direct caller must not accumulate cache blocks) without dropping an
-# enclosing entry point's still-live pins.
-import threading as _threading
-import weakref as _weakref
-
-_PINS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-_PINS_LOCK = _threading.Lock()
-
-
-def _release_pins(session, scope: str | None = None) -> None:
-    """Unpersist pins from PREVIOUS invocations — called at the START
-    of each entry point, BEFORE any new persist (the plan-identity
-    lesson from dedup._pin_frame: persisting a plan-identical frame
-    no-ops onto the existing cache entry, so unpersisting the old
-    frame afterwards would drop the entry the new frame relies on).
-    Re-running an operator therefore re-materializes honestly instead
-    of silently serving the previous run's cache — and a long session
-    never accumulates cache blocks.  ``scope=None`` releases every
-    scope for the session (entry points); a named scope releases only
-    its own pins (closure_edges cleaning up after itself).
-
-    The unpersist MUST block: the caller immediately re-``cache()``s
-    plan-identical frames, and Spark's CacheManager keys entries on
-    the canonicalized plan — an async unpersist can land AFTER the new
-    ``cache()`` no-ops onto the still-registered old entry, dropping
-    the entry the new pin relies on (the new frame is then silently
-    uncached and every multi-leg consumer recomputes it)."""
-    with _PINS_LOCK:
-        scopes = _PINS.get(session)
-        if not scopes:
-            return
-        names = list(scopes) if scope is None else [scope]
-        drop = [f for n in names for f in scopes.pop(n, [])]
-    for f in drop:
-        f.unpersist(blocking=True)
-
-
-def _pinned(df: DataFrame, scope: str) -> DataFrame:
-    """cache() + eager materialization so later multi-leg jobs reuse it."""
-    df = df.cache()
-    df.count()
-    with _PINS_LOCK:
-        _PINS.setdefault(df.sparkSession, {}).setdefault(scope, []).append(df)
-    return df
+# pin owners: _CLOSURE for pins created inside closure_edges, _OUTER
+# for entry-point pins (lcc_directed's ecnt/tris).  Entry points release
+# both at their start; the split lets closure_edges release its own
+# previous pins (it is documented-public, so a direct caller must not
+# accumulate cache blocks) without dropping an enclosing entry point's
+# live pins.
+_CLOSURE, _OUTER = "topology.closure", "topology.outer"
 
 
 def closure_edges(
@@ -122,23 +80,19 @@ def closure_edges(
     ``canonical=True`` asserts the input is already a distinct
     src<dst edge set, skipping the canonicalization shuffle.
     """
-    # release THIS function's pins from any previous call (a direct
-    # caller of the documented-public closure_edges must not
-    # accumulate cache blocks); enclosing entry points' "outer" pins
-    # stay live
-    _release_pins(edges.sparkSession, "closure")
+    lifecycle.release(edges.sparkSession, _CLOSURE)
     if canonical:
         pairs = edges.select("src", "dst")
     else:
         pairs = symmetrize(edges).filter(F.col("src") < F.col("dst"))
-    pairs = _pinned(pairs, "closure")
+    pairs = lifecycle.pin(pairs, _CLOSURE)
     # undirected degree = appearances on either side of canonical pairs
-    deg = _pinned(
+    deg = lifecycle.pin(
         pairs.select(F.col("src").alias("id"))
         .unionAll(pairs.select(F.col("dst").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("deg")),
-        "closure",
+        _CLOSURE,
     )
     # orientation is a map-side flip against the (vertex-sized) degree
     # frame — no edge shuffle.  The head's degree rides along: wedge
@@ -149,7 +103,7 @@ def closure_edges(
     fwd = (F.col("sdeg") < F.col("ddeg")) | (
         (F.col("sdeg") == F.col("ddeg")) & (F.col("src") < F.col("dst"))
     )
-    oriented = _pinned(
+    oriented = lifecycle.pin(
         pairs.join(sd, "src")
         .join(dd, "dst")
         .select(
@@ -157,7 +111,7 @@ def closure_edges(
             F.when(fwd, F.col("dst")).otherwise(F.col("src")).alias("dst"),
             F.when(fwd, F.col("ddeg")).otherwise(F.col("sdeg")).alias("hdeg"),
         ),
-        "closure",
+        _CLOSURE,
     )
     e1 = oriented.select(
         F.col("src").alias("a"), F.col("dst").alias("b"), F.col("hdeg").alias("bd")
@@ -303,7 +257,8 @@ def triangle_stats(
     ``driver_guard`` pairs the degree-oriented wedge closing runs as
     vectorized numpy on the driver; the distributed closure join is
     the ≥guard path, same orientation and counts."""
-    _release_pins(edges.sparkSession)
+    lifecycle.release(edges.sparkSession, _CLOSURE)
+    lifecycle.release(edges.sparkSession, _OUTER)
     pdf = edges_pdf_if_small(edges.select("src", "dst"), driver_guard)
     if pdf is not None:
         return _triangle_stats_driver(edges.sparkSession, pdf)
@@ -382,24 +337,25 @@ def lcc_directed(edges: DataFrame) -> DataFrame:
     no per-node neighbor array ever materializes, which is what makes
     the plan survive hub vertices at 100 TB.
     """
-    _release_pins(edges.sparkSession)
+    lifecycle.release(edges.sparkSession, _CLOSURE)
+    lifecycle.release(edges.sparkSession, _OUTER)
     dedges = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     # directed multiplicity per undirected pair (1 or 2)
-    ecnt = _pinned(
+    ecnt = lifecycle.pin(
         dedges.distinct()
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("ec")),
-        "outer",
+        _OUTER,
     )
     deg, tris = closure_edges(
         ecnt.select(F.col("a").alias("src"), F.col("b").alias("dst")),
         canonical=True,
     )
     # pinned: the three role projections below each consume tris
-    tris = _pinned(tris, "outer")
+    tris = lifecycle.pin(tris, _OUTER)
     legs = (
         tris.select(
             F.col("a").alias("id"), F.col("b").alias("p"), F.col("c").alias("q")

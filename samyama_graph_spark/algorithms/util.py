@@ -8,6 +8,8 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
+
 # Physical-plan strings of the last iteration of each algorithm's loop,
 # keyed by algorithm name.  The loops materialize their results
 # internally (the returned frame is a checkpoint scan), so plan-shape
@@ -65,7 +67,8 @@ def iteration_scope(
     spark: SparkSession, partitions: int | DataFrame | None = None
 ) -> Iterator[None]:
     """Disable AQE (and optionally pin shuffle partitions) for the
-    duration of a fixed-point loop.
+    duration of a fixed-point loop: the loop's :func:`lifecycle.scope`,
+    which also releases every :func:`partitioned` frame on exit.
 
     Inside an iterative algorithm the physical layout is pinned by hand
     (partitioned persisted frames + shuffle_hash hints), so adaptive
@@ -77,57 +80,32 @@ def iteration_scope(
     co-partitioning is never broken by a mismatched groupBy.  Scope is
     the session: callers run loops serially.
     """
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    frames: list[DataFrame] = []
-    _ACTIVE_SCOPES.append(frames)
-    try:
-        # everything after reading the old confs sits inside the
-        # try/finally: a failure in plan compilation (loop_partitions)
-        # or conf.set must not leak AQE-off into the resident session
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    with lifecycle.scope(spark, {"spark.sql.adaptive.enabled": "false"}):
         if isinstance(partitions, DataFrame):
             partitions = loop_partitions(partitions)
-        if partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-        yield
-    finally:
-        _ACTIVE_SCOPES.pop()
-        # unpersist every frame partitioned() registered in this scope,
-        # on success and on an exception mid-loop alike, so no loop
-        # leaks executor storage into a long-lived session
-        for df in frames:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        spark.conf.set("spark.sql.adaptive.enabled", old)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-
-# Stack of per-scope persisted-frame registries (innermost last).
-_ACTIVE_SCOPES: list[list[DataFrame]] = []
+        with lifecycle.scope(
+            spark, {"spark.sql.shuffle.partitions": partitions}
+        ):
+            yield
 
 
 def partitioned(df: DataFrame, *keys: str) -> DataFrame:
-    """Hash-repartition on the loop join key and persist.
+    """Hash-repartition on the loop join key and pin it to the
+    enclosing :func:`iteration_scope`.
 
     Every per-iteration join against the returned frame is then
     exchange-free on this side (hash(key, shuffle.partitions) satisfies
     the join's distribution requirement), and the blocks are read from
-    executor storage instead of re-running the source scan.  The
-    enclosing :func:`iteration_scope` unpersists it on exit, so the
-    loop's result must be materialized inside the scope.
+    executor storage instead of re-running the source scan.  The scope
+    releases it on exit, so the loop's result must be materialized
+    inside the scope.  The pin is lazy: the first round's job fills it.
 
     NOTE: ``localCheckpoint`` would NOT work here — it rewraps the data
     as a ``Scan ExistingRDD`` whose partitioning Catalyst forgets, so
     the co-location is silently lost and every iteration re-shuffles.
     """
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    out = df.repartition(n, *keys).persist()
-    if _ACTIVE_SCOPES:
-        _ACTIVE_SCOPES[-1].append(out)
-    return out
+    return lifecycle.pin(df.repartition(n, *keys), eager=False)
 
 
 def collect_if_small(

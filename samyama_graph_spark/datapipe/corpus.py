@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.datapipe.common import tokens, word_shingles
 
 
@@ -344,52 +345,42 @@ def unigram_logprob(
         F.col(id_col).alias("id"),
         F.explode(tokens(F.col(text_col))).alias("term"),
     ).filter(F.col("term") != "")
-    # vocabulary histogram persisted for the pass: the total job below
+    # vocabulary histogram pinned for the pass: the total job below
     # materializes it (ONE corpus explode), and the score join then
-    # reads the cached vocab — without the persist the corpus explode
+    # reads the cached vocab — without the pin the corpus explode
     # re-ran inside every downstream action (total, percentile
     # boundaries, final bucketing: ~5 corpus passes; now 2).  The
     # cached vocab's known (small) size also lets the planner broadcast
-    # it, so the token stream is never shuffled for the join.
-    # LIFECYCLE (r12): the histogram is released as soon as the scored
-    # frame materializes (nothing reads it afterwards); the scored
-    # frame is an eager localCheckpoint (below) — a fresh RDD per
-    # invocation, so a re-run recomputes honestly instead of reading
-    # the previous invocation's cache (Spark's CacheManager keys on
-    # the canonicalized plan, so an unreleased persist turns every
-    # plan-identical re-run into a cache read), and a long session
-    # never accumulates blocks.
-    counts = (
-        tok.groupBy("term").agg(F.count(F.lit(1)).alias("cnt")).persist()
-    )
-    total = counts.agg(F.sum("cnt")).first()[0]
-    logp = counts.select(
-        "term",
-        F.log(F.col("cnt") / F.lit(float(total))).alias("logp"),
-    )
-    # per-doc frame (tiny next to the corpus) materialized with an
-    # EAGER localCheckpoint: callers that act twice — quantile
-    # boundaries then bucket projection — reuse the scored rows
-    # instead of re-running the explode + join, and the lineage
-    # truncation means both downstream plans analyze against a tiny
-    # LogicalRDD instead of the full explode+join subplan (r12
-    # interleaved A/B vs the pin rotation: 1.27 s vs 2.08 s median
-    # for quality_quantile_buckets).  A NEW RDD per invocation —
-    # re-runs recompute honestly, nothing keyed on the canonicalized
-    # plan survives the call.
-    scored = (
-        tok.join(logp, "term")
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.avg("logp"), 6).alias("avg_logprob"),
+    # it, so the token stream is never shuffled for the join.  The
+    # scope releases it once the scored frame has materialized.
+    with lifecycle.scope(df.sparkSession):
+        counts = lifecycle.pin(
+            tok.groupBy("term").agg(F.count(F.lit(1)).alias("cnt")),
+            eager=False,
         )
-        .localCheckpoint(eager=True)
-    )
-    # blocking: a re-run persists a plan-identical histogram, and an
-    # async release could drop the entry the new persist attached to
-    counts.unpersist(blocking=True)
-    return scored
+        total = counts.agg(F.sum("cnt")).first()[0]
+        logp = counts.select(
+            "term",
+            F.log(F.col("cnt") / F.lit(float(total))).alias("logp"),
+        )
+        # per-doc frame (tiny next to the corpus) materialized with an
+        # EAGER localCheckpoint: callers that act twice — quantile
+        # boundaries then bucket projection — reuse the scored rows
+        # instead of re-running the explode + join, and the lineage
+        # truncation means both downstream plans analyze against a tiny
+        # LogicalRDD instead of the full explode+join subplan (r12
+        # interleaved A/B vs a pin: 1.27 s vs 2.08 s median for
+        # quality_quantile_buckets).  A NEW RDD per invocation, so a
+        # re-run recomputes instead of reading this call's blocks.
+        return (
+            tok.join(logp, "term")
+            .groupBy("id")
+            .agg(
+                F.count(F.lit(1)).alias("n_tokens"),
+                F.round(F.avg("logp"), 6).alias("avg_logprob"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 def quality_buckets(

@@ -16,14 +16,12 @@ import operator as op
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.datapipe.common import (
     hash60,
     hash_family_member,
     word_shingles,
 )
-
-# Most-recent pinned reused frame (see _pin_frame).
-_PINNED_SIGS: list[DataFrame] = []
 
 # Largest normalized-codebook size (k*dim doubles) the vectorized
 # assigner will inline as a SQL-literal fold for its Lloyd-ROUND grid
@@ -32,53 +30,9 @@ _PINNED_SIGS: list[DataFrame] = []
 _LITERAL_ROUND_MAX = 16384
 
 
-def _pin_frames(*frames: DataFrame, extend: bool = False) -> list[DataFrame]:
-    """Persist + eagerly materialize frames that self-joins or several
-    downstream stages consume more than once (Catalyst does not reuse a
-    wide aggregation exchange across join legs).  Long-session hygiene:
-    only the most recent pin SET stays cached — pinning unpersists the
-    previous set, so repeated calls never accumulate blocks until
-    eviction; inside an ``iteration_scope`` the scope cleanup covers it
-    as well.  Order matters: a later frame may derive from an earlier
-    one, so each is materialized before the next persists (the derived
-    frame's build then reads the cache instead of recomputing).
-
-    ``extend=True`` appends to the live pin set WITHOUT releasing it —
-    for a later pin inside ONE operator invocation whose earlier pins
-    are still feeding the frames being pinned (the rotation then
-    releases the whole invocation's set at the next operator's first
-    non-extend pin)."""
-    from samyama_graph_spark.algorithms.util import _ACTIVE_SCOPES
-
-    # unpersist prior pins BEFORE persisting the new frames: when a
-    # new frame's logical plan EQUALS a pinned one's (the common case —
-    # the same entry re-run), persist() is a no-op against the existing
-    # cache entry, and unpersisting the old frame afterwards would
-    # remove the very entry the new frame relies on — the downstream
-    # self-join then recomputes the signature inline on both legs
-    # (measured 80 s for simhash_dedup re-runs: projection collapse
-    # substitutes the signature expression per reference).  The
-    # release must BLOCK for the same plan-identity reason: an async
-    # unpersist can land after the new persist() no-ops onto the
-    # still-registered old entry, dropping the entry the new pin
-    # relies on.
-    if not extend:
-        while _PINNED_SIGS:
-            _PINNED_SIGS.pop().unpersist(blocking=True)
-    out: list[DataFrame] = []
-    for f in frames:
-        f = f.persist()
-        f.count()
-        _PINNED_SIGS.append(f)
-        if _ACTIVE_SCOPES:
-            _ACTIVE_SCOPES[-1].append(f)
-        out.append(f)
-    return out
-
-
-def _pin_frame(sig: DataFrame) -> DataFrame:
-    """Single-frame :func:`_pin_frames` (the common case)."""
-    return _pin_frames(sig)[0]
+# pin owner of every dedup operator: each operator releases it before
+# its first pin, so only the latest invocation's pins stay cached
+_OWNER = "dedup"
 
 
 # ------------------------------------------------------------------ exact
@@ -919,11 +873,10 @@ def semdedup(
 
     assigned = _assign_clusters(base, k, iters, seed_ids, centroid_mode)
     # three consumers below (both pair legs + the verdict join-back):
-    # without the persist each re-runs the full assignment — for the
-    # vectorized path that is three scan+matmul passes.  Pinned via the
-    # rotation (r12) instead of a bare never-released persist, so
-    # re-runs recompute honestly and sessions don't accumulate blocks
-    assigned = _pin_frame(assigned)
+    # without the pin each re-runs the full assignment — for the
+    # vectorized path that is three scan+matmul passes
+    lifecycle.release(assigned.sparkSession, _OWNER)
+    assigned = lifecycle.pin(assigned, _OWNER)
 
     a = assigned.select(
         F.col("id").alias("x"), F.col("v").alias("vx"),
@@ -1596,10 +1549,9 @@ def minhash_incremental_pairs(
     # pin the batch-side frames: nb feeds the candidate join twice
     # (directly and inside the unioned bucket view) and ns feeds the
     # verification legs — without the pin the batch re-shingles per
-    # leg.  All three pins go through the rotation (r12): the bare
-    # cand/sh_needed caches were never released, leaking blocks across
-    # ingest batches in a long session
-    nb = _pin_frame(nb)
+    # leg.  All three pins stay live until the next dedup operator runs
+    lifecycle.release(nb.sparkSession, _OWNER)
+    nb = lifecycle.pin(nb, _OWNER)
     all_bkts = index_buckets.unionByName(nb)
     other = all_bkts.select(F.col("id").alias("oid"), "bkt")
     cand = (
@@ -1611,9 +1563,8 @@ def minhash_incremental_pairs(
         )
         .distinct()
     )
-    # pin (extend: nb's pin is feeding this very plan): consumed by
-    # the id set below + the inter join
-    cand = _pin_frames(cand, extend=True)[0]
+    # pinned: consumed by the id set below + the inter join
+    cand = lifecycle.pin(cand, _OWNER)
     # verification must stay BATCH-sized: semi-join the shingle tables
     # down to candidate ids before the three Jaccard legs — without
     # this the per-doc size aggregation runs over the whole indexed
@@ -1628,10 +1579,8 @@ def minhash_incremental_pairs(
         .join(cand_ids, "id", "left_semi")
         .withColumnRenamed("sk", "shingle")
     )
-    # pin (extend): sizes + both join legs; nb's bucket job is done by
-    # now but its pin stays in the set — the whole invocation's set is
-    # released together at the next operator's rotation
-    sh_needed = _pin_frames(sh_needed, extend=True)[0]
+    # pinned: sizes + both join legs
+    sh_needed = lifecycle.pin(sh_needed, _OWNER)
     return _pair_jaccard(sh_needed, cand).filter(F.col("jacc") >= threshold)
 
 

@@ -31,6 +31,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
+
 # Reserved column names (GraphFrames conventions).
 ID = "id"
 SRC = "src"
@@ -210,9 +212,9 @@ class PropertyGraph:
         # stage of the delta chain on the spot; with a static plan the
         # shuffles defer to the next action.  Broadcasts do not: their
         # builds start at conversion either way (see the docstring).
-        prev = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        try:
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        with lifecycle.scope(
+            self.spark, {"spark.sql.adaptive.enabled": "false"}
+        ):
             return PropertyGraph(
                 self.spark,
                 {k: c("n", k, v) for k, v in self.nodes.items()},
@@ -224,8 +226,6 @@ class PropertyGraph:
                 # after compaction)
                 dict(self.edges_rev),
             )._carry_stats_from(self)
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", prev)
 
     # ---------------------------------------------------------------- scans
     def node_df(self, label: str | None = None) -> DataFrame:

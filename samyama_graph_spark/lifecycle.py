@@ -1,0 +1,98 @@
+"""Frame and conf lifecycle: the one module that pins (persists) a
+DataFrame, releases it, and scopes a temporary Spark conf change.
+
+Every pin belongs to an owner inside its SparkSession.  An owner is
+either a name (``"dedup"``, ``"topology.closure"``, ...) whose caller
+releases it when its next invocation starts, or the innermost open
+:func:`scope`, which releases its pins on exit.  The registry is keyed
+by session, so two sessions sharing the process never release each
+other's live pins.
+
+Plan identity.  Spark's CacheManager keys a cache entry on the
+canonicalized plan, not on the DataFrame object.  Persisting a frame
+whose plan equals a still-pinned one is a no-op onto the existing
+entry, and releasing the old frame afterwards would drop the entry the
+new frame relies on: its consumers then silently recompute it.  So an
+owner is released BEFORE it pins again, and :func:`release` blocks: an
+asynchronous unpersist can land after the new persist has attached to
+the old entry.  Releasing first also means a re-run recomputes instead
+of reading the previous run's cache.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import threading
+import weakref
+from typing import Hashable, Iterator, Mapping
+
+from pyspark.sql import DataFrame, SparkSession
+
+_LOCK = threading.Lock()
+# session -> owner -> pinned frames
+_REGISTRY: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# session -> owner tokens of the open scopes, innermost last
+_OPEN_SCOPES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def pin(
+    df: DataFrame, owner: Hashable | None = None, eager: bool = True
+) -> DataFrame:
+    """Persist ``df`` under ``owner`` and return the persisted frame.
+
+    ``eager`` counts it at once, so consumers on several join legs read
+    the cache instead of each recomputing it; with ``eager=False`` the
+    caller's next action fills it.  Without an owner the pin belongs to
+    the innermost open :func:`scope` of the frame's session.  The frame
+    is registered before it is counted, so a failing count still leaves
+    it to its owner's release."""
+    spark = df.sparkSession
+    with _LOCK:
+        if owner is None:
+            if not _OPEN_SCOPES.get(spark):
+                raise RuntimeError("pin() without an owner needs an open scope")
+            owner = _OPEN_SCOPES[spark][-1]
+        df = df.persist()
+        _REGISTRY.setdefault(spark, {}).setdefault(owner, []).append(df)
+    if eager:
+        df.count()
+    return df
+
+
+def release(spark: SparkSession, owner: Hashable) -> None:
+    """Unpersist, blocking, every frame pinned under ``owner`` in
+    ``spark``."""
+    with _LOCK:
+        frames = _REGISTRY.get(spark, {}).pop(owner, [])
+    for df in frames:
+        df.unpersist(blocking=True)
+
+
+@contextlib.contextmanager
+def scope(
+    spark: SparkSession, conf: Mapping[str, object] | None = None
+) -> Iterator[None]:
+    """Set ``conf`` for the block, restore every key on exit, and
+    release the pins made in the block without an owner; on an
+    exception as well.  A ``None`` value leaves its key untouched."""
+    token = object()
+    saved: dict[str, str | None] = {}
+    with _LOCK:
+        _OPEN_SCOPES.setdefault(spark, []).append(token)
+    try:
+        for key, value in (conf or {}).items():
+            if value is not None:
+                saved[key] = spark.conf.get(key, None)
+                spark.conf.set(key, str(value))
+        yield
+    finally:
+        with _LOCK:
+            _OPEN_SCOPES[spark].remove(token)
+        try:
+            release(spark, token)
+        finally:
+            for key, old in saved.items():
+                if old is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, old)

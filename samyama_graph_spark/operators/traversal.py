@@ -144,7 +144,6 @@ def var_length_expand(
                 break
             visited = visited.unionByName(nxt)  # union of checkpoints
             frontier = nxt.select("start", "node")
-        e.unpersist()
     return visited.filter(F.col("hops") >= min_hops)
 
 
@@ -431,7 +430,6 @@ def _var_length_paths_loop(
                 else nxt.select("start", "node")
             )
             frontier = nxt
-        e.unpersist()
 
     out = out_frames[0]
     for fr in out_frames[1:]:

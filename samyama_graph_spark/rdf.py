@@ -26,6 +26,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
+
 _SCHEMA = (
     "s string, p string, o string, o_kind string, "
     "o_datatype string, o_lang string, g string"
@@ -2078,6 +2080,10 @@ def _closure_pairs_vec(src_idx, dst_idx, n: int, pair_budget: int):
     return seen // n, seen % n
 
 
+# pin owner of the distributed _path_closure rounds
+_CLOSURE_OWNER = "rdf.path_closure"
+
+
 def _path_closure(
     rel: DataFrame, max_rounds: int = 20, driver_guard: int = 50_000
 ) -> DataFrame:
@@ -2085,8 +2091,13 @@ def _path_closure(
     round joins the reachable-pair set with itself, so round r covers
     paths up to 2^r hops — O(log diameter) rounds, convergence by pair
     count (cycle-safe: distinct pairs can only grow to a fixpoint).
-    Superseded rounds unpersist; the returned frame's lineage is the
-    recomputable union-distinct chain.
+    Every round is pinned under one owner that the next call releases
+    first, so at most one call's rounds stay cached.  The returned
+    frame reads those pins; once a later call has released them it
+    recomputes every round, and its plan triples per round (each round
+    reads the previous one three times).  So consume it before the next
+    closure: a nested or sequenced ``+``/``*`` path on the distributed
+    loop pays that recompute.
 
     Driver fast path (same pattern as the graph algorithms' edge
     guard): below ``driver_guard`` base pairs the closure settles via
@@ -2124,21 +2135,19 @@ def _path_closure(
             )
         # closure too dense for the driver: fall through to the
         # distributed doubling loop below
-    paths = base.distinct().persist()
-    n = paths.count()
-    for _ in range(max_rounds):
-        ext = (
+    lifecycle.release(rel.sparkSession, _CLOSURE_OWNER)
+    cand, n = base, -1
+    for _ in range(max_rounds + 1):
+        paths = lifecycle.pin(cand.distinct(), _CLOSURE_OWNER, eager=False)
+        m = paths.count()
+        if m == n:
+            break
+        n = m
+        cand = paths.union(
             paths.withColumnRenamed("__po", "__mid")
             .join(paths.withColumnRenamed("__ps", "__mid"), "__mid")
             .select("__ps", "__po")
         )
-        nxt = paths.union(ext).distinct().persist()
-        m = nxt.count()
-        if m == n:
-            nxt.unpersist()
-            break
-        paths.unpersist()
-        paths, n = nxt, m
     return paths
 
 

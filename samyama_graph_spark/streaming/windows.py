@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from samyama_graph_spark import lifecycle
+
 EVENTS_SCHEMA = T.StructType(
     [
         # ts as nanos-long is the DEFAULT (parquet TIMESTAMP(NANOS)
@@ -193,29 +195,15 @@ def stateful_running_totals(events: DataFrame, timeout_ms: int = 0) -> DataFrame
     )
 
 
-class _scoped_shuffle_partitions:
-    """Temporarily pin ``spark.sql.shuffle.partitions`` while streaming
-    queries are PLANNED (the stateful-operator partition count is fixed
-    at plan time).  Stateful streaming cost scales with the state-store
-    partition count — every micro-batch touches (snapshot + delta +
-    commit) files per partition — so partitions should be sized to the
-    STATE volume, not to the session's batch-join parallelism.  On a
-    real cluster the same knob is sized to keep per-partition state in
-    the low-GB range; the scope restores the batch setting on exit."""
-
-    def __init__(self, spark: SparkSession, n: int | None):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        if self.n is not None:
-            self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
+# The stream runners scope spark.sql.shuffle.partitions while their
+# queries are PLANNED (the stateful-operator partition count is fixed
+# at plan time).  Stateful streaming cost scales with the state-store
+# partition count — every micro-batch touches (snapshot + delta +
+# commit) files per partition — so partitions should be sized to the
+# STATE volume, not to the session's batch-join parallelism.  On a
+# real cluster the same knob is sized to keep per-partition state in
+# the low-GB range; the scope restores the batch setting on exit.
+_SHUFFLE = "spark.sql.shuffle.partitions"
 
 
 def _unload_idle_state_stores(spark: SparkSession) -> None:
@@ -251,7 +239,7 @@ def run_stream_to_memory(
     # hold the scope through awaitTermination: micro-batches plan
     # asynchronously after start(), so the conf must stay pinned until
     # the availableNow run has fully drained
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
+    with lifecycle.scope(spark, {_SHUFFLE: shuffle_partitions}):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(query_name)
@@ -283,7 +271,7 @@ def run_streams_to_memory(
     spark = jobs[0][0].sparkSession
     # conf stays pinned until every availableNow run has drained (the
     # micro-batches plan asynchronously after start())
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
+    with lifecycle.scope(spark, {_SHUFFLE: shuffle_partitions}):
         try:
             for df, name, mode in jobs:
                 qs.append(
@@ -421,7 +409,7 @@ def run_windowed_sinks_fused(
             ):
                 pass
 
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
+    with lifecycle.scope(spark, {_SHUFFLE: shuffle_partitions}):
         q = (
             stream.writeStream.foreachBatch(_process)
             .option(

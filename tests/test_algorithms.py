@@ -806,6 +806,7 @@ def test_closure_edges_releases_own_pins(spark):
     the ContextCleaner may asynchronously reclaim OTHER tests'
     lineage-truncation blocks between baseline and check (observed as
     a spurious off-by-two in full-suite runs only)."""
+    from samyama_graph_spark import lifecycle
     from samyama_graph_spark.algorithms import topology
 
     def rdd_ids() -> set:
@@ -825,7 +826,7 @@ def test_closure_edges_releases_own_pins(spark):
     new_ids = rdd_ids() - base_ids
     assert len(new_ids) <= 3, sorted(new_ids)
     # the per-session registry holds only the live call's pins...
-    pins = topology._PINS.get(spark, {}).get("closure", [])
+    pins = lifecycle._REGISTRY.get(spark, {}).get(topology._CLOSURE, [])
     assert len(pins) == 3
     # ...and each is actually cached: a pin whose CacheManager entry
     # was dropped (the r11 async-release race) reports StorageLevel

@@ -428,8 +428,11 @@ def test_compaction_after_literal_writes_runs_no_job(spark, tmp_path):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "Join" not in plan, plan
     j0 = _last_job(spark)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
     engine.graph = g.compacted()
     assert _last_job(spark) == j0
+    # compaction plans its checkpoints with AQE off, then restores it
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
     assert names(engine) == ["Bob"]
     assert engine.query(
         "MATCH (p:Person {name:'Bob'}) RETURN p.age AS a"

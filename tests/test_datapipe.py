@@ -1555,3 +1555,45 @@ def test_dsir_target_filter_single_scan_stats_and_errors(spark, sf_dir):
     n_scans = len(re.findall(r"Scan parquet", plan))
     assert n_scans == 1, plan[:2000]
     assert "LocalTableScan" in plan
+
+
+def _persistent_rdd_ids(spark) -> set:
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in m.keySet().toArray()}
+
+
+def test_operator_pin_keeps_another_sessions_pin(spark):
+    """A dedup operator releases its previous pins before pinning; that
+    release must stay inside its own session.  Session A's semdedup
+    pins its cluster assignment; session B then runs semdedup on other
+    vectors, and A's pinned blocks must still be cached."""
+    from samyama_graph_spark.datapipe.dedup import semdedup
+
+    def run(session, offset):
+        rows = [
+            (i, [float(i % 3 + offset), 1.0, float(i % 5)])
+            for i in range(30)
+        ]
+        df = session.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        )
+        return semdedup(df, "embedding", "vec_id", k=2, threshold=0.999)
+
+    def rows(out):
+        return {(r["id"], r["keep"]) for r in out.collect()}
+
+    other = spark.newSession()
+    base = _persistent_rdd_ids(spark)
+    # the result frames stay referenced, so nothing they read is
+    # reclaimed by the context cleaner while the test looks
+    out_a = run(spark, 0.0)
+    got_a = rows(out_a)
+    pinned_a = _persistent_rdd_ids(spark) - base
+    assert pinned_a
+    out_b = run(other, 10.0)
+    rows(out_b)
+    # A's pins survive B's operator...
+    lost = pinned_a - _persistent_rdd_ids(spark)
+    assert not lost, sorted(lost)
+    # ...and A's result is unchanged
+    assert rows(out_a) == got_a

@@ -1,0 +1,102 @@
+"""lifecycle: the one module that pins and releases frames and scopes
+Spark confs — its contract, and the structural rule that nothing else
+in the package persists a frame or saves and restores a conf."""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+import pytest
+
+from samyama_graph_spark import lifecycle
+
+PKG = Path(__file__).resolve().parents[1] / "samyama_graph_spark"
+SHUFFLE = "spark.sql.shuffle.partitions"
+AQE = "spark.sql.adaptive.enabled"
+
+
+def _sources():
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name != "lifecycle.py":
+            yield path.relative_to(PKG).as_posix(), path.read_text()
+
+
+def test_only_lifecycle_persists_frames_and_sets_confs():
+    frame_calls, conf_calls, old_names = [], [], []
+    for rel, text in _sources():
+        for no, line in enumerate(text.splitlines(), 1):
+            where = f"{rel}:{no}: {line.strip()}"
+            if re.search(r"\.persist\(|\.cache\(\)|\.unpersist\(", line):
+                # dedup's per-round codebook is a Broadcast, not a frame
+                if not (rel == "datapipe/dedup.py"
+                        and "bc.unpersist(blocking=False)" in line):
+                    frame_calls.append(where)
+            if re.search(r"conf\.(set|unset)\(", line):
+                # the session-wide parquet switch, never restored
+                if not (rel in ("loaders.py", "streaming/windows.py")
+                        and "spark.sql.legacy.parquet.nanosAsLong" in line):
+                    conf_calls.append(where)
+            if re.search(
+                r"\b(_PINNED_SIGS|_PINS|_ACTIVE_SCOPES|_pin_frames"
+                r"|_scoped_shuffle_partitions)\b",
+                line,
+            ):
+                old_names.append(where)
+    assert not frame_calls, frame_calls
+    assert not conf_calls, conf_calls
+    assert not old_names, old_names
+
+
+def test_scope_restores_confs_and_releases_pins_after_exception(spark):
+    before = (spark.conf.get(SHUFFLE), spark.conf.get(AQE))
+    with pytest.raises(RuntimeError):
+        with lifecycle.scope(spark, {SHUFFLE: 3, AQE: "false"}):
+            assert spark.conf.get(SHUFFLE) == "3"
+            assert spark.conf.get(AQE) == "false"
+            inside = lifecycle.pin(spark.range(19))
+            raise RuntimeError("boom")
+    assert (spark.conf.get(SHUFFLE), spark.conf.get(AQE)) == before
+    assert not inside.storageLevel.useMemory
+
+
+def test_nested_scopes_restore_in_order(spark):
+    before = spark.conf.get(SHUFFLE)
+    with lifecycle.scope(spark, {SHUFFLE: 5}):
+        with lifecycle.scope(spark, {SHUFFLE: 7}):
+            assert spark.conf.get(SHUFFLE) == "7"
+        assert spark.conf.get(SHUFFLE) == "5"
+    assert spark.conf.get(SHUFFLE) == before
+
+
+def test_scope_none_value_leaves_key_untouched(spark):
+    with lifecycle.scope(spark, {SHUFFLE: 6}):
+        with lifecycle.scope(spark, {SHUFFLE: None}):
+            assert spark.conf.get(SHUFFLE) == "6"
+            spark.conf.set(SHUFFLE, "9")
+        # the inner scope saved nothing, so it restores nothing
+        assert spark.conf.get(SHUFFLE) == "9"
+
+
+def test_scope_releases_its_pins_and_only_its_pins(spark):
+    outside = lifecycle.pin(spark.range(11), "test.outside")
+    try:
+        with lifecycle.scope(spark):
+            inside = lifecycle.pin(spark.range(13))
+            named = lifecycle.pin(spark.range(17), "test.named")
+            assert inside.storageLevel.useMemory
+        assert not inside.storageLevel.useMemory
+        assert not inside.storageLevel.useDisk
+        assert outside.storageLevel.useMemory
+        assert named.storageLevel.useMemory
+    finally:
+        lifecycle.release(spark, "test.outside")
+        lifecycle.release(spark, "test.named")
+    assert not outside.storageLevel.useMemory
+    assert not named.storageLevel.useMemory
+
+
+def test_pin_without_owner_needs_a_scope(spark):
+    with pytest.raises(RuntimeError):
+        lifecycle.pin(spark.range(23))
+

@@ -1015,6 +1015,38 @@ def test_path_closure_driver_and_distributed_agree(spark):
     assert fast == slow and len(fast) > len(pairs)
 
 
+def test_path_closure_releases_previous_call(spark):
+    """The distributed doubling loop pins its rounds; the next call
+    releases them first.  Three calls on three different chains leave
+    at most one generation of pins (the previous call's persisted RDDs
+    are gone after each call) and each returns the chain's closure."""
+    from samyama_graph_spark.rdf import _path_closure
+
+    def rdd_ids() -> set:
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in m.keySet().toArray()}
+
+    base = rdd_ids()
+    previous: set = set()
+    for n, tag in [(20, "a"), (25, "b"), (30, "c")]:
+        rel = spark.createDataFrame(
+            [(f"{tag}{i}", f"{tag}{i + 1}") for i in range(n)],
+            "__ps string, __po string",
+        )
+        got = {
+            (r["__ps"], r["__po"])
+            for r in _path_closure(rel, driver_guard=0).collect()
+        }
+        assert got == {
+            (f"{tag}{i}", f"{tag}{j}")
+            for i in range(n) for j in range(i + 1, n + 1)
+        }
+        live = rdd_ids()
+        assert not previous & live, sorted(previous & live)
+        previous = live - base
+        assert previous
+
+
 def test_path_closure_vec_kernel_and_budget_fallback(spark):
     """The vectorized multi-source-BFS closure kernel (r8 advice:
     replaced the dict BFS with the numpy CSR family): chain + cycle +
