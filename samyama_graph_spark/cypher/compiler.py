@@ -47,6 +47,21 @@ def _expr_var_names(e: A.Expr) -> set[str]:
     return out
 
 
+def _point_lookup(c: A.Expr) -> tuple[A.FunctionCall, A.Expr] | None:
+    """``(id_call, value)`` of an ``id(v) = <expr>`` conjunct (either
+    order, ``elementId`` too) whose other side is variable-free, else
+    None: ``id(a) = a.partner_id`` is a row filter, not a lookup."""
+    if isinstance(c, A.BinaryOp) and c.op == "=":
+        for side, other in ((c.left, c.right), (c.right, c.left)):
+            if (
+                isinstance(side, A.FunctionCall)
+                and side.name.lower() in ("id", "elementid")
+                and not _expr_var_names(other)
+            ):
+                return side, other
+    return None
+
+
 @dataclass
 class State:
     frame: DataFrame | None
@@ -973,18 +988,8 @@ class Compiler:
                 if _expr_var_names(c) == {np.var}:
                     if isinstance(c, A.BinaryOp) and c.op == "=":
                         # id(v) = <constant> is a UNIQUE point lookup,
-                        # not a generic 10%-selectivity equality; the
-                        # other side must be variable-free (id(a) =
-                        # a.partner_id is a row filter, not a lookup)
-                        def _is_id(s):
-                            return (
-                                isinstance(s, A.FunctionCall)
-                                and s.name.lower() in ("id", "elementid")
-                            )
-
-                        if (_is_id(c.left) and not _expr_var_names(c.right)) or (
-                            _is_id(c.right) and not _expr_var_names(c.left)
-                        ):
+                        # not a generic 10%-selectivity equality
+                        if _point_lookup(c) is not None:
                             point = True
                         else:
                             n_eq += 1
@@ -993,6 +998,30 @@ class Compiler:
         if point:
             return 1.0 * (0.1**n_eq) * (0.5**n_other)
         return max(n, 1) * (0.1**n_eq) * (0.5**n_other)
+
+    def _point_seeds(self, st: State, var: str) -> list[int] | None:
+        """The integer constants (in the id column's long range) of the
+        pending ``id(var) = <constant>`` conjuncts, or None without one:
+        the start ids of a point-anchored traversal, known before any
+        job runs."""
+        seeds = []
+        for c in st.pending_where:
+            call, value = _point_lookup(c) or (None, None)
+            if call != A.FunctionCall("id", [A.Variable(var)]):
+                continue
+            if isinstance(value, A.Literal):
+                v = value.value
+            elif isinstance(value, A.Parameter):
+                v = self.params.get(value.name)
+            else:
+                continue
+            if (
+                isinstance(v, int)
+                and not isinstance(v, bool)
+                and -(2**63) <= v < 2**63
+            ):
+                seeds.append(v)
+        return seeds or None
 
     @staticmethod
     def _reversed_path(path: A.PatternPath) -> A.PatternPath:
@@ -1112,7 +1141,11 @@ class Compiler:
         right_np: A.NodePattern,
         want_path: bool = False,
     ) -> tuple[str, tuple[str, str, str] | None]:
-        """``-[:T*min..max]->`` via the multi-source BFS operator.
+        """``-[:T*min..max]->`` via the multi-source BFS operator, or,
+        when ``left`` is point-anchored (``id(left) = <int constant>``),
+        no path or edge variable is materialized and ``max`` is at most
+        ``_UNROLL_MAX``, via the driver frontier kernel while it stays
+        within its bound.
 
         Returns ``(right_var, path_info)`` where path_info is
         ``(nodes_col, rels_col, hops_col)`` temp-column names when the
@@ -1122,13 +1155,20 @@ class Compiler:
         reference's path-tracking BFS (operator.rs:3003).
         """
         from samyama_graph_spark.operators.traversal import (
+            _UNROLL_MAX,
+            frontier_expand,
             var_length_expand,
             var_length_paths,
         )
 
+        materialize = want_path or ep.var is not None
+        max_hops = ep.max_hops if ep.max_hops is not None else 20
+        seeds = (
+            None if materialize or max_hops > _UNROLL_MAX
+            else self._point_seeds(st, left)
+        )
         # prune the start set BEFORE the BFS (pushdown below expansion)
         self._apply_ready_predicates(st)
-        materialize = want_path or ep.var is not None
         if ep.types:
             edges = (
                 self._typed_edge_pairs(ep.types)
@@ -1139,9 +1179,18 @@ class Compiler:
             edges = self.g.unified_edges().select(
                 *(["src", "dst", "type"] if materialize else ["src", "dst"])
             )
-        max_hops = ep.max_hops if ep.max_hops is not None else 20
         starts = st.frame.select(F.col(f"{left}.id").alias("id")).distinct()
         path_info: tuple[str, str, str] | None = None
+        reach = None
+        if seeds is not None:
+            # the join back onto the frame below drops seeds that do
+            # not exist or fail their other predicates
+            reach, note = frontier_expand(
+                seeds, edges, ep.min_hops, max_hops, ep.direction
+            )
+            self.plan_trace.append(
+                f"var-length {'|'.join(ep.types) or '(any)'}: {note}"
+            )
         if materialize:
             ncol = st.fresh("__vln")
             rcol = st.fresh("__vlr")
@@ -1159,12 +1208,15 @@ class Compiler:
             if want_path:
                 path_info = (ncol, rcol, hcol)
         else:
-            reach = var_length_expand(
-                starts, edges, ep.min_hops, max_hops, direction=ep.direction,
-                broadcast_edges=self._vl_broadcast_edges(ep),
-            ).withColumnRenamed("start", "__vl_start").withColumnRenamed(
-                "node", "__vl_node"
-            )
+            if reach is None:
+                reach = var_length_expand(
+                    starts, edges, ep.min_hops, max_hops,
+                    direction=ep.direction,
+                    broadcast_edges=self._vl_broadcast_edges(ep),
+                )
+            reach = reach.withColumnRenamed(
+                "start", "__vl_start"
+            ).withColumnRenamed("node", "__vl_node")
         st.frame = st.frame.join(
             reach, F.col(f"{left}.id") == F.col("__vl_start")
         )

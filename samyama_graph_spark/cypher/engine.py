@@ -582,7 +582,9 @@ class CypherEngine:
         """EXPLAIN: planner candidate/cost diagnostics + the Catalyst
         physical plan (the reference's EXPLAIN likewise reports the
         candidate plans it ranked, planner.rs:73, executor/mod.rs:
-        229-260).  A write statement is planned, never applied: see
+        229-260).  Planning a point-anchored var-length read runs its
+        driver frontier's bounded collects, one job per hop.  A write
+        statement is planned, never applied: see
         :meth:`_explain_write`."""
         from samyama_graph_spark.cypher.writes import has_write_clause
 

@@ -10,12 +10,13 @@ MutQueryExecutor equivalent, executor/mod.rs:311-366).
 
 Write keys.  SET / REMOVE / DELETE and MERGE-edge first resolve the
 statement's matched key set (node ids, or (src, dst) pairs) on the
-driver in one bounded job.  Up to ``LITERAL_KEYS_MAX`` keys the delta
-is written as literals over the table's previous version only: a
-``NOT id IN (...)`` Filter or a ``CASE WHEN id IN (...)`` Project, so a
-table's plan grows by one node per write and never re-embeds the MATCH
-frame.  Larger key sets keep the join-based frame delta, whose plan
-holds the previous version twice (the table and the MATCH over it).
+driver in one bounded job.  Up to ``lifecycle.LITERAL_KEYS_MAX`` keys
+the delta is written as literals over the table's previous version
+only: a ``NOT id IN (...)`` Filter or a ``CASE WHEN id IN (...)``
+Project, so a table's plan grows by one node per write and never
+re-embeds the MATCH frame.  Larger key sets keep the join-based frame
+delta, whose plan holds the previous version twice (the table and the
+MATCH over it).
 
 Scale note: CREATE deltas are unions of literal rows, never collected;
 new-id assignment reads one scalar per session (``next_free_id``).
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.cypher import ast as A
 from samyama_graph_spark.cypher.compiler import Compiler, State
 from samyama_graph_spark.cypher.expressions import (
@@ -42,11 +44,6 @@ from samyama_graph_spark.cypher.expressions import (
     compile_expr,
 )
 from samyama_graph_spark.graph import EdgeMeta, PropertyGraph
-
-# Largest matched key set a write inlines as plan literals (node ids
-# for SET / REMOVE / DELETE, (src, dst) pairs for MERGE edge).  Larger
-# sets keep the join-based frame delta.
-LITERAL_KEYS_MAX = 1024
 
 WRITE_CLAUSES = (
     A.CreateClause, A.MergeClause, A.SetClause, A.RemoveClause, A.DeleteClause,
@@ -209,27 +206,22 @@ class WriteExecutor:
         self, site: str, rows: DataFrame, key: list[str], order: tuple = ()
     ) -> dict[tuple, dict[str, str]] | None:
         """The write's matched key set, read on the driver in ONE
-        bounded job: a top-(LITERAL_KEYS_MAX + 1) by key, which Spark
-        runs as a per-partition take-ordered plus a driver merge (no
-        exchange, unlike ``limit().collect()``'s incremental partition
-        scans or a limit-then-aggregate).
+        bounded job (``lifecycle.collect_bounded``).
 
         Returns key tuple -> the first row in ``key, *order`` order as
         column -> typed SQL literal, skipping keys with a NULL part
         (they match no row).  Returns None when ``rows`` holds more
-        than LITERAL_KEYS_MAX rows or a column type has no literal
-        form: the caller then keeps the frame delta."""
+        than ``lifecycle.LITERAL_KEYS_MAX`` rows or a column type has
+        no literal form: the caller then keeps the frame delta."""
         dtypes = {f.name: f.dataType for f in rows.schema.fields}
         bad = [c for c, t in dtypes.items() if not _has_literal_form(t)]
         if bad:
             self.key_paths.append(f"{site}: frame (no literal form: {bad[0]})")
             return None
-        got = (
-            rows.orderBy(*key, *order).limit(LITERAL_KEYS_MAX + 1).collect()
-        )
-        if len(got) > LITERAL_KEYS_MAX:
+        got = lifecycle.collect_bounded(rows, [*key, *order])
+        if got is None:
             self.key_paths.append(
-                f"{site}: frame (> {LITERAL_KEYS_MAX} keys)"
+                f"{site}: frame (> {lifecycle.LITERAL_KEYS_MAX} keys)"
             )
             return None
         first: dict[tuple, dict[str, str]] = {}

@@ -1,5 +1,6 @@
 """Frame and conf lifecycle: the one module that pins (persists) a
-DataFrame, releases it, and scopes a temporary Spark conf change.
+DataFrame, releases it, scopes a temporary Spark conf change, and
+reads a bounded frame onto the driver.
 
 Every pin belongs to an owner inside its SparkSession.  An owner is
 either a name (``"dedup"``, ``"topology.closure"``, ...) whose caller
@@ -24,9 +25,14 @@ from __future__ import annotations
 import contextlib
 import threading
 import weakref
-from typing import Hashable, Iterator, Mapping
+from typing import Hashable, Iterator, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
+
+# Largest key set the driver collects and inlines into a plan as
+# literals: a write's matched keys, a point-anchored traversal's
+# frontier, the edges it ships per hop and the rows it reaches.
+LITERAL_KEYS_MAX = 1024
 
 _LOCK = threading.Lock()
 # session -> owner -> pinned frames
@@ -96,3 +102,13 @@ def scope(
                     spark.conf.unset(key)
                 else:
                     spark.conf.set(key, old)
+
+
+def collect_bounded(df: DataFrame, order: Sequence[str]) -> list[Row] | None:
+    """``df``'s rows sorted by ``order``, read in ONE job, or None when
+    it holds more than LITERAL_KEYS_MAX rows.  A top-(LITERAL_KEYS_MAX
+    + 1) runs as a per-partition take-ordered plus a driver merge: no
+    exchange, unlike ``limit().collect()``'s incremental partition
+    scans or a limit-then-aggregate."""
+    got = df.orderBy(*order).limit(LITERAL_KEYS_MAX + 1).collect()
+    return None if len(got) > LITERAL_KEYS_MAX else got

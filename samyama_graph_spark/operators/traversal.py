@@ -11,13 +11,23 @@ All are multi-source: the whole frontier advances in one join per
 hop, so K hops = K shuffles regardless of how many start nodes —
 this is what makes traversal viable at cluster scale (per-start BFS
 loops would be K*starts jobs).
+
+The exception is a point-anchored traversal, whose start ids are plan
+constants (``id(p) = $me``): :func:`frontier_expand` runs its BFS on
+the driver, one bounded edge collect per hop, while the frontier stays
+small — the reference's NodeById seek followed by its per-start
+visited-set BFS.  K hops are then K small jobs and no shuffle; past
+``lifecycle.LITERAL_KEYS_MAX`` it hands back to the multi-source plan.
 """
 
 from __future__ import annotations
 
+from typing import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.algorithms.util import (
     checkpoint,
     iteration_scope,
@@ -70,6 +80,7 @@ def var_length_expand(
     semantics per start (a node is reported once, at its first-reached
     depth), matching the reference's VarLengthExpand BFS.  The visited
     set is keyed (start, node) so concurrent BFS trees don't interfere.
+    Edges with a NULL endpoint lead nowhere.
     """
     if min_hops < 0 or max_hops < min_hops:
         raise ValueError("need 0 <= min_hops <= max_hops")
@@ -89,7 +100,7 @@ def var_length_expand(
         # pins the edge side resident: every hop becomes a streamed
         # BroadcastHashJoin, so the whole unrolled BFS is ONE stage
         # pipeline and the min-hops aggregation is the only exchange.
-        e = _directed_view(edges, direction)
+        e = _directed_view(edges, direction).dropna()
         if broadcast_edges:
             e = F.broadcast(e)
         frontier = starts.select(
@@ -113,7 +124,7 @@ def var_length_expand(
         # on the edge side every hop; only the (start, node) frontier
         # and visited frames shuffle, and with AQE re-planning off each
         # hop is ONE scheduled job (the count below)
-        e = partitioned(_directed_view(edges, direction), "src")
+        e = partitioned(_directed_view(edges, direction).dropna(), "src")
         frontier = checkpoint(
             starts.select(
                 F.col(id_col).alias("start"), F.col(id_col).alias("node")
@@ -145,6 +156,99 @@ def var_length_expand(
             visited = visited.unionByName(nxt)  # union of checkpoints
             frontier = nxt.select("start", "node")
     return visited.filter(F.col("hops") >= min_hops)
+
+
+# frontier_expand's per-hop edge filter: the rows leaving the frontier
+# in traversal direction.  NULL endpoints were dropped before it, and
+# ``both`` drops self-loops as symmetrize does.
+_TOUCH = {
+    "out": "src IN ({ids})",
+    "in": "dst IN ({ids})",
+    "both": "(src IN ({ids}) OR dst IN ({ids})) AND src <> dst",
+}
+
+
+def frontier_expand(
+    seeds: Iterable[int],
+    edges: DataFrame,
+    min_hops: int,
+    max_hops: int,
+    direction: str = "out",
+) -> tuple[DataFrame | None, str]:
+    """Driver-side BFS ``*min..max`` from known start ids: the rows
+    :func:`var_length_expand` returns for the same starts, as a VALUES
+    relation, and a one-line account of the choice for EXPLAIN.
+
+    Each hop is one bounded collect of the edges that touch the
+    frontier (:func:`lifecycle.collect_bounded`); the BFS itself runs
+    in Python.  The seeds, the edges shipped per hop and the reached
+    ``(start, node)`` set are each bounded by
+    ``lifecycle.LITERAL_KEYS_MAX``: past any of them this returns
+    ``(None, reason)`` and the caller runs the distributed plan.
+    """
+    if min_hops < 0 or max_hops < min_hops:
+        raise ValueError("need 0 <= min_hops <= max_hops")
+    if direction not in _TOUCH:
+        raise ValueError(f"direction must be out/in/both, got {direction!r}")
+    cap = lifecycle.LITERAL_KEYS_MAX
+    seeds = sorted(set(seeds))
+    if len(seeds) > cap:
+        return None, (
+            f"multi-source plan, {len(seeds)} seeds > LITERAL_KEYS_MAX ({cap})"
+        )
+    reached = {s: {s: 0} for s in seeds}
+    frontier = {s: {s} for s in seeds}
+    hops = shipped = 0
+    for depth in range(1, max_hops + 1):
+        nodes = set().union(*frontier.values())
+        if not nodes:
+            break
+        ids = ", ".join(str(v) for v in sorted(nodes))
+        got = lifecycle.collect_bounded(
+            edges.select("src", "dst")
+            .dropna()
+            .filter(_TOUCH[direction].format(ids=ids)),
+            ["src", "dst"],
+        )
+        if got is None:
+            return None, (
+                f"multi-source plan, hop {depth} edges > "
+                f"LITERAL_KEYS_MAX ({cap})"
+            )
+        hops += 1
+        shipped += len(got)
+        adj: dict[int, set[int]] = {}
+        for src, dst in got:
+            if direction != "in":
+                adj.setdefault(src, set()).add(dst)
+            if direction != "out":
+                adj.setdefault(dst, set()).add(src)
+        for s, front in frontier.items():
+            seen = reached[s]
+            front = {v for u in front for v in adj.get(u, ()) if v not in seen}
+            seen.update(dict.fromkeys(front, depth))
+            frontier[s] = front
+        n = sum(len(seen) for seen in reached.values())
+        if n > cap:
+            return None, (
+                f"multi-source plan, {n} reached after hop {depth} > "
+                f"LITERAL_KEYS_MAX ({cap})"
+            )
+    rows = [
+        f"({s}L, {v}L, {h})"
+        for s in seeds
+        for v, h in sorted(reached[s].items())
+        if h >= min_hops
+    ]
+    out = edges.sparkSession.sql(
+        f"SELECT * FROM VALUES {', '.join(rows) or '(0L, 0L, 0)'} "
+        "AS t(start, node, hops)"
+    )
+    note = (
+        f"driver frontier, {len(seeds)} point seed{'s' * (len(seeds) != 1)}, "
+        f"{hops} hop{'s' * (hops != 1)}, {shipped} edges shipped"
+    )
+    return (out if rows else out.limit(0)), note
 
 
 def shortest_path(

@@ -18,7 +18,11 @@ KNOWS is a deterministic sparse social graph derived from the data: the
 customers of each nation, ordered by key, wired into an undirected ring
 (canonical src < dst, one row per undirected edge).  |KNOWS| = |Customer|,
 so every interactive query stays point-anchored the way LDBC intends —
-the 100 TB posture is "seek + bounded expansion", never a scan.
+the 100 TB posture is "seek + bounded expansion", never a scan.  The
+ring is a window plus a distinct; it is pinned once per session graph,
+so traversals, 1-hop reads and the MERGE existence probe scan the
+cache instead of re-running the window.  The pin is lazy, so building
+the graph runs no job: the first consumer fills the cache.
 
 Oracles replay the same ring derivation as a window-function CTE and
 the same traversals as bounded recursive CTEs in DuckDB.
@@ -29,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.cypher.engine import CypherEngine
 from samyama_graph_spark.graph import EdgeMeta, PropertyGraph
 from samyama_graph_spark.loaders import ID_BASE, load_tables, tpch_graph
@@ -127,7 +132,11 @@ def ldbc_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
     if sf_dir not in per:
         base = tpch_graph(spark, sf_dir)
         edges = dict(base.edges)
-        edges["KNOWS"] = _knows_edges(spark, sf_dir)
+        edges["KNOWS"] = lifecycle.pin(
+            _knows_edges(spark, sf_dir),
+            owner=("workloads_ldbc.knows", sf_dir),
+            eager=False,
+        )
         meta = dict(base.edge_meta)
         meta["KNOWS"] = EdgeMeta("Customer", "Customer")
         g = PropertyGraph(
