@@ -4,9 +4,12 @@ Re-expresses the reference's algorithm library
 (crates/samyama-graph-algorithms: pagerank.rs, community.rs,
 pathfinding.rs, cdlp.rs, lcc.rs, topology.rs) on Spark DataFrames.
 
-PageRank, WCC, CDLP, BFS and SSSP (and SCC's reachability labels) are
-vertex programs run by one kernel, ``util.superstep``, modelled on
-Pregelix's superstep (vertex ⨝ messages → group-by combine → update):
+PageRank, WCC, CDLP, BFS and SSSP (and SCC's reachability labels, and
+Cypher's deep var-length and ``shortestPath`` BFS in
+``operators/traversal.py``) are vertex programs run by one kernel,
+``util.superstep``, modelled on Pregelix's superstep (vertex ⨝
+messages → group-by combine → update).  SCC's outer peel and MST's
+Borůvka rounds keep their own loops.  The kernel:
 
 - Below a size guard (``util.DRIVER_EDGE_GUARD`` edges, ×8 for BFS and
   SSSP, read at call time) one bounded Arrow probe collects the edges
@@ -20,7 +23,8 @@ Pregelix's superstep (vertex ⨝ messages → group-by combine → update):
   action — a count of active rows, a row count, or PageRank's message
   sum — so a round costs one Spark job and lineage stays flat.  Loops
   with an ``active`` flag send only from active vertices and halt when
-  none is left; WCC checks every 2 rounds, SCC every 3.
+  none is left; WCC checks every 2 rounds, SCC every 3, the others
+  every round.
 
 No vertex state is collected on the distributed path; only scalars
 cross to the driver.

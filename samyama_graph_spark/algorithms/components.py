@@ -12,102 +12,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from samyama_graph_spark.algorithms.util import (
-    checkpoint,
     driver_union_find,
-    iteration_scope,
     superstep,
     symmetrize,
     vertices_from_edges,
 )
-
-
-def wcc_two_phase(
-    edges: DataFrame,
-    max_iterations: int = 50,
-    _stats: dict | None = None,
-) -> DataFrame:
-    """WCC by alternating large-star / small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    ``(id, component)`` with component = min id, identical output to
-    the hash-to-min ``wcc``.
-
-    Each round halves long chains, so convergence is O(log^2 n) rounds
-    independent of graph DIAMETER — the variant to pick when the graph
-    is a few very long paths/cycles (hash-to-min needs one round per
-    hop of diameter).  The price is that both phases recompute
-    neighborhood minima over the full evolving edge set (two extra
-    aggregations per round), so on low-diameter graphs — most real
-    ones — hash-to-min does less work; that is why this is a flag, not
-    the default (``wcc(variant='two_phase')``).
-
-    large-star(u): every neighbor v > u connects to
-    m = min(N(u) ∪ {u}); small-star(u): every neighbor v <= u and u
-    itself connect to m.  Fixpoint = the edge set is a stable set of
-    (node -> component-min) stars; checked exactly (count + anti-join
-    probe), no fingerprint shortcuts.
-    """
-    spark = edges.sparkSession
-    rounds = 0
-    with iteration_scope(spark, edges):
-        e = checkpoint(
-            symmetrize(edges).filter(F.col("src") < F.col("dst")).distinct(),
-            eager=False,
-        )
-        verts = vertices_from_edges(edges)
-
-        def star(pairs: DataFrame, large: bool) -> DataFrame:
-            sym = symmetrize(pairs, distinct=False)
-            m = sym.groupBy("src").agg(
-                F.least(F.min("dst"), F.col("src")).alias("m")
-            )
-            joined = sym.join(m, "src")
-            keep = (
-                (F.col("dst") > F.col("src"))
-                if large
-                else (F.col("dst") <= F.col("src"))
-            )
-            out = joined.filter(keep).select(
-                F.col("dst").alias("a"), F.col("m").alias("b")
-            )
-            if not large:
-                out = out.unionByName(
-                    m.select(F.col("src").alias("a"), F.col("m").alias("b"))
-                )
-            return (
-                out.filter(F.col("a") != F.col("b"))
-                .select(
-                    F.greatest("a", "b").alias("src"),
-                    F.least("a", "b").alias("dst"),
-                )
-                .distinct()
-            )
-
-        n_old = e.count()
-        while rounds < max_iterations:
-            e1 = star(e, large=True)
-            e2 = checkpoint(star(e1, large=False), eager=False)
-            rounds += 1
-            # exact stability: same cardinality and no new pairs
-            # (n_old carried from the previous round's count)
-            n_new = e2.count()
-            if n_old == n_new:
-                if (
-                    e2.join(e, ["src", "dst"], "left_anti").limit(1).count()
-                    == 0
-                ):
-                    e = e2
-                    break
-            e = e2
-            n_old = n_new
-    if _stats is not None:
-        _stats["rounds"] = rounds
-    # stable stars: src (> dst) points at its component min; roots and
-    # isolated vertices map to themselves
-    comp = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
-    return (
-        verts.join(comp, "id", "left")
-        .select("id", F.coalesce("component", F.col("id")).alias("component"))
-    )
 
 
 def min_label_step(joined: DataFrame, state: DataFrame) -> DataFrame:
@@ -145,7 +54,6 @@ def wcc(
     edges: DataFrame,
     max_iterations: int = 50,
     check_interval: int = 2,
-    variant: str = "hash_to_min",
 ) -> DataFrame:
     """Weakly connected components: ``(id, component)`` where component
     is the minimum vertex id in the component.
@@ -157,14 +65,7 @@ def wcc(
     Small graphs are settled by union-find on the driver (the
     reference's own WCC is sequential, community.rs:58); components are
     unique, so both paths return identical output.
-
-    ``variant='two_phase'`` switches to large-star/small-star
-    contraction (wcc_two_phase) for very-high-diameter graphs.
     """
-    if variant == "two_phase":
-        return wcc_two_phase(edges, max_iterations)
-    if variant != "hash_to_min":
-        raise ValueError(f"unknown wcc variant {variant!r}")
     spark = edges.sparkSession
     # vertices come from the RAW edge list: symmetrize drops self-loops,
     # and a vertex whose only edges are self-loops is still its own

@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from samyama_graph_spark.algorithms import util
 from samyama_graph_spark.algorithms.util import (
-    DRIVER_EDGE_GUARD,
     checkpoint,
     collect_if_small,
     driver_union_find,
@@ -70,14 +70,14 @@ def mst(
     edges: DataFrame,
     weight_col: str = "weight",
     max_rounds: int = 30,
-    driver_guard: int = DRIVER_EDGE_GUARD,
 ) -> DataFrame:
     """Minimum spanning forest edges: ``(src, dst, weight)``.
 
     Treats the graph as undirected; edges are canonicalized src<dst.
 
-    Under ``driver_guard`` edges the Borůvka rounds run on the driver
-    (the reference's Prim, mst.rs:41, is sequential anyway); above it,
+    Under ``util.DRIVER_EDGE_GUARD`` edges (read at call time) the
+    Borůvka rounds run on the driver (the reference's Prim, mst.rs:41,
+    is sequential anyway); above it,
     distributed rounds with per-component min-edge aggregation and
     guarded union-find contraction of the component graph.
     """
@@ -92,8 +92,9 @@ def mst(
         .agg(F.min("weight").alias("weight"))
     )
     spark = edges.sparkSession
-    if driver_guard > 0:
-        rows = collect_if_small(e, driver_guard, "src", "dst", "weight")
+    guard = util.DRIVER_EDGE_GUARD
+    if guard > 0:
+        rows = collect_if_small(e, guard, "src", "dst", "weight")
         if rows is not None:
             chosen_rows = _boruvka_driver(
                 [(r[0], r[1], r[2]) for r in rows]
@@ -166,7 +167,7 @@ def mst(
                     F.col("c_src").alias("src"), F.col("c_dst").alias("dst")
                 )
             )
-            if 0 < n_picks <= driver_guard:
+            if 0 < n_picks <= guard:
                 pair_rows = comp_edges.collect()
                 comp_map = driver_union_find(
                     (r[0], r[1]) for r in pair_rows

@@ -19,9 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from samyama_graph_spark.algorithms import util
 from samyama_graph_spark.algorithms.components import min_label_step
 from samyama_graph_spark.algorithms.util import (
-    DRIVER_EDGE_GUARD,
     checkpoint,
     collect_if_small,
     iteration_scope,
@@ -128,24 +128,22 @@ def _reach_labels(
 
 
 def scc(
-    edges: DataFrame,
-    max_outer: int = 20,
-    max_inner: int = 50,
-    driver_guard: int = DRIVER_EDGE_GUARD,
+    edges: DataFrame, max_outer: int = 20, max_inner: int = 50
 ) -> DataFrame:
     """``(id, component)`` where component is the minimum vertex id of
     the strongly connected component.
 
-    Under ``driver_guard`` edges (one early-out CollectLimit probe) the
-    fixpoint runs as sequential Tarjan on the driver — exactly the
-    reference's execution model (community.rs:96) and orders of
-    magnitude fewer scheduled jobs than the settle loop on a small
-    graph.  Above the guard, distributed forward-backward coloring.
+    Under ``util.DRIVER_EDGE_GUARD`` edges (read at call time; one
+    early-out CollectLimit probe) the fixpoint runs as sequential
+    Tarjan on the driver — exactly the reference's execution model
+    (community.rs:96) and orders of magnitude fewer scheduled jobs than
+    the settle loop on a small graph.  Above the guard, distributed
+    forward-backward coloring.
     """
     spark = edges.sparkSession
-    if driver_guard > 0:
+    if util.DRIVER_EDGE_GUARD > 0:
         rows = collect_if_small(
-            edges.select("src", "dst"), driver_guard, "src", "dst"
+            edges.select("src", "dst"), util.DRIVER_EDGE_GUARD, "src", "dst"
         )
         if rows is not None:
             comp = _tarjan_components([(r[0], r[1]) for r in rows])

@@ -29,11 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from samyama_graph_spark import lifecycle
-from samyama_graph_spark.algorithms.util import (
-    DRIVER_EDGE_GUARD,
-    edges_pdf_if_small,
-    symmetrize,
-)
+from samyama_graph_spark.algorithms import util
+from samyama_graph_spark.algorithms.util import edges_pdf_if_small, symmetrize
 
 
 # closing-edge sets up to this many rows broadcast as the triangle
@@ -244,22 +241,21 @@ def _triangle_stats_driver(spark, pdf):
     return spark.createDataFrame(out, "id long, deg long, triangles long")
 
 
-def triangle_stats(
-    edges: DataFrame,
-    canonical: bool = False,
-    driver_guard: int = DRIVER_EDGE_GUARD,
-) -> DataFrame:
+def triangle_stats(edges: DataFrame, canonical: bool = False) -> DataFrame:
     """Per-vertex ``(id, deg, triangles)`` over the undirected closure
     — the one frame LCC, per-vertex triangle counts, and the global
     total (sum/3) all derive from.
 
     Driver fast path (same guard as the other algorithms): below
-    ``driver_guard`` pairs the degree-oriented wedge closing runs as
-    vectorized numpy on the driver; the distributed closure join is
-    the ≥guard path, same orientation and counts."""
+    ``util.DRIVER_EDGE_GUARD`` pairs (read at call time) the
+    degree-oriented wedge closing runs as vectorized numpy on the
+    driver; the distributed closure join is the ≥guard path, same
+    orientation and counts."""
     lifecycle.release(edges.sparkSession, _CLOSURE)
     lifecycle.release(edges.sparkSession, _OUTER)
-    pdf = edges_pdf_if_small(edges.select("src", "dst"), driver_guard)
+    pdf = edges_pdf_if_small(
+        edges.select("src", "dst"), util.DRIVER_EDGE_GUARD
+    )
     if pdf is not None:
         return _triangle_stats_driver(edges.sparkSession, pdf)
     deg, tris = closure_edges(edges, canonical)

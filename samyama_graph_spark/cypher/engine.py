@@ -74,6 +74,10 @@ _DDL_SHOW = re.compile(
     re.IGNORECASE,
 )
 _DDL_ANALYZE = re.compile(r"^\s*analyze(\s+graph)?\s*$", re.IGNORECASE)
+_DDL_ALL = (
+    _DDL_INDEX, _DDL_CONSTRAINT, _DDL_DROP, _DDL_DROP_ON,
+    _DDL_CONSTRAINT_ASSERT, _DDL_VECTOR_FOR, _DDL_SHOW, _DDL_ANALYZE,
+)
 
 
 class CypherEngine:
@@ -585,12 +589,11 @@ class CypherEngine:
         229-260).  Planning a point-anchored var-length read runs its
         driver frontier's bounded collects, one job per hop.  A write
         statement is planned, never applied: see
-        :meth:`_explain_write`."""
+        :meth:`_explain_write`.  A DDL statement is named, not run."""
         from samyama_graph_spark.cypher.writes import has_write_clause
 
-        ddl = self._try_ddl(text)
-        if ddl is not None:
-            return _explain_string(ddl)
+        if any(p.match(text) for p in _DDL_ALL):
+            return f"== DDL (not applied) ==\n{_WS.sub(' ', text.strip())}"
         ast = self._parse_cached(text)
         if len(ast.parts) == 1 and has_write_clause(ast.parts[0]):
             return self._explain_write(ast.parts[0], params)

@@ -5,9 +5,9 @@ reads a bounded frame onto the driver.
 Every pin belongs to an owner inside its SparkSession.  An owner is
 either a name (``"dedup"``, ``"topology.closure"``, ...) whose caller
 releases it when its next invocation starts, or the innermost open
-:func:`scope`, which releases its pins on exit.  The registry is keyed
-by session, so two sessions sharing the process never release each
-other's live pins.
+:func:`scope`, which releases its pins on exit.  The registry lives on
+its session object, so two sessions sharing the process never release
+each other's live pins, and dropping a session frees its registry.
 
 Plan identity.  Spark's CacheManager keys a cache entry on the
 canonicalized plan, not on the DataFrame object.  Persisting a frame
@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import contextlib
 import threading
-import weakref
 from typing import Hashable, Iterator, Mapping, Sequence
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -35,10 +34,26 @@ from pyspark.sql import DataFrame, Row, SparkSession
 LITERAL_KEYS_MAX = 1024
 
 _LOCK = threading.Lock()
-# session -> owner -> pinned frames
-_REGISTRY: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-# session -> owner tokens of the open scopes, innermost last
-_OPEN_SCOPES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+class _Held:
+    """A session's lifecycle state, kept as an attribute of the session:
+    owner -> pinned frames, and the owner tokens of its open scopes,
+    innermost last.  Each pinned frame holds its session, so a registry
+    keyed by session from outside it would keep every session alive."""
+
+    __slots__ = ("pins", "scopes")
+
+    def __init__(self) -> None:
+        self.pins: dict[Hashable, list[DataFrame]] = {}
+        self.scopes: list[object] = []
+
+
+def _held(spark: SparkSession) -> _Held:
+    held = spark.__dict__.get("_lifecycle")
+    if held is None:
+        held = spark._lifecycle = _Held()
+    return held
 
 
 def pin(
@@ -52,14 +67,14 @@ def pin(
     the innermost open :func:`scope` of the frame's session.  The frame
     is registered before it is counted, so a failing count still leaves
     it to its owner's release."""
-    spark = df.sparkSession
     with _LOCK:
+        held = _held(df.sparkSession)
         if owner is None:
-            if not _OPEN_SCOPES.get(spark):
+            if not held.scopes:
                 raise RuntimeError("pin() without an owner needs an open scope")
-            owner = _OPEN_SCOPES[spark][-1]
+            owner = held.scopes[-1]
         df = df.persist()
-        _REGISTRY.setdefault(spark, {}).setdefault(owner, []).append(df)
+        held.pins.setdefault(owner, []).append(df)
     if eager:
         df.count()
     return df
@@ -69,7 +84,7 @@ def release(spark: SparkSession, owner: Hashable) -> None:
     """Unpersist, blocking, every frame pinned under ``owner`` in
     ``spark``."""
     with _LOCK:
-        frames = _REGISTRY.get(spark, {}).pop(owner, [])
+        frames = _held(spark).pins.pop(owner, [])
     for df in frames:
         df.unpersist(blocking=True)
 
@@ -84,7 +99,7 @@ def scope(
     token = object()
     saved: dict[str, str | None] = {}
     with _LOCK:
-        _OPEN_SCOPES.setdefault(spark, []).append(token)
+        _held(spark).scopes.append(token)
     try:
         for key, value in (conf or {}).items():
             if value is not None:
@@ -93,7 +108,7 @@ def scope(
         yield
     finally:
         with _LOCK:
-            _OPEN_SCOPES[spark].remove(token)
+            _held(spark).scopes.remove(token)
         try:
             release(spark, token)
         finally:

@@ -1,9 +1,5 @@
 """Graph-specific operators that need composition beyond one DataFrame call."""
 
-from samyama_graph_spark.operators.traversal import (
-    expand,
-    shortest_path,
-    var_length_expand,
-)
+from samyama_graph_spark.operators.traversal import expand, var_length_expand
 
-__all__ = ["expand", "var_length_expand", "shortest_path"]
+__all__ = ["expand", "var_length_expand"]

@@ -5,12 +5,18 @@ neighbor expansion with direction/type/label filters;
 VarLengthExpandOperator (operator.rs:3003) — BFS over ``*min..max``
 with a visited set (distinct reached nodes per start, first-reached
 depth); ShortestPathOperator (operator.rs:7527) — BFS between bound
-endpoints.
+endpoints, here :func:`var_length_paths` from ``*0..max``.
 
 All are multi-source: the whole frontier advances in one join per
 hop, so K hops = K shuffles regardless of how many start nodes —
 this is what makes traversal viable at cluster scale (per-start BFS
-loops would be K*starts jobs).
+loops would be K*starts jobs).  Up to ``_UNROLL_MAX`` hops the hops
+are unrolled into one lazy plan.  Deeper or unbounded traversals
+(``*..6``, ``*``, every ``shortestPath``) are a vertex program on
+``algorithms.util.superstep``: the state is keyed by the reached node
+``id`` and carries its ``start`` and ``hops``; each superstep adds the
+first-reached rows, flagged ``chg``, costs one job, and the loop halts
+at the first hop that reaches nothing new.
 
 The exception is a point-anchored traversal, whose start ids are plan
 constants (``id(p) = $me``): :func:`frontier_expand` runs its BFS on
@@ -22,7 +28,7 @@ visited-set BFS.  K hops are then K small jobs and no shuffle; past
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,8 +36,7 @@ from pyspark.sql import functions as F
 from samyama_graph_spark import lifecycle
 from samyama_graph_spark.algorithms.util import (
     checkpoint,
-    iteration_scope,
-    partitioned,
+    superstep,
     symmetrize,
 )
 
@@ -119,43 +124,58 @@ def var_length_expand(
             out = out.unionByName(lv)
         out = out.groupBy("start", "node").agg(F.min("hops").alias("hops"))
         return out.filter(F.col("hops") >= min_hops)
-    with iteration_scope(starts.sparkSession, edges):
-        # edges persisted hash(src): the frontier join is exchange-free
-        # on the edge side every hop; only the (start, node) frontier
-        # and visited frames shuffle, and with AQE re-planning off each
-        # hop is ONE scheduled job (the count below)
-        e = partitioned(_directed_view(edges, direction).dropna(), "src")
-        frontier = checkpoint(
-            starts.select(
-                F.col(id_col).alias("start"), F.col(id_col).alias("node")
-            ).distinct(),
-            eager=False,  # materialized by the first hop's count
-        )
-        visited = frontier.withColumn("hops", F.lit(0))
+    seeds = starts.select(
+        F.col(id_col).alias("start"), F.col(id_col).alias("id")
+    ).distinct()
+    reached = superstep(
+        "var_length_expand",
+        edges,
+        lambda e: _seed_state(seeds),
+        _reach_step(
+            lambda j: j.select(
+                "start",
+                F.col("dst").alias("id"),
+                (F.col("hops") + 1).alias("hops"),
+            ).distinct()
+        ),
+        rounds=max_hops,
+        view=lambda e: _directed_view(e, direction).dropna(),
+        active="chg",
+    )
+    return reached.select("start", F.col("id").alias("node"), "hops").filter(
+        F.col("hops") >= min_hops
+    )
 
-        for depth in range(1, max_hops + 1):
-            nxt = (
-                e.join(
-                    frontier.hint("shuffle_hash"), e["src"] == frontier["node"]
-                )
-                .select("start", F.col("dst").alias("node"))
-                .distinct()
-                .join(
-                    visited.select("start", "node").hint("shuffle_hash"),
-                    ["start", "node"],
-                    "left_anti",
-                )
-                .withColumn("hops", F.lit(depth))
-            )
-            # lazy checkpoint + count: the count action materializes
-            # the checkpoint in the SAME job, so each hop costs one
-            # scheduled job instead of two
-            nxt = checkpoint(nxt, eager=False)
-            if nxt.count() == 0:
-                break
-            visited = visited.unionByName(nxt)  # union of checkpoints
-            frontier = nxt.select("start", "node")
-    return visited.filter(F.col("hops") >= min_hops)
+
+def _seed_state(seeds: DataFrame) -> DataFrame:
+    """A deep traversal's first superstep state: every start reached
+    from itself at hop 0, and sending.  Lazily checkpointed, so the
+    start ids are computed once, by the first round's count."""
+    return checkpoint(
+        seeds.withColumn("hops", F.lit(0)).withColumn("chg", F.lit(True)),
+        eager=False,
+    )
+
+
+def _reach_step(extend: Callable[[DataFrame], DataFrame]):
+    """Visited-set BFS superstep over ``(start, id, hops, ..., chg)``:
+    ``extend`` turns the edges leaving the last hop's rows into
+    candidate rows, the ones whose ``(start, id)`` is not yet reached
+    join the state flagged ``chg``, and every earlier row stays with
+    ``chg`` cleared.  The loop halts at the first hop that reaches
+    nothing new."""
+
+    def step(joined: DataFrame, state: DataFrame) -> DataFrame:
+        new = extend(joined).join(
+            state.select("start", "id").hint("shuffle_hash"),
+            ["start", "id"],
+            "left_anti",
+        )
+        return state.withColumn("chg", F.lit(False)).unionByName(
+            new.withColumn("chg", F.lit(True))
+        )
+
+    return step
 
 
 # frontier_expand's per-hop edge filter: the rows leaving the frontier
@@ -251,63 +271,42 @@ def frontier_expand(
     return (out if rows else out.limit(0)), note
 
 
-def shortest_path(
-    starts: DataFrame,
-    targets: DataFrame,
-    edges: DataFrame,
-    max_depth: int = 30,
-    id_col: str = "id",
-    direction: str = "out",
-) -> DataFrame:
-    """Shortest hop distance for every (start, target) pair reachable
-    within max_depth: ``(start, target, hops)``.
-
-    Multi-source BFS from all starts at once, then a semi-join onto the
-    target set — MATCH p = shortestPath((a)-[*]->(b)) RETURN length(p).
-    """
-    reached = var_length_expand(
-        starts, edges, 0, max_depth, id_col=id_col, direction=direction
-    )
-    t = targets.select(F.col(id_col).alias("target")).distinct()
-    return reached.join(t, reached["node"] == t["target"]).select(
-        "start", "target", "hops"
-    )
-
-
 _REL_ARRAY_T = "array<struct<src:bigint,dst:bigint,type:string>>"
 
 # Bounded var-length patterns up to this depth compile to one fully
 # lazy unrolled plan (no per-hop count/checkpoint jobs); deeper or
-# unbounded traversals keep the iterative early-exit loop.  Identical
-# frontier subplans are computed once per action via ReuseExchange.
+# unbounded traversals run as a superstep loop that halts early.
+# Identical frontier subplans are computed once per action via
+# ReuseExchange.
 _UNROLL_MAX = 4
 
 
 def _typed_view(edges: DataFrame, direction: str) -> DataFrame:
-    """Edge list as traversal steps ``(u, v)`` carrying the underlying
-    edge identity ``(esrc, edst, etype)`` in STORED orientation, so
-    materialized relationship structs are direction-faithful."""
+    """Edge list as traversal steps ``(src, dst)`` carrying the
+    underlying edge identity ``(esrc, edst, etype)`` in STORED
+    orientation, so materialized relationship structs are
+    direction-faithful.  Edges with a NULL endpoint lead nowhere."""
     cols = edges.columns
     t = F.col("type") if "type" in cols else F.lit(None).cast("string")
     base = edges.select(
         F.col("src").cast("long").alias("esrc"),
         F.col("dst").cast("long").alias("edst"),
         t.alias("etype"),
-    )
+    ).dropna(subset=["esrc", "edst"])
     fwd = base.select(
-        F.col("esrc").alias("u"), F.col("edst").alias("v"),
+        F.col("esrc").alias("src"), F.col("edst").alias("dst"),
         "esrc", "edst", "etype",
     )
     if direction == "out":
         return fwd
     rev = base.select(
-        F.col("edst").alias("u"), F.col("esrc").alias("v"),
+        F.col("edst").alias("src"), F.col("esrc").alias("dst"),
         "esrc", "edst", "etype",
     )
     if direction == "in":
         return rev
     if direction == "both":
-        return fwd.unionByName(rev).filter(F.col("u") != F.col("v"))
+        return fwd.unionByName(rev).filter(F.col("src") != F.col("dst"))
     raise ValueError(f"direction must be out/in/both, got {direction!r}")
 
 
@@ -329,11 +328,12 @@ def var_length_paths(
     depth only) — the reference's visited-set BFS with the path-
     tracking flag on (operator.rs:3003).  ``all_shortest=False`` keeps
     ONE deterministic path per (start, node): the lexicographically
-    smallest node sequence.  ``all_shortest=True`` keeps EVERY
-    minimal-hop path — the multiplicity allShortestPaths needs
-    (operator.rs:7527); sound because every prefix of a shortest path
-    is itself a shortest path, so extending exactly the first-reach
-    frontier enumerates all of them.
+    smallest node sequence, then relationship sequence.
+    ``all_shortest=True`` keeps EVERY minimal-hop path — the
+    multiplicity allShortestPaths needs (operator.rs:7527); sound
+    because every prefix of a shortest path is itself a shortest path,
+    so extending exactly the first-reach frontier enumerates all of
+    them.
 
     Scale: each hop is one join + one anti-join on (start, node);
     path arrays ride along as payload (bounded by max_hops).  The
@@ -342,121 +342,77 @@ def var_length_paths(
     """
     if min_hops < 0 or max_hops < min_hops:
         raise ValueError("need 0 <= min_hops <= max_hops")
-    unroll = max_hops <= _UNROLL_MAX
-    if not unroll:
-        return _var_length_paths_loop(
-            starts, edges, min_hops, max_hops, id_col, direction, all_shortest
-        )
-    # one lazy plan via SIMPLE-PATH ENUMERATION: each depth extends the
-    # previous depth's paths, rejecting node revisits with an
-    # array_contains filter (no visited anti-join), and ONE final
-    # resolution pass restores the visited-set/all-shortest semantics:
-    # every intermediate node of a minimal-hop path sits at its own
-    # BFS depth (subpaths of shortest paths are shortest), so keeping
-    # only min-hops rows per (start, node) yields exactly the BFS
-    # first-reach paths — all of them in all_shortest mode, the
-    # lexicographically smallest otherwise.  K joins + 1 aggregation
-    # replaces K joins + K anti-joins + K min_by aggregations; at
-    # sf0.1 the gate entry's AQE job count dropped ~2x.  The
-    # enumeration frames hold simple paths rather than the (smaller)
-    # BFS tree, which is why this shape is gated to depth <=
-    # _UNROLL_MAX; the iterative loop below keeps frontier-pruned BFS
-    # for deep/unbounded traversals.  broadcast_edges (caller-judged
-    # against the broadcast budget) pins the edge side resident so
-    # every enumeration hop is a streamed BroadcastHashJoin — the
-    # whole bounded BFS collapses into one stage pipeline with the
-    # first-reach resolution as its only exchange.
-    e = _typed_view(edges, direction)
-    if broadcast_edges:
-        e = F.broadcast(e)
     base = (
         starts.select(F.col(id_col).cast("long").alias("start"))
         .distinct()
         .select(
             "start",
-            F.col("start").alias("node"),
+            F.col("start").alias("id"),
             F.array(F.col("start")).alias("path_nodes"),
             F.array().cast(_REL_ARRAY_T).alias("path_rels"),
-            F.lit(0).alias("hops"),
         )
     )
-    frontier = base
-    frames = [base]
-    for depth in range(1, max_hops + 1):
-        frontier = _enum_step(e, frontier, depth)
-        frames.append(frontier)
-
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    out = _resolve_first_reach(out, all_shortest)
-    return out.filter(F.col("hops") >= min_hops)
-
-
-def _enum_step(e: DataFrame, frontier: DataFrame, depth: int) -> DataFrame:
-    """Extend every simple path by one edge (node-revisit rejected)."""
-    f = frontier.select("start", "node", "path_nodes", "path_rels")
-    return (
-        e.join(f, e["u"] == f["node"])
-        .filter(~F.array_contains(f["path_nodes"], e["v"]))
-        .select(
-            "start",
-            F.col("v").alias("node"),
-            F.concat("path_nodes", F.array(F.col("v"))).alias("path_nodes"),
-            F.concat(
-                "path_rels",
-                F.array(
-                    F.struct(
-                        F.col("esrc").alias("src"),
-                        F.col("edst").alias("dst"),
-                        F.col("etype").alias("type"),
-                    )
-                ),
-            ).alias("path_rels"),
-            F.lit(depth).alias("hops"),
+    if max_hops > _UNROLL_MAX:
+        # frontier-pruned BFS: the state holds the BFS tree (or every
+        # shortest path), never the simple paths the unrolled plan
+        # enumerates
+        out = superstep(
+            "var_length_paths",
+            edges,
+            lambda e: _seed_state(base),
+            _reach_step(
+                _extend
+                if all_shortest
+                else lambda j: _first_reach(_extend(j), False)
+            ),
+            rounds=max_hops,
+            view=lambda e: _typed_view(e, direction),
+            active="chg",
         )
-    )
+    else:
+        # one lazy plan via SIMPLE-PATH ENUMERATION: each depth extends
+        # the previous depth's paths, rejecting node revisits with an
+        # array_contains filter (no visited anti-join), and ONE final
+        # resolution pass restores the visited-set/all-shortest
+        # semantics: every intermediate node of a minimal-hop path sits
+        # at its own BFS depth (subpaths of shortest paths are
+        # shortest), so keeping only min-hops rows per (start, node)
+        # yields exactly the BFS first-reach paths — all of them in
+        # all_shortest mode, the lexicographically smallest otherwise.
+        # K joins + 1 aggregation replaces K joins + K anti-joins + K
+        # min_by aggregations; at sf0.1 the gate entry's AQE job count
+        # dropped ~2x.  The enumeration frames hold simple paths rather
+        # than the (smaller) BFS tree, which is why this shape is gated
+        # to depth <= _UNROLL_MAX.  broadcast_edges (caller-judged
+        # against the broadcast budget) pins the edge side resident so
+        # every enumeration hop is a streamed BroadcastHashJoin — the
+        # whole bounded BFS collapses into one stage pipeline with the
+        # first-reach resolution as its only exchange.
+        e = _typed_view(edges, direction)
+        if broadcast_edges:
+            e = F.broadcast(e)
+        frontier = base.withColumn("hops", F.lit(0))
+        out = frontier
+        for _ in range(max_hops):
+            frontier = _extend(
+                e.join(frontier, e["src"] == frontier["id"]).filter(
+                    ~F.array_contains("path_nodes", F.col("dst"))
+                )
+            )
+            out = out.unionByName(frontier)
+        out = _first_reach(out, all_shortest)
+    return out.select(
+        "start", F.col("id").alias("node"), "path_nodes", "path_rels", "hops"
+    ).filter(F.col("hops") >= min_hops)
 
 
-def _resolve_first_reach(paths: DataFrame, all_shortest: bool) -> DataFrame:
-    """Collapse enumerated simple paths to BFS first-reach semantics in
-    one exchange: keep only minimal-hop rows per (start, node) — every
-    such row is a genuine BFS-tree path because subpaths of shortest
-    paths are shortest."""
-    if all_shortest:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("start", "node")
-        return (
-            paths.withColumn("__minh", F.min("hops").over(w))
-            .filter(F.col("hops") == F.col("__minh"))
-            .drop("__minh")
-        )
-    return (
-        paths.groupBy("start", "node")
-        .agg(
-            F.min_by(
-                F.struct("hops", "path_nodes", "path_rels"),
-                F.struct("hops", "path_nodes"),
-            ).alias("pp")
-        )
-        .select(
-            "start",
-            "node",
-            F.col("pp.path_nodes").alias("path_nodes"),
-            F.col("pp.path_rels").alias("path_rels"),
-            F.col("pp.hops").alias("hops"),
-        )
-    )
-
-
-def _paths_step(e, frontier, visited, all_shortest: bool, depth: int):
-    """One BFS hop of the path-materializing traversal."""
-    f = frontier.select("start", "node", "path_nodes", "path_rels")
-    step = e.join(f, e["u"] == f["node"]).select(
+def _extend(joined: DataFrame) -> DataFrame:
+    """Path rows one hop on: each ``(start, id, path_nodes, path_rels,
+    hops)`` row joined to an edge step it leaves, extended by it."""
+    return joined.select(
         "start",
-        F.col("v").alias("node"),
-        F.concat("path_nodes", F.array(F.col("v"))).alias("path_nodes"),
+        F.col("dst").alias("id"),
+        F.concat("path_nodes", F.array(F.col("dst"))).alias("path_nodes"),
         F.concat(
             "path_rels",
             F.array(
@@ -467,75 +423,28 @@ def _paths_step(e, frontier, visited, all_shortest: bool, depth: int):
                 )
             ),
         ).alias("path_rels"),
+        (F.col("hops") + 1).alias("hops"),
     )
-    step = step.join(visited, ["start", "node"], "left_anti")
-    if not all_shortest:
-        step = (
-            step.groupBy("start", "node")
-            .agg(
-                F.min_by(
-                    F.struct("path_nodes", "path_rels"),
-                    F.col("path_nodes"),
-                ).alias("pp")
-            )
-            .select(
-                "start", "node",
-                F.col("pp.path_nodes").alias("path_nodes"),
-                F.col("pp.path_rels").alias("path_rels"),
-            )
+
+
+def _first_reach(paths: DataFrame, all_shortest: bool) -> DataFrame:
+    """Keep only the minimal-hop rows per (start, id), in one exchange:
+    all of them, or the one with the smallest node sequence (then the
+    smallest relationship sequence, as parallel edges give one node
+    sequence several).  Applied to enumerated simple paths, every such
+    row is a genuine BFS-tree path because subpaths of shortest paths
+    are shortest."""
+    if all_shortest:
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("start", "id")
+        return (
+            paths.withColumn("__minh", F.min("hops").over(w))
+            .filter(F.col("hops") == F.col("__minh"))
+            .drop("__minh")
         )
-    return step.withColumn("hops", F.lit(depth))
-
-
-def _var_length_paths_loop(
-    starts: DataFrame,
-    edges: DataFrame,
-    min_hops: int,
-    max_hops: int,
-    id_col: str,
-    direction: str,
-    all_shortest: bool,
-) -> DataFrame:
-    """Deep/unbounded path traversal: per-hop checkpoint + early-exit
-    count inside an AQE-off iteration scope — edges persisted hash(u)
-    so every hop's expansion is exchange-free on the edge side and
-    costs ONE scheduled job (the drain check)."""
-    with iteration_scope(starts.sparkSession, edges):
-        e = partitioned(_typed_view(edges, direction), "u")
-        base = (
-            starts.select(F.col(id_col).cast("long").alias("start"))
-            .distinct()
-            .select(
-                "start",
-                F.col("start").alias("node"),
-                F.array(F.col("start")).alias("path_nodes"),
-                F.array().cast(_REL_ARRAY_T).alias("path_rels"),
-                F.lit(0).alias("hops"),
-            )
-        )
-        frontier = checkpoint(base, eager=False)
-        visited = frontier.select("start", "node")
-        out_frames = [frontier]
-
-        for depth in range(1, max_hops + 1):
-            nxt = checkpoint(
-                _paths_step(
-                    e, frontier.hint("shuffle_hash"), visited, all_shortest,
-                    depth,
-                ),
-                eager=False,
-            )
-            if nxt.count() == 0:
-                break
-            out_frames.append(nxt)
-            visited = visited.unionByName(
-                nxt.select("start", "node").distinct()
-                if all_shortest
-                else nxt.select("start", "node")
-            )
-            frontier = nxt
-
-    out = out_frames[0]
-    for fr in out_frames[1:]:
-        out = out.unionByName(fr)
-    return out.filter(F.col("hops") >= min_hops)
+    return (
+        paths.groupBy("start", "id")
+        .agg(F.min(F.struct("hops", "path_nodes", "path_rels")).alias("pp"))
+        .select("start", "id", "pp.path_nodes", "pp.path_rels", "pp.hops")
+    )

@@ -2082,11 +2082,11 @@ def _closure_pairs_vec(src_idx, dst_idx, n: int, pair_budget: int):
 
 # pin owner of the distributed _path_closure rounds
 _CLOSURE_OWNER = "rdf.path_closure"
+# base pairs up to which _path_closure settles on the driver
+_CLOSURE_DRIVER_GUARD = 50_000
 
 
-def _path_closure(
-    rel: DataFrame, max_rounds: int = 20, driver_guard: int = 50_000
-) -> DataFrame:
+def _path_closure(rel: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Transitive closure (distinct node pairs) by path doubling: each
     round joins the reachable-pair set with itself, so round r covers
     paths up to 2^r hops — O(log diameter) rounds, convergence by pair
@@ -2100,19 +2100,19 @@ def _path_closure(
     loop pays that recompute.
 
     Driver fast path (same pattern as the graph algorithms' edge
-    guard): below ``driver_guard`` base pairs the closure settles via
-    the vectorized multi-source-BFS kernel (_closure_pairs_vec, the
-    numpy CSR family the algorithms package uses — r8 advice replaced
-    the old Python-dict BFS and raised the guard 10x to match) — RDF
-    predicate relations in a query are usually metadata-scale, and
-    each doubling round otherwise costs two scheduled jobs.  The
+    guard): below ``_CLOSURE_DRIVER_GUARD`` base pairs the closure
+    settles via the vectorized multi-source-BFS kernel
+    (_closure_pairs_vec, the numpy CSR family the algorithms package
+    uses) — RDF predicate relations in a query are usually
+    metadata-scale, and each doubling round otherwise costs two
+    scheduled jobs.  The
     distributed loop is the ≥guard path, and also the fallback when
     the closure itself would exceed ~4M pairs on the driver; all
     paths yield the same distinct pair set."""
     from samyama_graph_spark.algorithms.util import edges_pdf_if_small
 
     base = rel.select("__ps", "__po")
-    pdf = edges_pdf_if_small(base, driver_guard)
+    pdf = edges_pdf_if_small(base, _CLOSURE_DRIVER_GUARD)
     if pdf is not None:
         import numpy as np
         import pandas as pd

@@ -21,7 +21,7 @@ from samyama_graph_spark.algorithms import (
     triangle_count,
     wcc,
 )
-from samyama_graph_spark.operators import shortest_path, var_length_expand
+from samyama_graph_spark.operators import var_length_expand
 
 
 @pytest.fixture(scope="module")
@@ -178,16 +178,6 @@ def test_var_length_expand(spark, chain):
         for r in var_length_expand(starts, chain, 1, 2).collect()
     }
     assert got == {(1, 2): 1, (1, 3): 2, (2, 3): 1, (2, 4): 2}
-
-
-def test_shortest_path_pairs(spark, chain):
-    starts = spark.createDataFrame([(1,)], "id long")
-    targets = spark.createDataFrame([(3,), (4,)], "id long")
-    got = {
-        (r["start"], r["target"]): r["hops"]
-        for r in shortest_path(starts, targets, chain).collect()
-    }
-    assert got == {(1, 3): 2, (1, 4): 3}
 
 
 def test_scc(spark):
@@ -439,7 +429,9 @@ def test_scc_driver_and_distributed_paths_agree(spark, tmp_path, monkeypatch):
         ran.clear()
         fast = sorted(map(tuple, scc(edges).collect()))
         assert ran
-        dist = sorted(map(tuple, scc(edges, driver_guard=0).collect()))
+        with monkeypatch.context() as m:
+            _distributed(m)
+            dist = sorted(map(tuple, scc(edges).collect()))
         assert fast == dist, f"seed {seed}"
 
 
@@ -457,7 +449,9 @@ def test_mst_driver_and_distributed_paths_agree(spark, tmp_path, monkeypatch):
         ran.clear()
         fast = sorted(map(tuple, mst(edges).collect()))
         assert ran
-        dist = sorted(map(tuple, mst(edges, driver_guard=0).collect()))
+        with monkeypatch.context() as m:
+            _distributed(m)
+            dist = sorted(map(tuple, mst(edges).collect()))
         assert fast == dist, f"seed {seed}"
 
 
@@ -611,7 +605,7 @@ def test_superstep_job_budget(spark, monkeypatch):
         ("cdlp", lambda: A.cdlp(edges, iterations=3), 4, 1),
         ("bfs", lambda: A.bfs(edges, 0, max_depth=30), 7, 1),
         ("sssp", lambda: A.sssp(edges, 0, max_rounds=60), 9, 1),
-        ("scc", lambda: A.scc(edges, driver_guard=0), 17, 1),
+        ("scc", lambda: A.scc(edges), 17, 1),
     ]
     for name, call, fn_jobs, collect_jobs in budget:
         a = last_job()
@@ -733,40 +727,6 @@ def test_cdlp_driver_and_distributed_paths_agree(spark, tmp_path, monkeypatch):
             assert fast == slow and len(fast) > 20, (seed, iters)
 
 
-def test_wcc_two_phase_parity_and_rounds(spark):
-    """Large-star/small-star WCC must equal union-find on a random
-    graph, and must settle a 10k-node PATH in O(log^2 n) rounds —
-    the diameter-independence that justifies the variant (hash-to-min
-    would need ~10k rounds there)."""
-    import random
-
-    from samyama_graph_spark.algorithms.components import wcc, wcc_two_phase
-    from samyama_graph_spark.algorithms.util import driver_union_find
-
-    rng = random.Random(11)
-    pairs = sorted({(rng.randrange(300), rng.randrange(300)) for _ in range(260)})
-    df = spark.createDataFrame(pairs, "src long, dst long")
-    got = {
-        r["id"]: r["component"]
-        for r in wcc(df, variant="two_phase").collect()
-    }
-    expect = driver_union_find(pairs)
-    for v, c in expect.items():
-        assert got[v] == c, f"vertex {v}"
-    assert set(got) == set(expect)
-
-    n = 10_000
-    path_df = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-    )
-    stats: dict = {}
-    out = wcc_two_phase(path_df, max_iterations=50, _stats=stats)
-    rows = out.collect()
-    assert len(rows) == n
-    assert all(r["component"] == 0 for r in rows)
-    assert stats["rounds"] <= 25, stats
-
-
 def test_triangle_stats_driver_and_distributed_agree(
     spark, tmp_path, monkeypatch
 ):
@@ -785,10 +745,12 @@ def test_triangle_stats_driver_and_distributed_agree(
             for r in triangle_stats(edges).collect()
         }
         assert ran
-        slow = {
-            r["id"]: (r["deg"], r["triangles"])
-            for r in triangle_stats(edges, driver_guard=0).collect()
-        }
+        with monkeypatch.context() as m:
+            _distributed(m)
+            slow = {
+                r["id"]: (r["deg"], r["triangles"])
+                for r in triangle_stats(edges).collect()
+            }
         assert fast == slow and len(fast) > 20, seed
         assert any(t > 0 for _, t in fast.values())
 
@@ -826,7 +788,7 @@ def test_closure_edges_releases_own_pins(spark):
     new_ids = rdd_ids() - base_ids
     assert len(new_ids) <= 3, sorted(new_ids)
     # the per-session registry holds only the live call's pins...
-    pins = lifecycle._REGISTRY.get(spark, {}).get(topology._CLOSURE, [])
+    pins = lifecycle._held(spark).pins.get(topology._CLOSURE, [])
     assert len(pins) == 3
     # ...and each is actually cached: a pin whose CacheManager entry
     # was dropped (the r11 async-release race) reports StorageLevel

@@ -64,6 +64,15 @@ def test_explain_and_profile(engine):
     assert prof["rows"] == 1 and prof["elapsed_ms"] > 0
 
 
+def test_explain_ddl_reports_without_applying(engine):
+    plan = [
+        r["plan"] for r in engine.query("EXPLAIN CREATE INDEX ON :Person(age)")
+        .collect()
+    ]
+    assert plan == ["== DDL (not applied) ==", "CREATE INDEX ON :Person(age)"]
+    assert engine.catalog.indexes == {}
+
+
 def test_analyze_prewarms_planner_stats(spark):
     """ANALYZE reports per-label counts and per-edge-type degree stats
     and memoizes them (no recount on re-access)."""

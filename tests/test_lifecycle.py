@@ -100,3 +100,24 @@ def test_pin_without_owner_needs_a_scope(spark):
     with pytest.raises(RuntimeError):
         lifecycle.pin(spark.range(23))
 
+
+
+def test_dropped_session_frees_its_registry(spark):
+    """A pinned frame holds its session, so the registry must not be
+    what keeps a dropped session alive."""
+    import gc
+    import weakref
+
+    from pyspark.sql import session as pyspark_session
+
+    other = spark.newSession()
+    pinned = lifecycle.pin(other.range(29), "test.dropped", eager=False)
+    jdf, ref = pinned._jdf, weakref.ref(other)
+    del other, pinned
+    # creating a session rebinds pyspark's RDD.toDF to it: bind it back
+    pyspark_session._monkey_patch_RDD(spark)
+    gc.collect()
+    try:
+        assert ref() is None
+    finally:
+        jdf.unpersist(True)

@@ -991,12 +991,13 @@ def test_sparql_select_expressions(spark, store):
     assert [(r["x"], r["d"]) for r in got] == [(f"{_EX}carol", 67.0)]
 
 
-def test_path_closure_driver_and_distributed_agree(spark):
+def test_path_closure_driver_and_distributed_agree(spark, monkeypatch):
     """The guarded driver BFS closure and the distributed path-doubling
     loop must produce the same distinct pair set — including cycles
     and self-loops."""
     import random
 
+    from samyama_graph_spark import rdf
     from samyama_graph_spark.rdf import _path_closure
 
     rng = random.Random(13)
@@ -1008,24 +1009,24 @@ def test_path_closure_driver_and_distributed_agree(spark):
     )
     rel = spark.createDataFrame(pairs, "__ps string, __po string")
     fast = {(r["__ps"], r["__po"]) for r in _path_closure(rel).collect()}
-    slow = {
-        (r["__ps"], r["__po"])
-        for r in _path_closure(rel, driver_guard=0).collect()
-    }
+    monkeypatch.setattr(rdf, "_CLOSURE_DRIVER_GUARD", 0)
+    slow = {(r["__ps"], r["__po"]) for r in _path_closure(rel).collect()}
     assert fast == slow and len(fast) > len(pairs)
 
 
-def test_path_closure_releases_previous_call(spark):
+def test_path_closure_releases_previous_call(spark, monkeypatch):
     """The distributed doubling loop pins its rounds; the next call
     releases them first.  Three calls on three different chains leave
     at most one generation of pins (the previous call's persisted RDDs
     are gone after each call) and each returns the chain's closure."""
+    from samyama_graph_spark import rdf
     from samyama_graph_spark.rdf import _path_closure
 
     def rdd_ids() -> set:
         m = spark.sparkContext._jsc.getPersistentRDDs()
         return {int(k) for k in m.keySet().toArray()}
 
+    monkeypatch.setattr(rdf, "_CLOSURE_DRIVER_GUARD", 0)
     base = rdd_ids()
     previous: set = set()
     for n, tag in [(20, "a"), (25, "b"), (30, "c")]:
@@ -1033,10 +1034,7 @@ def test_path_closure_releases_previous_call(spark):
             [(f"{tag}{i}", f"{tag}{i + 1}") for i in range(n)],
             "__ps string, __po string",
         )
-        got = {
-            (r["__ps"], r["__po"])
-            for r in _path_closure(rel, driver_guard=0).collect()
-        }
+        got = {(r["__ps"], r["__po"]) for r in _path_closure(rel).collect()}
         assert got == {
             (f"{tag}{i}", f"{tag}{j}")
             for i in range(n) for j in range(i + 1, n + 1)
@@ -1047,13 +1045,14 @@ def test_path_closure_releases_previous_call(spark):
         assert previous
 
 
-def test_path_closure_vec_kernel_and_budget_fallback(spark):
+def test_path_closure_vec_kernel_and_budget_fallback(spark, monkeypatch):
     """The vectorized multi-source-BFS closure kernel (r8 advice:
     replaced the dict BFS with the numpy CSR family): chain + cycle +
     self-loop exactness, and a tiny pair budget returns None so
     _path_closure falls back to the distributed loop."""
     import numpy as np
 
+    from samyama_graph_spark import rdf
     from samyama_graph_spark.rdf import _closure_pairs_vec, _path_closure
 
     # 0->1->2->3 chain with a 3->1 back edge (cycle) and 0->0 self-loop
@@ -1074,8 +1073,8 @@ def test_path_closure_vec_kernel_and_budget_fallback(spark):
              if i != j]
     rel = spark.createDataFrame(pairs, "__ps string, __po string")
     fast = {(r["__ps"], r["__po"]) for r in _path_closure(rel).collect()}
-    slow = {(r["__ps"], r["__po"])
-            for r in _path_closure(rel, driver_guard=0).collect()}
+    monkeypatch.setattr(rdf, "_CLOSURE_DRIVER_GUARD", 0)
+    slow = {(r["__ps"], r["__po"]) for r in _path_closure(rel).collect()}
     assert fast == slow and len(fast) == 144  # full clique incl. i->i
 
 

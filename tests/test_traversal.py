@@ -1,8 +1,10 @@
-"""Point-anchored var-length traversal: the driver frontier kernel
+"""Var-length traversal.  Point-anchored: the driver frontier kernel
 (``traversal.frontier_expand``) against the multi-source plan
 (``var_length_expand``), its LITERAL_KEYS_MAX bound on both sides, the
 EXPLAIN line naming the choice, its job budget, and the pinned LDBC
-KNOWS ring under block loss and a second session."""
+KNOWS ring under block loss and a second session.  Deep: the superstep
+loops of ``var_length_expand`` and ``var_length_paths`` against the
+unrolled plans, and their job budget."""
 
 from __future__ import annotations
 
@@ -207,7 +209,7 @@ def test_knows_pin_survives_block_loss_and_is_per_session(spark, sf_dir):
 
     owner = ("workloads_ldbc.knows", sf_dir)
     before = (ic1(spark, sf_dir).collect(), merge_then_fof())
-    (pinned,) = lifecycle._REGISTRY[spark][owner]
+    (pinned,) = lifecycle._held(spark).pins[owner]
     assert pinned is ldbc_graph(spark, sf_dir).edges["KNOWS"]
     assert pinned.is_cached
 
@@ -218,6 +220,100 @@ def test_knows_pin_survives_block_loss_and_is_per_session(spark, sf_dir):
 
     other_session = spark.newSession()
     g2 = ldbc_graph(other_session, sf_dir)
-    (pinned2,) = lifecycle._REGISTRY[other_session][owner]
+    (pinned2,) = lifecycle._held(other_session).pins[owner]
     assert pinned2 is g2.edges["KNOWS"] and pinned2 is not pinned
-    assert lifecycle._REGISTRY[spark][owner] == [pinned]
+    assert lifecycle._held(spark).pins[owner] == [pinned]
+
+
+def _reach_rows(df):
+    """Rows as ``(start, node, hops, ...path columns)`` tuples, sorted."""
+    cols = ["start", "node", "hops"]
+    cols += [c for c in ("path_nodes", "path_rels") if c in df.columns]
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+@pytest.mark.parametrize("direction", ["out", "in", "both"])
+def test_superstep_loops_match_unrolled_plans(
+    spark, messy_edges, monkeypatch, direction
+):
+    """With ``_UNROLL_MAX`` at 0 every traversal runs as a superstep
+    loop: var_length_expand and var_length_paths (both all_shortest
+    modes) return the unrolled plans' rows, and var_length_expand
+    frontier_expand's, over min_hops 0..2 and max_hops 1..4.  Each loop
+    runs one Spark job per hop, up to the first hop that reaches
+    nothing new, and one to collect: the counts of the hand-written
+    loops it replaced."""
+    seeds = [0, 2, 7, 99]
+    starts = spark.createDataFrame([(s,) for s in seeds], "id long")
+    calls = {
+        "expand": lambda lo, hi: traversal.var_length_expand(
+            starts, messy_edges, lo, hi, direction=direction
+        ),
+        "path": lambda lo, hi: traversal.var_length_paths(
+            starts, messy_edges, lo, hi, direction=direction
+        ),
+        "all_shortest": lambda lo, hi: traversal.var_length_paths(
+            starts, messy_edges, lo, hi, direction=direction,
+            all_shortest=True,
+        ),
+    }
+    # first-reach rows do not depend on the bounds, which only filter
+    # them: one unrolled *0..4 run is the reference for every bound
+    ref = {k: _reach_rows(f(0, 4)) for k, f in calls.items()}
+    depth = max(r[2] for r in ref["expand"])
+    monkeypatch.setattr(traversal, "_UNROLL_MAX", 0)
+    # min_hops is the same final filter on every path: each value is
+    # taken once rather than crossed with every max_hops
+    for min_hops, max_hops in ((0, 1), (1, 2), (2, 3), (0, 4)):
+        want = {
+            k: [r for r in rows if min_hops <= r[2] <= max_hops]
+            for k, rows in ref.items()
+        }
+        for kind, call in calls.items():
+            a = _last_job(spark)
+            df = call(min_hops, max_hops)
+            b = _last_job(spark)
+            got = _reach_rows(df)
+            c = _last_job(spark)
+            assert got == want[kind], (kind, min_hops, max_hops)
+            assert (b - a, c - b) == (min(max_hops, depth + 1), 1), (
+                kind, min_hops, max_hops,
+            )
+        front, note = traversal.frontier_expand(
+            seeds, messy_edges, min_hops, max_hops, direction
+        )
+        assert front is not None, note
+        assert _reach_rows(front) == want["expand"], (min_hops, max_hops)
+
+
+def test_deep_traversal_job_budget_and_trace(spark, messy_edges):
+    """Past ``_UNROLL_MAX`` both traversals run on the superstep loop:
+    one job per hop up to the first that reaches nothing new (out
+    reaches depth 4, both depth 3), one to collect, and PLAN_TRACE
+    records both loops."""
+    from samyama_graph_spark.algorithms import util
+
+    for name in ("var_length_expand", "var_length_paths"):
+        util.PLAN_TRACE.pop(name, None)
+    starts = spark.createDataFrame([(0,), (2,), (7,), (99,)], "id long")
+    for direction, jobs in (("out", 5), ("both", 4)):
+        for call in (
+            lambda: traversal.var_length_expand(
+                starts, messy_edges, 1, 6, direction=direction
+            ),
+            lambda: traversal.var_length_paths(
+                starts, messy_edges, 1, 6, direction=direction
+            ),
+            lambda: traversal.var_length_paths(
+                starts, messy_edges, 1, 6, direction=direction,
+                all_shortest=True,
+            ),
+        ):
+            a = _last_job(spark)
+            df = call()
+            b = _last_job(spark)
+            df.collect()
+            c = _last_job(spark)
+            assert (b - a, c - b) == (jobs, 1), direction
+    assert "ShuffledHashJoin" in util.PLAN_TRACE["var_length_expand"]
+    assert "ShuffledHashJoin" in util.PLAN_TRACE["var_length_paths"]
