@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from samyama_graph_spark import lifecycle
+from samyama_graph_spark.loaders import read_parquet
 from samyama_graph_spark.datapipe.common import (
     hash60,
     hash_family_member,
@@ -1513,8 +1514,8 @@ def minhash_index_read(
             f"caller requested {want}"
         )
     return (
-        spark.read.parquet(path + "/buckets"),
-        spark.read.parquet(path + "/shingles"),
+        read_parquet(spark, path + "/buckets")[0],
+        read_parquet(spark, path + "/shingles")[0],
     )
 
 

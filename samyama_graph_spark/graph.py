@@ -331,11 +331,13 @@ class PropertyGraph:
     def label_count_est(self, label: str | None = None) -> int:
         """Memoized per-label cardinality ESTIMATE for the pattern
         planner (the reference keeps equivalent triple stats in its
-        catalog, src/graph/catalog.rs:63-140).  First use per (graph,
-        label) runs one metadata-count job (parquet footer counts);
-        ``compacted()`` carries the cache forward, so interactive write
-        sessions don't re-count per statement — planner estimates
-        tolerate that slight staleness."""
+        catalog, src/graph/catalog.rs:63-140).  Graphs built from
+        loaded tables (``loaders.tpch_graph``) start with the counts of
+        their row-preserving labels taken from the parquet footers;
+        any other first use per (graph, label) runs one metadata-count
+        job.  ``compacted()`` carries the cache forward, so interactive
+        write sessions don't re-count per statement — planner
+        estimates tolerate that slight staleness."""
         cache = self.__dict__.setdefault("_count_cache", {})
         key = label if label is not None else "\x00ALL"
         if key not in cache:
@@ -402,7 +404,8 @@ class PropertyGraph:
         self, other: "PropertyGraph", edge_counts: bool = True
     ) -> "PropertyGraph":
         """Copy another graph's stats cache (id-preserving derivations:
-        compaction, write deltas).
+        compaction, write deltas, a graph that adds edge types over the
+        same node tables).
 
         ``edge_counts=False`` for derivations that may CHANGE edge
         cardinalities (write deltas): node/degree estimates only steer
@@ -420,6 +423,10 @@ class PropertyGraph:
             prior = other.__dict__.get(attr)
             if prior:
                 self.__dict__[attr] = dict(prior)
+        if set(self.edges) != set(other.edges):
+            # the all-types totals cover the other graph's edge types
+            for attr in ("_deg_cache", "_ecount_cache"):
+                self.__dict__.get(attr, {}).pop("\x00ALL", None)
         return self
 
     # ------------------------------------------------------------ register

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from samyama_graph_spark import lifecycle
+from samyama_graph_spark.loaders import read_parquet
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -38,8 +39,9 @@ def events_stream(
 ) -> DataFrame:
     """The events parquet directory as a file-source stream.
 
-    The timestamp unit is taken from the batch read of the same path
-    (TIMESTAMP(NANOS) arrives as long under the legacy conf and is
+    The timestamp unit is taken from the batch schema of the same path
+    (``loaders.read_parquet``, read from the footers without a Spark
+    job: TIMESTAMP(NANOS) arrives as long under the legacy conf and is
     truncated to micros exactly like the batch loader; TIMESTAMP(MICROS)
     is already a timestamp), so stream and batch rows agree.
     """
@@ -47,7 +49,7 @@ def events_stream(
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        probed = spark.read.parquet(sf_dir).schema
+        probed = read_parquet(spark, sf_dir)[0].schema
         ts_type = next(
             (f.dataType for f in probed.fields if f.name == "ts"),
             T.LongType(),
@@ -82,7 +84,7 @@ def events_stream(
     )
     if ts_is_nanos_long:
         raw = raw.withColumn(
-            "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
         )
     return raw
 

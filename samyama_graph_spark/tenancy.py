@@ -27,6 +27,7 @@ import os
 from pyspark.sql import SparkSession
 
 from samyama_graph_spark.graph import PropertyGraph
+from samyama_graph_spark.loaders import read_parquet
 
 
 class TenantNotFound(KeyError):
@@ -185,9 +186,9 @@ class TenantCatalog:
             path = os.path.join(base, f)
             name = f.removesuffix(".parquet")
             if name.startswith("nodes_"):
-                nodes[name.removeprefix("nodes_")] = self.spark.read.parquet(path)
+                nodes[name.removeprefix("nodes_")] = read_parquet(self.spark, path)[0]
             elif name.startswith("edges_"):
-                edges[name.removeprefix("edges_")] = self.spark.read.parquet(path)
+                edges[name.removeprefix("edges_")] = read_parquet(self.spark, path)[0]
         return PropertyGraph(self.spark, nodes, edges)
 
     def _bind(self, tenant_id: str, graph: PropertyGraph):

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from samyama_graph_spark.algorithms import pagerank, sssp, wcc
-from samyama_graph_spark.loaders import ID_BASE, tpch_graph
+from samyama_graph_spark.loaders import ID_BASE, load_tables, tpch_graph
 from samyama_graph_spark.operators import var_length_expand
 from samyama_graph_spark.workloads import query
 
@@ -533,7 +533,7 @@ def lcc_directed_chords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from samyama_graph_spark.algorithms.topology import lcc
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_tables(spark, sf_dir, ["customer"])["customer"]
     w = Window.partitionBy("c_nationkey").orderBy("ck")
     base = (
         cust.select("c_nationkey", F.col("c_custkey").alias("ck"))
@@ -705,9 +705,8 @@ def rdf_sparql_bgp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from samyama_graph_spark.rdf import RdfStore
 
     ex = "http://ex.org/"
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    reg = spark.read.parquet(f"{sf_dir}/region.parquet")
+    t = load_tables(spark, sf_dir, ["customer", "nation", "region"])
+    cust, nat, reg = t["customer"], t["nation"], t["region"]
     t1 = cust.select(
         F.concat(F.lit(f"{ex}c"), F.col("c_custkey")).alias("s"),
         F.lit(f"{ex}inNation").alias("p"),
@@ -769,7 +768,7 @@ def rdf_sparql_modifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from samyama_graph_spark.rdf import RdfStore
 
     ex = "http://ex.org/"
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_tables(spark, sf_dir, ["customer"])["customer"]
     subj = F.concat(F.lit(f"{ex}c"), F.col("c_custkey")).alias("s")
     names = cust.select(
         subj, F.lit(f"{ex}name").alias("p"), F.col("c_name").alias("o"),
@@ -832,7 +831,7 @@ def rdf_sparql_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from samyama_graph_spark.rdf import RdfStore
 
     ex = "http://ex.org/"
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_tables(spark, sf_dir, ["orders"])["orders"]
     subj = F.concat(F.lit(f"{ex}o"), F.col("o_orderkey")).alias("s")
     prio = orders.select(
         subj, F.lit(f"{ex}group").alias("p"),
@@ -899,7 +898,7 @@ def rdf_sparql_term_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from samyama_graph_spark.rdf import RdfStore
 
     ex = "http://ex.org/"
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_tables(spark, sf_dir, ["customer"])["customer"]
     subj = F.concat(F.lit(f"{ex}c"), F.col("c_custkey")).alias("s")
     names = cust.select(
         subj, F.lit(f"{ex}name").alias("p"), F.col("c_name").alias("o"),
@@ -971,7 +970,7 @@ def rdf_sparql_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from samyama_graph_spark.rdf import RdfStore
 
     ex = "http://ex.org/"
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nat = load_tables(spark, sf_dir, ["nation"])["nation"]
     w = Window.partitionBy("n_regionkey").orderBy("n_nationkey")
     nxt = (
         nat.withColumn("nxt", F.lead("n_nationkey").over(w))
@@ -1013,8 +1012,8 @@ def _cn_store(spark: SparkSession, sf_dir: str):
     from samyama_graph_spark.rdf import RdfStore
 
     ex = "http://ex.org/"
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    t = load_tables(spark, sf_dir, ["customer", "nation"])
+    cust, nat = t["customer"], t["nation"]
     t1 = cust.select(
         F.concat(F.lit(f"{ex}c"), F.col("c_custkey")).alias("s"),
         F.lit(f"{ex}inNation").alias("p"),
@@ -1119,7 +1118,7 @@ def scc_nation_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from samyama_graph_spark.algorithms.scc import scc
 
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nat = load_tables(spark, sf_dir, ["nation"])["nation"]
     w = Window.partitionBy("n_regionkey").orderBy("n_nationkey")
     wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     ring = nat.select(
@@ -1188,7 +1187,7 @@ def mst_nation_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from samyama_graph_spark.algorithms.mst import mst
 
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nat = load_tables(spark, sf_dir, ["nation"])["nation"]
     w = Window.partitionBy("n_regionkey").orderBy("n_nationkey")
     wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     ring = (
@@ -1208,7 +1207,7 @@ def mst_nation_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("weight"),
         )
     )
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
+    sup = load_tables(spark, sf_dir, ["supplier"])["supplier"].select(
         F.least(
             F.col("s_suppkey") + F.lit(_S), F.col("s_nationkey") + F.lit(_N)
         ).alias("src"),
@@ -1238,7 +1237,7 @@ def max_flow_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed; only the augmenting-path loop runs driver-side."""
     from samyama_graph_spark.algorithms.flow import max_flow
 
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nat = load_tables(spark, sf_dir, ["nation"])["nation"]
     src_edges = nat.select(F.lit(-1).cast("long").alias("src"),
                            (F.col("n_regionkey") + F.lit(_R)).alias("dst"),
                            F.lit(100.0).alias("capacity")).distinct()

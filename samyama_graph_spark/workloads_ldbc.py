@@ -141,7 +141,7 @@ def ldbc_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
         meta["KNOWS"] = EdgeMeta("Customer", "Customer")
         g = PropertyGraph(
             spark, dict(base.nodes), edges, meta, edges_rev=dict(base.edges_rev)
-        )
+        )._carry_stats_from(base)
         # parquet-derived, never written: safe for lazy compile-time stats
         g.__dict__["_stats_safe"] = True
         per[sf_dir] = g

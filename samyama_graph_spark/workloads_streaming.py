@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from samyama_graph_spark.loaders import read_parquet
 from samyama_graph_spark.streaming.windows import (
     events_stream,
     hourly_windows,
@@ -295,7 +296,7 @@ def streaming_enriched_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = f"{sf_dir}/events.parquet"
     dim = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)[0]
         .select("user_id")
         .distinct()
         .select(

@@ -1018,7 +1018,9 @@ def test_path_closure_releases_previous_call(spark, monkeypatch):
     """The distributed doubling loop pins its rounds; the next call
     releases them first.  Three calls on three different chains leave
     at most one generation of pins (the previous call's persisted RDDs
-    are gone after each call) and each returns the chain's closure."""
+    are gone after each call) and each returns the chain's closure.
+    Chains of 3 to 5 links need two or three doubling rounds each, so
+    every call pins rounds."""
     from samyama_graph_spark import rdf
     from samyama_graph_spark.rdf import _path_closure
 
@@ -1029,7 +1031,7 @@ def test_path_closure_releases_previous_call(spark, monkeypatch):
     monkeypatch.setattr(rdf, "_CLOSURE_DRIVER_GUARD", 0)
     base = rdd_ids()
     previous: set = set()
-    for n, tag in [(20, "a"), (25, "b"), (30, "c")]:
+    for n, tag in [(3, "a"), (4, "b"), (5, "c")]:
         rel = spark.createDataFrame(
             [(f"{tag}{i}", f"{tag}{i + 1}") for i in range(n)],
             "__ps string, __po string",
