@@ -24,10 +24,9 @@ from samyama_graph_spark.datapipe.common import (
     word_shingles,
 )
 
-# Largest normalized-codebook size (k*dim doubles) the vectorized
-# assigner will inline as a SQL-literal fold for its Lloyd-ROUND grid
-# passes; larger codebooks stay on the broadcast+matmul path (see
-# _semdedup_assign_vectorized).
+# Largest normalized-codebook size (k*dim doubles) _assign_clusters
+# inlines as a SQL-literal fold for its Lloyd-ROUND grid passes;
+# larger codebooks stay on the broadcast+matmul path.
 _LITERAL_ROUND_MAX = 16384
 
 
@@ -795,7 +794,7 @@ def semdedup(
     threshold: float = 0.95,
     iters: int = 0,
     seed_ids: "list[int] | None" = None,
-    centroid_mode: str = "auto",
+    centroid_mode: str = "vectorized",
     target_cluster_size: "int | None" = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
@@ -821,24 +820,8 @@ def semdedup(
     group) is a connected-components pass over pairs bounded by dup
     volume.  Returns ``(id, cluster, keep)``.
 
-    ``centroid_mode`` picks how centroids reach the executors:
-
-    - ``'literal'``: k plan-literal arrays, assignment strictly
-      map-only (zero exchanges).  Replays bit-for-bit in the SQL
-      oracle, but the plan grows O(k*dim) — usable to k ≈ a few
-      hundred.
-    - ``'vectorized'``: centroid matrix broadcast to executors, one
-      BLAS matmul + argmax per Arrow batch (``mapInPandas``) —
-      map-only like the literal path AND O(1) plan size like the
-      broadcast path, with none of the broadcast path's n×k
-      joined-row materialization.  The scale default for large k.
-    - ``'broadcast'``: centroids as a broadcast DataFrame + argmax
-      join (one n-row exchange for the per-id max) — bounded plan
-      size, and Lloyd rounds refine centroids fully distributed
-      (never collected); the pure-DataFrame fallback when the k*dim
-      codebook must not live on the driver.
-    - ``'auto'`` (default): literal for k <= 32 (zero-exchange AND
-      SQL-oracle-replayable), vectorized above.
+    ``centroid_mode`` accepts only ``'vectorized'``; the assignment is
+    :func:`_assign_clusters`.
 
     SCALE WARNING — ``k`` must grow with the corpus: the
     within-cluster exact stage is O(n^2 / k) pairs, so a FIXED k makes
@@ -849,33 +832,19 @@ def semdedup(
     k = ceil(n / target) from one count job — the parameterization
     that stays linear as data grows.
     """
-    from samyama_graph_spark.datapipe.similarity import dot, norm
+    from samyama_graph_spark.datapipe.similarity import dot
 
-    if centroid_mode not in ("auto", "literal", "broadcast", "vectorized"):
+    # a one-value keyword: the benchmark's curation stage still passes it
+    if centroid_mode != "vectorized":
         raise ValueError(f"semdedup: unknown centroid_mode {centroid_mode!r}")
-    if target_cluster_size is not None:
-        if k is not None:
-            raise ValueError(
-                "semdedup: pass either k or target_cluster_size, not both"
-            )
-        n_rows = df.count()
-        k = max(1, -(-n_rows // int(target_cluster_size)))
-    elif k is None:
-        raise ValueError("semdedup: k or target_cluster_size required")
-    if centroid_mode == "auto":
-        centroid_mode = "literal" if k <= 32 else "vectorized"
-
-    vec = F.col(vec_col).cast("array<double>")
-    base = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        vec.alias("v"),
-        norm(vec).alias("nrm"),
+    base, k = _kmeans_base(
+        df, vec_col, id_col, k, target_cluster_size, "semdedup"
     )
 
-    assigned = _assign_clusters(base, k, iters, seed_ids, centroid_mode)
+    assigned = _assign_clusters(base, k, iters, seed_ids)
     # three consumers below (both pair legs + the verdict join-back):
-    # without the pin each re-runs the full assignment — for the
-    # vectorized path that is three scan+matmul passes
+    # without the pin each re-runs the full assignment — three
+    # scan+matmul passes
     lifecycle.release(assigned.sparkSession, _OWNER)
     assigned = lifecycle.pin(assigned, _OWNER)
 
@@ -914,20 +883,35 @@ def semdedup(
     )
 
 
-def _assign_clusters(
-    base: DataFrame,
-    k: int,
-    iters: int,
-    seed_ids: "list[int] | None",
-    centroid_mode: str,
-) -> DataFrame:
-    """Mode dispatch for the spherical k-means assignment shared by
-    :func:`semdedup` and :func:`kmeans` — ``base`` is (id, v, nrm)."""
-    if centroid_mode == "broadcast":
-        return _semdedup_assign_broadcast(base, k, iters, seed_ids)
-    if centroid_mode == "vectorized":
-        return _semdedup_assign_vectorized(base, k, iters, seed_ids)
-    return _semdedup_assign_literal(base, k, iters, seed_ids)
+def _kmeans_base(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    k: "int | None",
+    target_cluster_size: "int | None",
+    op: str,
+) -> "tuple[DataFrame, int]":
+    """The ``(id, v, nrm)`` frame :func:`_assign_clusters` reads, and
+    k — given, or ``ceil(n / target_cluster_size)`` from one count job.
+    ``op`` names the caller in its errors."""
+    from samyama_graph_spark.datapipe.similarity import norm
+
+    if target_cluster_size is not None:
+        if k is not None:
+            raise ValueError(
+                f"{op}: pass either k or target_cluster_size, not both"
+            )
+        n_rows = df.count()
+        k = max(1, -(-n_rows // int(target_cluster_size)))
+    elif k is None:
+        raise ValueError(f"{op}: k or target_cluster_size required")
+    vec = F.col(vec_col).cast("array<double>")
+    base = df.select(
+        F.col(id_col).cast("long").alias("id"),
+        vec.alias("v"),
+        norm(vec).alias("nrm"),
+    )
+    return base, k
 
 
 def kmeans(
@@ -937,7 +921,6 @@ def kmeans(
     k: "int | None" = None,
     iters: int = 2,
     seed_ids: "list[int] | None" = None,
-    centroid_mode: str = "auto",
     target_cluster_size: "int | None" = None,
 ) -> DataFrame:
     """Spherical k-means over an embedding column: ``(id, cluster)``.
@@ -951,133 +934,47 @@ def kmeans(
     lower cluster id, Lloyd rounds recompute the (cluster, dim) mean
     grid distributed (empty clusters keep their centroid).
 
-    Scale shape (per ``centroid_mode`` — see :func:`semdedup`):
-    assignment is map-only in every mode; each Lloyd round adds one
-    grid aggregate whose output is k x dim floats.  Pass
-    ``target_cluster_size`` (with ``k=None``) to derive k from one
-    count job — the parameterization that keeps downstream
-    per-cluster work flat as the corpus grows.
+    Scale shape (see :func:`_assign_clusters`): assignment is
+    map-only; each Lloyd round adds one grid aggregate whose output is
+    k x dim floats.  Pass ``target_cluster_size`` (with ``k=None``) to
+    derive k from one count job — the parameterization that keeps
+    downstream per-cluster work flat as the corpus grows.
     """
-    if centroid_mode not in ("auto", "literal", "broadcast", "vectorized"):
-        raise ValueError(f"kmeans: unknown centroid_mode {centroid_mode!r}")
-    if target_cluster_size is not None:
-        if k is not None:
-            raise ValueError(
-                "kmeans: pass either k or target_cluster_size, not both"
-            )
-        n_rows = df.count()
-        k = max(1, -(-n_rows // int(target_cluster_size)))
-    elif k is None:
-        raise ValueError("kmeans: k or target_cluster_size required")
-    if centroid_mode == "auto":
-        centroid_mode = "literal" if k <= 32 else "vectorized"
-    from samyama_graph_spark.datapipe.similarity import norm
-
-    vec = F.col(vec_col).cast("array<double>")
-    base = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        vec.alias("v"),
-        norm(vec).alias("nrm"),
+    base, k = _kmeans_base(
+        df, vec_col, id_col, k, target_cluster_size, "kmeans"
     )
-    out = _assign_clusters(base, k, iters, seed_ids, centroid_mode)
+    out = _assign_clusters(base, k, iters, seed_ids)
     return out.select("id", F.col("cluster").cast("long").alias("cluster"))
 
 
-def _semdedup_assign_literal(
+def _assign_clusters(
     base: DataFrame, k: int, iters: int, seed_ids: "list[int] | None"
 ) -> DataFrame:
-    """Centroids as k plan-literal arrays: assignment is strictly
-    map-only (zero exchanges) and the whole step replays bit-for-bit
-    in the DuckDB oracle.  Plan size is O(k*dim) — the k <= ~hundreds
-    regime."""
-    from samyama_graph_spark.datapipe.similarity import dot
+    """Spherical k-means assignment shared by :func:`semdedup` and
+    :func:`kmeans`: ``base`` is (id, v, nrm), and the result adds an int
+    ``cluster``.  Centroids seed from the ``k`` lowest-id vectors (or
+    ``seed_ids``) and live on the driver as a k×dim numpy codebook,
+    like the reference's PQ codebooks (vector/index.rs).
 
-    if seed_ids is None:
-        seeds = base.orderBy("id").limit(k).collect()
-    else:
-        want = base.filter(F.col("id").isin([int(s) for s in seed_ids]))
-        seeds = sorted(want.collect(), key=lambda r: r["id"])
-    cents = [list(r["v"]) for r in seeds]
-
-    def assign(frame: DataFrame, centroids: "list[list[float]]") -> DataFrame:
-        # nearest centroid by cosine, ties to the LOWER cluster id
-        # (replayable): one struct-max over k broadcast literals
-        sims = F.array(
-            *[
-                F.struct(
-                    (
-                        dot(
-                            F.col("v"),
-                            F.array(*[F.lit(float(x)) for x in c]),
-                        )
-                        / (
-                            F.col("nrm")
-                            * F.lit(
-                                float(sum(x * x for x in c) ** 0.5) or 1.0
-                            )
-                        )
-                    ).alias("cos"),
-                    F.lit(-ci).alias("negc"),
-                )
-                for ci, c in enumerate(centroids)
-            ]
-        )
-        return frame.withColumn(
-            "cluster", (-F.array_max(sims)["negc"]).cast("int")
-        )
-
-    for _ in range(iters):
-        assigned = assign(base, cents)
-        grid = (
-            assigned.select("cluster", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        by_c: dict = {}
-        for r in grid:
-            by_c.setdefault(r["cluster"], {})[r["pos"]] = r["s"] / r["n"]
-        cents = [
-            [m[p] for p in sorted(m)] if (m := by_c.get(ci)) else c
-            for ci, c in enumerate(cents)
-        ]
-    return assign(base, cents)
-
-
-def _semdedup_assign_vectorized(
-    base: DataFrame, k: int, iters: int, seed_ids: "list[int] | None"
-) -> DataFrame:
-    """Centroids as a driver-held numpy matrix shipped via
-    ``sparkContext.broadcast``; assignment is one BLAS matmul + argmax
-    per Arrow batch inside ``mapInPandas`` — map-only (zero exchanges,
-    like the literal path), O(1) plan size in k (like the broadcast
-    DataFrame path), and none of the broadcast path's n×k joined-row
-    materialization: at the paper's k ≈ 10^4-10^5 the per-row work is
-    a vectorized dot-product row, not k SQL expression evaluations.
-    The k×dim codebook on the driver mirrors the reference's PQ
-    codebooks (vector/index.rs).
-
-    Assignment rule parity: cosine argmax with ties to the LOWER
-    cluster id — row-norm division cancels in argmax, centroid norms
+    The final assignment ships the normalized codebook through
+    ``sparkContext.broadcast`` and runs one BLAS matmul + argmax per
+    Arrow batch inside ``mapInPandas``: map-only (zero exchanges), and
+    the plan size does not grow with k.  Cosine argmax with ties to the
+    LOWER cluster id: row norms cancel in the argmax, centroid norms
     are divided out of the matrix once, and numpy argmax takes the
-    first (lowest-index) maximum, the same tiebreak as the literal
-    path's struct array_max.  Lloyd rounds recompute the (cluster,
-    pos) mean grid distributed and collect k×dim floats per round —
-    exactly the codebook the driver already holds; empty clusters
-    keep their previous centroid (the literal path's rule).
+    first (lowest-index) maximum.
 
-    Lloyd-round grid passes (r12): when the normalized codebook is
-    small enough to ride a SQL literal (k*dim <= 16384 — the literal
-    mode's own regime), the ROUND assignment uses the ivf_assign-style
-    single-fold argmax expression instead of mapInPandas — the grid
-    job then runs entirely in JVM codegen with no Python workers and
-    no per-round broadcast (interleaved A/B at sf0.1, k=8 x dim 64:
-    median 2.24 s -> 1.58 s for the kmeans gate entry; assignments
-    bit-identical — same strict-> tie-break, verified 0/2000 diffs).
-    Above the threshold every pass stays on the broadcast+matmul path
-    (a 10^5 x dim literal would be a ~100 MB SQL string).  The FINAL
-    assignment always uses the vectorized path — it is the operator's
-    contract and the returned plan's scale shape."""
+    Each Lloyd round recomputes the (cluster, pos) mean grid
+    distributed and collects its k×dim floats to the driver; empty
+    clusters keep their previous centroid.  A round assigns by the
+    same rule.  When the normalized codebook fits a SQL literal
+    (k*dim <= ``_LITERAL_ROUND_MAX``) it is the single-fold argmax
+    expression of ``similarity.ivf_assign`` with a strict ``>``, so the
+    grid job runs in JVM codegen with no Python workers and no
+    per-round broadcast (interleaved A/B at sf0.1, k=8 x dim 64: median
+    2.24 s -> 1.58 s for the kmeans gate entry; 0/2000 assignments
+    differ).  Larger codebooks assign each round by the broadcast
+    matmul (a 10^5 × dim literal would be a ~100 MB SQL string)."""
     import numpy as np
 
     if seed_ids is None:
@@ -1166,81 +1063,6 @@ def _semdedup_assign_vectorized(
             dtype=np.float64,
         )
     return assign(base, C)[0]
-
-
-def _semdedup_assign_broadcast(
-    base: DataFrame, k: int, iters: int, seed_ids: "list[int] | None"
-) -> DataFrame:
-    """Centroids as a broadcast DataFrame + argmax join: plan size is
-    O(1) in k (the centroid payload rides the broadcast, like the
-    reference's stored codebooks, vector/index.rs), so the paper's
-    k ≈ 10^4-10^5 regime works.  Assignment costs one n-row exchange
-    (the per-id max is partially aggregated map-side); Lloyd rounds
-    recompute centroids fully distributed — they are never collected
-    to the driver."""
-    from pyspark.sql import Window
-
-    from samyama_graph_spark.datapipe.similarity import dot, norm
-
-    if seed_ids is None:
-        seedsrc = base.orderBy("id").limit(k)
-    else:
-        seedsrc = base.filter(F.col("id").isin([int(s) for s in seed_ids]))
-    # global row_number over k<=10^5 seed rows: single-partition by
-    # construction and bounded by k, not by data volume
-    w = Window.orderBy("id")
-    cents = seedsrc.select(
-        (F.row_number().over(w) - 1).alias("cluster"),
-        F.col("v").alias("cv"),
-    )
-
-    def assign(frame: DataFrame, cents_df: DataFrame) -> DataFrame:
-        cn = cents_df.select(
-            "cluster", "cv", norm(F.col("cv")).alias("cnrm")
-        )
-        scored = frame.crossJoin(F.broadcast(cn))
-        sim = dot(F.col("v"), F.col("cv")) / (
-            F.col("nrm")
-            * F.when(F.col("cnrm") == 0.0, F.lit(1.0)).otherwise(F.col("cnrm"))
-        )
-        # ties to the LOWER cluster id via the negc tiebreak — same
-        # rule as the literal path's struct array_max
-        best = scored.groupBy("id").agg(
-            F.max(
-                F.struct(sim.alias("cos"), (-F.col("cluster")).alias("negc"))
-            ).alias("b"),
-            F.first("v").alias("v"),
-            F.first("nrm").alias("nrm"),
-        )
-        return best.select(
-            "id", "v", "nrm", (-F.col("b.negc")).cast("int").alias("cluster")
-        )
-
-    for _ in range(iters):
-        assigned = assign(base, cents)
-        grid = (
-            assigned.select("cluster", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg((F.sum("val") / F.count(F.lit(1))).alias("m"))
-        )
-        new = grid.groupBy("cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("cv")
-        )
-        # clusters that lost every member keep their previous centroid
-        # (the literal path's rule); k-row frame, lineage cut per round
-        cents = (
-            cents.alias("o")
-            .join(new.alias("n"), "cluster", "left")
-            .select(
-                "cluster",
-                F.coalesce(F.col("n.cv"), F.col("o.cv")).alias("cv"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return assign(base, cents)
 
 
 def _components_from_pairs(

@@ -2086,7 +2086,7 @@ _CLOSURE_OWNER = "rdf.path_closure"
 _CLOSURE_DRIVER_GUARD = 50_000
 
 
-def _path_closure(rel: DataFrame, max_rounds: int = 20) -> DataFrame:
+def _path_closure(rel: DataFrame) -> DataFrame:
     """Transitive closure (distinct node pairs) by path doubling: each
     round joins the reachable-pair set with itself, so round r covers
     paths up to 2^r hops — O(log diameter) rounds, convergence by pair
@@ -2137,7 +2137,7 @@ def _path_closure(rel: DataFrame, max_rounds: int = 20) -> DataFrame:
         # distributed doubling loop below
     lifecycle.release(rel.sparkSession, _CLOSURE_OWNER)
     cand, n = base, -1
-    for _ in range(max_rounds + 1):
+    while True:
         paths = lifecycle.pin(cand.distinct(), _CLOSURE_OWNER, eager=False)
         m = paths.count()
         if m == n:

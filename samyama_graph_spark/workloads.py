@@ -545,121 +545,47 @@ def load_all_workloads() -> dict[str, QuerySpec]:
 # window — one row per SURVEY.md §2 operator family and per
 # datapipe/streaming operator, duplicates merged.  Everything NOT listed
 # here stays in REGISTRY (pytest parity tests + bench still run it);
-# only the driver-facing view is restricted.
+# only the driver-facing view is restricted.  Membership and order are
+# frozen: the driver compares each run's window with its last record,
+# and a row that leaves it reads as a dropped query.
 # ---------------------------------------------------------------------------
 
 GATE_ORDER: list[str] = [
-    # scans / point lookups / metadata counts (§2 #1-5).  Round-10
-    # rotation: node_by_id (point read; scan family stays live via
-    # node_scan_filter and every Cypher row's label scans),
-    # cypher_introspection (job-free SHOW projection), and
-    # knn_lsh_top10 (ANN family stays live via knn_ivf_top10 +
-    # cypher_knn) left the gate for the three r9 curation operators
-    # (dedup_lines_corpuswide, gopher_quality_rules,
-    # source_quota_sample) — first-hit operators for a real curation
-    # user.  All rotated-out rows stay REGISTRY+pytest DuckDB-oracled.
     "node_scan_filter",
     "label_edge_counts",
-    # Cypher engine end-to-end (§2 #6-33, 41-47, 60-61).  Round-9
-    # rotation: four narrow Cypher-twin rows left the gate for the new
-    # r8 curation operators (below) — their operator families keep
-    # LIVE gate coverage through richer rows: OPTIONAL MATCH via
-    # ldbc_ic1/ic10 (left-join legs with real rows), EXISTS/NOT EXISTS
-    # semi/anti via ldbc_ic10, WITH-barrier + UNWIND via
-    # cypher_call_subquery and the write pipeline's UNWIND $rows MERGE
-    # ingestion, CASE/expression projection via ldbc_bi4 and
-    # text_metrics; all four rotated-out rows (cypher_optional_match,
-    # cypher_exists, cypher_with_unwind, cypher_case_projection) stay
-    # REGISTRY+pytest DuckDB-oracled.
     "cypher_flagship",
     "cypher_two_hop_agg",
-    # UNION family: BI-1 unions two COMPLETE aggregate queries (the
-    # richer exercise of the same executor path — the reference parses
-    # but cannot execute it, executor/mod.rs:2828); the plain
-    # cypher_union row stays pytest-oracled
     "ldbc_bi1_posting_summary",
     "order_skip_limit",
     "agg_stats",
     "cypher_var_length",
     "cypher_shortest_paths",
     "cypher_call_subquery",
-    # WCOJ: the worst-case-optimal triangle plan (leapfrog.rs:265)
-    # through the full Cypher stack; replaced cypher_pattern_
-    # comprehension (expression forms keep the case_projection +
-    # exists gate rows; pattern comprehension stays pytest-oracled)
     "cypher_wcoj_triangle",
     "cypher_write_pipeline",
-    # r12 rotation: cypher_knn left the gate to restore
-    # text_fingerprints (the r11 rotation dropped a gate query without
-    # reconciling it with the driver; the fingerprint family returns to
-    # live gate coverage).  cypher_knn is the Cypher twin of
-    # knn_ivf_top10 — the ANN family keeps live gate coverage through
-    # that row — and it stays REGISTRY+pytest DuckDB-oracled AND stays
-    # a timed bench entry via BENCH_EXTRAS (the bench line never drops
-    # a key; the gate window alone is contract-capped at 50).
-    # LDBC SNB golden corpus on the TPC-H projection (benches/
-    # ldbc_benchmark.rs, ldbc_bi_benchmark.rs; the other 13 IS/IC/BI
-    # entries are pytest-oracled in workloads_ldbc.py).  Families they
-    # replaced: cypher_not_exists (cypher_exists row keeps the
-    # semi/anti family; ic10 gates NOT EXISTS with live rows),
-    # knn_join_top5 (lsh+ivf rows keep ANN; the knn-join twin stays in
-    # pytest), multimodal_features (png_stats is the richer decode row)
     "ldbc_ic1_transitive_name",
     "ldbc_ic10_recommendation",
     "ldbc_bi4_popular_moderators",
-    # LLM-data-pipeline: dedup + ANN (+ §2 #46 family)
     "dedup_exact",
     "minhash_lsh_dedup",
     "ngram_jaccard_block",
     "simhash_dedup",
-    # r9 rotation in: exact substring-span dedup (Lee et al. 2022's
-    # span-level signal, oracled shingle-join + count) and the
-    # spherical k-means curation partition (seeds + one Lloyd round
-    # replayed in SQL, every per-vector cluster id hash-checked)
     "substring_span_dedup",
     "embedding_kmeans",
-    # embedding-dedup family: SemDeDup is the richer row (deterministic
-    # clustering + exact within-cluster cosine + survivor verdicts, all
-    # replayed); the LSH-bucketed pair miner stays pytest-oracled
     "semdedup_verdicts",
     "knn_ivf_top10",
-    # r10 rotation in: the three r9 curation operators — CCNet-style
-    # corpus-wide line dedup (every rewritten text hash-checked),
-    # the Gopher quality rule set (Rae et al. table A1, every metric
-    # replayed in DuckDB), and per-source quotas (C4/RefinedWeb host
-    # caps, best-first rank per source)
     "dedup_lines_corpuswide",
     "gopher_quality_rules",
     "source_quota_sample",
-    # text analysis (metrics entry also carries normalization columns);
-    # r9 rotation in: CCNet head/middle/tail quality-quantile
-    # bucketing (exact percentile boundaries + per-doc buckets
-    # hash-checked; BPE merge training stays pytest-pinned — its
-    # per-round argmax is not SQL-expressible).
-    # r11 rotation: dsir_weights entered the gate (DSIR importance
-    # resampling, Xie et al. 2023 — data selection is a first-hit
-    # operator for a pretraining-data user); r12 restores
-    # text_fingerprints (dropped by the r11 rotation without driver
-    # reconciliation) by merging the cypher_knn/knn_ivf_top10
-    # duplicate pair instead (see the Cypher block above)
     "text_metrics",
     "text_fingerprints",
     "dsir_weights",
     "quality_quantile_buckets",
-    # training-data pipeline end-to-end: gate -> exact dedup -> MinHash
-    # near-dup closure -> split, composed oracle (subsumes the
-    # dedup_clusters closure row and the doc_split_sample split row,
-    # both of which stay pytest-oracled)
     "corpus_pipeline_e2e",
     "sequence_packing",
-    # temporal joins (as-of; the range-join twin stays pytest-oracled)
     "events_asof_join",
-    # multimodal
     "multimodal_png_stats",
-    # PCA (§2 #59) — the oracled slot; full-dim twin is pytest-checked
     "pca_2d_closed_form",
-    # graph algorithms (§2 #48-58; #16 var-length gated via the Cypher
-    # rows above — var_length_reachability is its DF-API pytest twin)
     "bfs_layers",
     "wcc_placed_components",
     "pagerank_top20",
@@ -669,20 +595,9 @@ GATE_ORDER: list[str] = [
     "scc_nation_rings",
     "mst_nation_rings",
     "max_flow_layered",
-    # or.solve: the portfolio row value-checks TWELVE solver family
-    # members (incl. Jaya at or_solve_convex's exact config) against
-    # the same analytic optimum; the single-algorithm row stays pytest
     "or_solve_portfolio",
-    # RDF / SPARQL (§2 #62): property paths (transitive closure
-    # ex:next+ composed in a /-sequence, oracled by a DuckDB recursive
-    # CTE) is the deepest machinery; r9 rotation adds CONSTRUCT
-    # (template instantiation + distinct triples, full SQL oracle);
-    # rdf_sparql_bgp, rdf_sparql_modifiers (FILTER/OPTIONAL/ORDER/
-    # OFFSET) and rdf_sparql_aggregates (UNION groups + GROUP BY
-    # COUNT/SUM/MAX) stay pytest-oracled
     "rdf_sparql_paths",
     "rdf_sparql_construct",
-    # structured streaming
     "streaming_windows",
     "streaming_stateful_totals",
     "streaming_dedup",
@@ -693,8 +608,7 @@ GATE_ORDER: list[str] = [
 # record is additions-only — a key that vanishes reads as a dropped
 # query).  Correctness for these stays pytest-oracled in REGISTRY.
 BENCH_EXTRAS: list[str] = [
-    # r12: merged out of the gate for text_fingerprints' return; the
-    # DF-API twin knn_ivf_top10 keeps the ANN family's gate row
+    # its DF-API twin knn_ivf_top10 is the ANN family's gate row
     "cypher_knn",
 ]
 

@@ -1233,23 +1233,13 @@ def semdedup_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, pair mining AND the closure, so every per-row
     (cluster, keep) verdict is hash-checked.  The fixed-k=16 twin
     (the documented quadratic trap) stays pytest-oracled as
-    semdedup_fixed_k.
-
-    centroid_mode='vectorized' (the scale path: broadcast numpy
-    codebook + mapInPandas matmul argmax): assignment math is
-    identical to the plan-literal form the oracle replays — argmax of
-    dot/(|v||c|) with ties to the lower cluster id — and a large-k
-    literal plan's O(k*dim)-literal expression costs more in Catalyst
-    analysis per run than the whole query executes (measured ~5 s vs
-    ~2.7 s construction at sf0.1 with k=16); hash-verified vs the SQL
-    oracle at sf0.01 and vs the literal path at sf0.001
-    (tests/test_datapipe)."""
+    semdedup_fixed_k.  The oracle's assignment rule is the operator's:
+    argmax of dot/(|v||c|), ties to the lower cluster id."""
     from samyama_graph_spark.datapipe.dedup import semdedup
 
     out = semdedup(
         _embs(spark, sf_dir), "embedding", "vec_id", k=None,
-        threshold=0.35, centroid_mode="vectorized",
-        target_cluster_size=_SEMDEDUP_TARGET,
+        threshold=0.35, target_cluster_size=_SEMDEDUP_TARGET,
     )
     return out.select("id", F.col("cluster").cast("long"), "keep")
 
@@ -1268,7 +1258,6 @@ def semdedup_fixed_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = semdedup(
         _embs(spark, sf_dir), "embedding", "vec_id", k=16, threshold=0.35,
-        centroid_mode="vectorized",
     )
     return out.select("id", F.col("cluster").cast("long"), "keep")
 
@@ -1320,15 +1309,14 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spherical k-means as a first-class curation operator (the
     SemDeDup partition, exposed): k=8 lowest-id seeds, ONE distributed
     Lloyd round (grid-mean centroid update; empty clusters keep their
-    seed), cosine-argmax re-assignment on the vectorized
-    (broadcast-codebook mapInPandas) path.  The oracle replays seeds,
-    first assignment, the mean update, and the final assignment —
-    every per-vector cluster id is hash-checked."""
+    seed), cosine-argmax re-assignment (broadcast-codebook
+    mapInPandas).  The oracle replays seeds, first assignment, the mean
+    update, and the final assignment — every per-vector cluster id is
+    hash-checked."""
     from samyama_graph_spark.datapipe.dedup import kmeans
 
     return kmeans(
-        _embs(spark, sf_dir), "embedding", "vec_id",
-        k=8, iters=1, centroid_mode="vectorized",
+        _embs(spark, sf_dir), "embedding", "vec_id", k=8, iters=1
     )
 
 

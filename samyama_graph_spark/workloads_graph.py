@@ -962,9 +962,11 @@ def rdf_sparql_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection: ``ex:next+`` transitive closure composed in a sequence
     with a name lookup (``ex:next+/ex:name``).  Exceeds the reference
     (sparql/executor.rs:33-54 is a stub); the oracle is DuckDB's
-    recursive CTE over the same successor edges.  Closure runs as a
-    distributed path-doubling join — O(log chain-length) rounds,
-    distinct pairs per round (rdf.py:_path_closure)."""
+    recursive CTE over the same successor edges.  The successor
+    relation is 20 pairs at every shipped scale factor, far under
+    ``rdf._CLOSURE_DRIVER_GUARD``, so the closure settles on the driver
+    in ``rdf._closure_pairs_vec``; the distributed path-doubling join
+    (rdf.py:_path_closure) runs only above that guard."""
     from pyspark.sql import Window
 
     from samyama_graph_spark.rdf import RdfStore

@@ -702,9 +702,15 @@ def test_unigram_logprob_ranks_outliers_low(spark):
 
 
 def test_semdedup_lloyd_matches_numpy(spark):
-    """semdedup with Lloyd refinement (iters>0) against a pure-numpy
-    reference on planted clusters: same assignments, same drop set."""
+    """semdedup against a pure-numpy reference, with and without Lloyd
+    refinement: same assignments, same drop set.  Inputs: planted
+    clusters (one planted duplicate pair), and the sf0.001 embeddings
+    (500 x 64) at k=16 and k=256 — k*dim stays under
+    _LITERAL_ROUND_MAX, so their rounds run the literal fold."""
     import numpy as np
+
+    from samyama_graph_spark.datapipe.dedup import semdedup
+    from samyama_graph_spark.loaders import load_tables
 
     rng = np.random.default_rng(7)
     centers = rng.normal(0, 10, (3, 8))
@@ -716,151 +722,79 @@ def test_semdedup_lloyd_matches_numpy(spark):
             vid += 1
     # plant one exact-ish duplicate pair inside cluster 0
     rows.append((vid, (np.array(rows[0][1]) + 1e-6).tolist()))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    planted = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    )
+    emb = load_tables(spark, "/root/testdata/sf0.001", ["embeddings"])[
+        "embeddings"
+    ]
 
-    from samyama_graph_spark.datapipe.dedup import semdedup
-
-    out = {
-        r["id"]: (r["cluster"], r["keep"])
-        for r in semdedup(
-            df, "embedding", "vec_id", k=3, threshold=0.9999, iters=2
-        ).collect()
-    }
-
-    # numpy reference: identical seed init (3 lowest ids), 2 Lloyd
-    # rounds with cosine assignment (ties -> lower cluster), then
-    # within-cluster cosine pairs >= threshold, min-id survivor
-    X = np.array([r[1] for r in rows])
-    ids = np.array([r[0] for r in rows])
-    C = X[:3].copy()
-
-    def assign(C):
-        sims = (X @ C.T) / (
-            np.linalg.norm(X, axis=1)[:, None] * np.linalg.norm(C, axis=1)
+    def reference(df, k, iters, threshold):
+        # numpy reference: identical seed init (k lowest ids), Lloyd
+        # rounds with cosine assignment (ties -> lower cluster; empty
+        # clusters keep their centroid), then within-cluster cosine
+        # pairs >= threshold and the min-id survivor of each component
+        got = sorted(
+            (r["vec_id"], list(r["embedding"]))
+            for r in df.select("vec_id", "embedding").collect()
         )
-        # argmax with ties to the lower index (numpy argmax already is)
-        return sims.argmax(1)
+        ids = np.array([i for i, _ in got])
+        X = np.array([v for _, v in got], dtype=np.float64)
+        C = X[:k].copy()
 
-    for _ in range(2):
+        def assign(C):
+            sims = (X @ C.T) / (
+                np.linalg.norm(X, axis=1)[:, None]
+                * np.linalg.norm(C, axis=1)
+            )
+            # argmax with ties to the lower index (numpy argmax already is)
+            return sims.argmax(1)
+
+        for _ in range(iters):
+            a = assign(C)
+            for c in range(k):
+                if (a == c).any():
+                    C[c] = X[a == c].mean(0)
         a = assign(C)
-        for c in range(3):
-            if (a == c).any():
-                C[c] = X[a == c].mean(0)
-    a = assign(C)
-    drop = set()
-    for c in range(3):
-        members = ids[a == c]
-        M = X[a == c]
-        n = np.linalg.norm(M, axis=1)
-        S = (M @ M.T) / np.outer(n, n)
-        for i in range(len(members)):
-            for j in range(i + 1, len(members)):
-                if S[i, j] >= 0.9999:
-                    drop.add(int(max(members[i], members[j])))
-    for vid_, (cl, keep) in out.items():
-        assert cl == int(a[list(ids).index(vid_)])
-        assert keep == (vid_ not in drop)
-    assert drop, "test must exercise the drop path"
+        parent = {int(i): int(i) for i in ids}
 
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
 
-def test_semdedup_broadcast_matches_literal(spark):
-    """The broadcast-centroid assignment path (the k ~ 10^4-10^5 scale
-    route) must produce the identical verdict set as the plan-literal
-    path at the same k, with and without Lloyd refinement."""
-    from samyama_graph_spark.datapipe.dedup import semdedup
-    from samyama_graph_spark.loaders import load_tables
-
-    emb = load_tables(spark, "/root/testdata/sf0.001", ["embeddings"])[
-        "embeddings"
-    ]
-    for iters in (0, 2):
-        lit = {
-            (r["id"], r["cluster"], r["keep"])
-            for r in semdedup(
-                emb, "embedding", "vec_id", k=16, threshold=0.95,
-                iters=iters, centroid_mode="literal",
-            ).collect()
-        }
-        bc = {
-            (r["id"], r["cluster"], r["keep"])
-            for r in semdedup(
-                emb, "embedding", "vec_id", k=16, threshold=0.95,
-                iters=iters, centroid_mode="broadcast",
-            ).collect()
-        }
-        assert bc == lit and len(lit) > 0, iters
-
-
-def test_semdedup_broadcast_scales_in_k(spark):
-    """At k=256 the broadcast path must (a) keep the assignment plan
-    size bounded — no O(k*dim) literal blow-up — and (b) execute with
-    every row assigned to a real cluster."""
-    from samyama_graph_spark.datapipe.dedup import (
-        _semdedup_assign_broadcast,
-        _semdedup_assign_literal,
-        semdedup,
-    )
-    from samyama_graph_spark.datapipe.similarity import norm
-    from samyama_graph_spark.loaders import load_tables
-
-    emb = load_tables(spark, "/root/testdata/sf0.001", ["embeddings"])[
-        "embeddings"
-    ]
-    vec = F.col("embedding").cast("array<double>")
-    base = emb.select(
-        F.col("vec_id").cast("long").alias("id"),
-        vec.alias("v"),
-        norm(vec).alias("nrm"),
-    )
-    k = 256
-    bc_plan = str(
-        _semdedup_assign_broadcast(base, k, 0, None)
-        ._jdf.queryExecution().optimizedPlan()
-    )
-    lit_plan = str(
-        _semdedup_assign_literal(base, k, 0, None)
-        ._jdf.queryExecution().optimizedPlan()
-    )
-    # the literal plan embeds k*dim floats; the broadcast plan must be
-    # an order of magnitude smaller and independent of k
-    assert len(bc_plan) < len(lit_plan) / 10, (len(bc_plan), len(lit_plan))
-    out = semdedup(
-        emb, "embedding", "vec_id", k=k, threshold=0.95,
-        centroid_mode="broadcast",
-    )
-    rows = out.collect()
-    n_emb = emb.count()
-    assert len(rows) == n_emb
-    assert all(0 <= r["cluster"] < k for r in rows)
-
-
-def test_semdedup_vectorized_matches_broadcast_and_literal(spark):
-    """The mapInPandas matmul assignment (the large-k constant-factor
-    fix over the broadcast DataFrame path) must produce identical
-    verdicts to both existing paths at k=16, and to the broadcast path
-    at k=256, with and without Lloyd refinement."""
-    from samyama_graph_spark.datapipe.dedup import semdedup
-    from samyama_graph_spark.loaders import load_tables
-
-    emb = load_tables(spark, "/root/testdata/sf0.001", ["embeddings"])[
-        "embeddings"
-    ]
-
-    def verdicts(k, iters, mode):
+        for c in range(k):
+            members = ids[a == c]
+            M = X[a == c]
+            n = np.linalg.norm(M, axis=1)
+            S = (M @ M.T) / np.outer(n, n)
+            for i in range(len(members)):
+                for j in range(i + 1, len(members)):
+                    if S[i, j] >= threshold:
+                        ri = find(int(members[i]))
+                        rj = find(int(members[j]))
+                        parent[max(ri, rj)] = min(ri, rj)
         return {
-            (r["id"], r["cluster"], r["keep"])
-            for r in semdedup(
-                emb, "embedding", "vec_id", k=k, threshold=0.95,
-                iters=iters, centroid_mode=mode,
-            ).collect()
+            int(i): (int(c), find(int(i)) == int(i)) for i, c in zip(ids, a)
         }
 
-    for iters in (0, 2):
-        vec = verdicts(16, iters, "vectorized")
-        assert vec == verdicts(16, iters, "literal"), iters
-        assert vec == verdicts(16, iters, "broadcast"), iters
-        assert len(vec) > 0
-    assert verdicts(256, 2, "vectorized") == verdicts(256, 2, "broadcast")
+    for df, k, iters, threshold, must_drop in (
+        (planted, 3, 2, 0.9999, True),
+        (emb, 16, 0, 0.95, False),
+        (emb, 16, 2, 0.95, False),
+        (emb, 256, 2, 0.95, False),
+    ):
+        out = {
+            r["id"]: (r["cluster"], r["keep"])
+            for r in semdedup(
+                df, "embedding", "vec_id", k=k, threshold=threshold,
+                iters=iters,
+            ).collect()
+        }
+        want = reference(df, k, iters, threshold)
+        assert out == want, (k, iters)
+        # the planted input must exercise the drop path
+        assert not must_drop or not all(keep for _, keep in out.values())
 
 
 def test_vectorized_lloyd_round_literal_matches_broadcast_path(
@@ -882,8 +816,7 @@ def test_vectorized_lloyd_round_literal_matches_broadcast_path(
         return {
             (r["id"], r["cluster"])
             for r in dd.kmeans(
-                emb, "embedding", "vec_id", k=8, iters=2,
-                centroid_mode="vectorized",
+                emb, "embedding", "vec_id", k=8, iters=2
             ).collect()
         }
 
@@ -896,10 +829,7 @@ def test_vectorized_lloyd_round_literal_matches_broadcast_path(
 def test_semdedup_vectorized_scales_in_k(spark):
     """k=4096 smoke: plan size stays O(1) in k (no literal blow-up)
     and every row lands in a real cluster."""
-    from samyama_graph_spark.datapipe.dedup import (
-        _semdedup_assign_vectorized,
-        semdedup,
-    )
+    from samyama_graph_spark.datapipe.dedup import _assign_clusters, semdedup
     from samyama_graph_spark.datapipe.similarity import norm
     from samyama_graph_spark.loaders import load_tables
 
@@ -913,20 +843,19 @@ def test_semdedup_vectorized_scales_in_k(spark):
         norm(vec).alias("nrm"),
     )
     small = str(
-        _semdedup_assign_vectorized(base, 8, 0, None)
+        _assign_clusters(base, 8, 0, None)
         ._jdf.queryExecution().optimizedPlan()
     )
     n_emb = emb.count()
     k = min(4096, n_emb)
     big = str(
-        _semdedup_assign_vectorized(base, k, 0, None)
+        _assign_clusters(base, k, 0, None)
         ._jdf.queryExecution().optimizedPlan()
     )
     # centroids ride the runtime broadcast, never the plan
     assert len(big) < 2 * len(small), (len(small), len(big))
     rows = semdedup(
-        emb, "embedding", "vec_id", k=k, threshold=0.95,
-        centroid_mode="vectorized",
+        emb, "embedding", "vec_id", k=k, threshold=0.95
     ).collect()
     assert len(rows) == n_emb
     assert all(0 <= r["cluster"] < k for r in rows)
@@ -1072,6 +1001,8 @@ def test_semdedup_target_cluster_size(spark):
         semdedup(emb, "embedding", "vec_id", k=4, target_cluster_size=9)
     with _pytest.raises(ValueError, match="required"):
         semdedup(emb, "embedding", "vec_id", k=None)
+    with _pytest.raises(ValueError, match="centroid_mode"):
+        semdedup(emb, "embedding", "vec_id", centroid_mode="literal")
 
 
 def test_substring_span_pairs_planted(spark):
@@ -1292,8 +1223,8 @@ def test_bpe_encode_roundtrip_and_parity(spark):
 
 def test_kmeans_first_class(spark):
     """kmeans (the SemDeDup partition exposed as an operator): numpy
-    parity on planted clusters, literal/vectorized mode parity, and
-    the target_cluster_size parameterization."""
+    parity on planted clusters, and the target_cluster_size
+    parameterization."""
     import numpy as np
 
     from samyama_graph_spark.datapipe.dedup import kmeans
@@ -1308,21 +1239,11 @@ def test_kmeans_first_class(spark):
             vid += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    lit = {
+    got = {
         r["id"]: r["cluster"]
-        for r in kmeans(
-            df, "embedding", "vec_id", k=4, iters=2,
-            centroid_mode="literal",
-        ).collect()
+        for r in kmeans(df, "embedding", "vec_id", k=4, iters=2).collect()
     }
-    vec = {
-        r["id"]: r["cluster"]
-        for r in kmeans(
-            df, "embedding", "vec_id", k=4, iters=2,
-            centroid_mode="vectorized",
-        ).collect()
-    }
-    assert lit == vec and len(lit) == len(rows)
+    assert len(got) == len(rows)
 
     # numpy reference: 4 lowest-id seeds, 2 Lloyd rounds, cosine argmax
     X = np.array([r[1] for r in rows])
@@ -1341,7 +1262,7 @@ def test_kmeans_first_class(spark):
                 C[c] = X[a == c].mean(0)
     a = assign(C)
     for i, (vid_, _) in enumerate(rows):
-        assert lit[vid_] == int(a[i])
+        assert got[vid_] == int(a[i])
 
     # derived-k parameterization: ceil(60 / 20) = 3 clusters
     tcs = kmeans(
