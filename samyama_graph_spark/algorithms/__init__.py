@@ -4,9 +4,10 @@ Re-expresses the reference's algorithm library
 (crates/samyama-graph-algorithms: pagerank.rs, community.rs,
 pathfinding.rs, cdlp.rs, lcc.rs, topology.rs) on Spark DataFrames.
 
-PageRank, WCC, CDLP, BFS and SSSP (and SCC's reachability labels, and
+PageRank, WCC, CDLP, BFS and SSSP (and SCC's reachability labels,
 Cypher's deep var-length and ``shortestPath`` BFS in
-``operators/traversal.py``) are vertex programs run by one kernel,
+``operators/traversal.py``, and SPARQL's ``+``/``*`` closures in
+``rdf.py``) are vertex programs run by one kernel,
 ``util.superstep``, modelled on Pregelix's superstep (vertex ⨝
 messages → group-by combine → update).  SCC's outer peel and MST's
 Borůvka rounds keep their own loops.  The kernel:

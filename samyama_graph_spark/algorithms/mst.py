@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 from samyama_graph_spark.algorithms import util
 from samyama_graph_spark.algorithms.util import (
     checkpoint,
-    collect_if_small,
     driver_union_find,
+    edges_pdf_if_small,
     iteration_scope,
     partitioned,
     vertices_from_edges,
@@ -94,10 +94,11 @@ def mst(
     spark = edges.sparkSession
     guard = util.DRIVER_EDGE_GUARD
     if guard > 0:
-        rows = collect_if_small(e, guard, "src", "dst", "weight")
-        if rows is not None:
+        pdf = edges_pdf_if_small(e, guard)
+        if pdf is not None:
+            # Python scalars: createDataFrame rejects numpy ones
             chosen_rows = _boruvka_driver(
-                [(r[0], r[1], r[2]) for r in rows]
+                list(pdf.itertuples(index=False, name=None))
             )
             if not chosen_rows:
                 return spark.createDataFrame(

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from samyama_graph_spark.algorithms import util
 from samyama_graph_spark.algorithms.util import (
-    collect_if_small,
+    edges_pdf_if_small,
     partitioned,
     superstep,
     vertices_from_edges,
@@ -83,11 +83,13 @@ def pagerank(
     def driver(pdf):
         if vertices is None:
             return _pagerank_driver(spark, pdf, iterations, damping, None)
-        vrows = collect_if_small(vertices, util.DRIVER_EDGE_GUARD, "id")
-        if vrows is None:
+        vpdf = edges_pdf_if_small(
+            vertices.select("id"), util.DRIVER_EDGE_GUARD
+        )
+        if vpdf is None:
             return None
         return _pagerank_driver(
-            spark, pdf, iterations, damping, [r[0] for r in vrows]
+            spark, pdf, iterations, damping, vpdf["id"].to_numpy()
         )
 
     def start(e):

@@ -23,7 +23,7 @@ from samyama_graph_spark.algorithms import util
 from samyama_graph_spark.algorithms.components import min_label_step
 from samyama_graph_spark.algorithms.util import (
     checkpoint,
-    collect_if_small,
+    edges_pdf_if_small,
     iteration_scope,
     superstep,
     vertices_from_edges,
@@ -134,7 +134,7 @@ def scc(
     the strongly connected component.
 
     Under ``util.DRIVER_EDGE_GUARD`` edges (read at call time; one
-    early-out CollectLimit probe) the fixpoint runs as sequential
+    bounded Arrow probe) the fixpoint runs as sequential
     Tarjan on the driver — exactly the reference's execution model
     (community.rs:96) and orders of magnitude fewer scheduled jobs than
     the settle loop on a small graph.  Above the guard, distributed
@@ -142,11 +142,12 @@ def scc(
     """
     spark = edges.sparkSession
     if util.DRIVER_EDGE_GUARD > 0:
-        rows = collect_if_small(
-            edges.select("src", "dst"), util.DRIVER_EDGE_GUARD, "src", "dst"
+        pdf = edges_pdf_if_small(
+            edges.select("src", "dst"), util.DRIVER_EDGE_GUARD
         )
-        if rows is not None:
-            comp = _tarjan_components([(r[0], r[1]) for r in rows])
+        if pdf is not None:
+            # Python scalars: createDataFrame rejects numpy ones
+            comp = _tarjan_components(pdf.itertuples(index=False, name=None))
             if not comp:
                 return spark.createDataFrame([], "id long, component long")
             return spark.createDataFrame(

@@ -108,51 +108,13 @@ def partitioned(df: DataFrame, *keys: str) -> DataFrame:
     return lifecycle.pin(df.repartition(n, *keys), eager=False)
 
 
-def collect_if_small(
-    df: DataFrame, guard: int, *cols: str
-) -> list | None:
-    """Collect up to ``guard`` rows, or None if the frame is larger.
-
-    One early-terminating CollectLimit job: on a 100 TB input it scans
-    a handful of partitions, ships at most ``guard + 1`` rows, and
-    reports "too big" — the cheap probe in front of a driver-side
-    fast path.
-    """
-    sel = df.select(*cols) if cols else df
-    # Skip the probe with NO job when the size estimate is both large
-    # and TRUSTWORTHY (scan/union/filter plans: parquet estimates run
-    # ~4x low, never wildly high — cutoff guard/4 in estimate units).
-    # Without this, limit().collect() on a clearly-over frame ships
-    # guard+1 full rows through py4j just to learn "too big"
-    # (measured: a 500k-row Row-object probe on a 1.35M-edge frame
-    # wasted seconds and its heap churn degraded NEIGHBORING bench
-    # entries via GC pressure).  Join/aggregate-derived frames
-    # overestimate wildly (a dup-pair graph bounded by dup volume
-    # estimates like a cross product), so they ALWAYS probe — one
-    # bounded collect, the pre-existing behavior.
-    big_est = estimated_rows(sel) > guard // 4
-    if big_est and cardinality_estimate_trustworthy(sel):
-        return None
-    if big_est:
-        # join/aggregate-derived estimates explode high, so a big
-        # estimate alone can't skip — but a genuinely-over frame must
-        # not ship guard+1 rows just to learn "too big".  Count-probe
-        # first: limit().count() early-terminates and transfers one
-        # long.  Only the (rare) big-estimate-but-actually-small case
-        # pays a second job for the real collect.
-        if sel.limit(guard + 1).count() > guard:
-            return None
-    rows = sel.limit(guard + 1).collect()
-    return None if len(rows) > guard else rows
-
-
 def edges_pdf_if_small(df: DataFrame, guard: int):
     """The frame as a pandas DataFrame when it holds at most ``guard``
     rows, else None.  A large TRUSTWORTHY size estimate (scan-shaped
     plan) skips the probe with no job at all; everything else takes one
     bounded Arrow ``toPandas`` — never py4j Row objects (their heap
     churn measurably degrades the rest of a session).  The probe in
-    front of every numpy driver fast path (bfs/sssp/pagerank/cdlp)."""
+    front of every driver fast path."""
     big_est = estimated_rows(df) > guard // 4
     trusted = cardinality_estimate_trustworthy(df)
     if big_est and trusted:
@@ -164,9 +126,7 @@ def edges_pdf_if_small(df: DataFrame, guard: int):
     # (~16 B/row on edge frames, a few MB) while its cost was a FULL
     # second execution of the upstream pipeline whenever the frame was
     # actually small — the common case (e.g. the dup-pair closure ran
-    # its whole minhash candidate pipeline twice).  collect_if_small
-    # keeps its probe: py4j Row objects there are ~50x Arrow's cost
-    # and their heap churn measurably degraded neighboring queries.
+    # its whole minhash candidate pipeline twice).
     if trusted:
         # trustworthy small estimate: the real count is bounded ~4x the
         # estimate for typical parquet, but dictionary/RLE-heavy edge

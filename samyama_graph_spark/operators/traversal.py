@@ -13,10 +13,12 @@ this is what makes traversal viable at cluster scale (per-start BFS
 loops would be K*starts jobs).  Up to ``_UNROLL_MAX`` hops the hops
 are unrolled into one lazy plan.  Deeper or unbounded traversals
 (``*..6``, ``*``, every ``shortestPath``) are a vertex program on
-``algorithms.util.superstep``: the state is keyed by the reached node
-``id`` and carries its ``start`` and ``hops``; each superstep adds the
-first-reached rows, flagged ``chg``, costs one job, and the loop halts
-at the first hop that reaches nothing new.
+``algorithms.util.superstep``, :func:`reach`: the state is keyed by
+the reached node ``id`` and carries its ``start`` and ``hops``; each
+superstep adds the first-reached rows, flagged ``chg``, costs one job,
+and the loop halts at the first hop that reaches nothing new.  SPARQL's
+``+``/``*`` closures (``rdf._path_closure``) run on the same loop,
+seeded with their base pairs.
 
 The exception is a point-anchored traversal, whose start ids are plan
 constants (``id(p) = $me``): :func:`frontier_expand` runs its BFS on
@@ -127,30 +129,57 @@ def var_length_expand(
     seeds = starts.select(
         F.col(id_col).alias("start"), F.col(id_col).alias("id")
     ).distinct()
-    reached = superstep(
+    reached = reach(
         "var_length_expand",
+        seeds,
         edges,
-        lambda e: _seed_state(seeds),
-        _reach_step(
-            lambda j: j.select(
-                "start",
-                F.col("dst").alias("id"),
-                (F.col("hops") + 1).alias("hops"),
-            ).distinct()
-        ),
         rounds=max_hops,
         view=lambda e: _directed_view(e, direction).dropna(),
-        active="chg",
     )
     return reached.select("start", F.col("id").alias("node"), "hops").filter(
         F.col("hops") >= min_hops
     )
 
 
+def _hop(joined: DataFrame) -> DataFrame:
+    """Reach rows one hop on: each ``(start, id, hops)`` row joined to
+    an edge it leaves, moved to the edge's ``dst``."""
+    return joined.select(
+        "start", F.col("dst").alias("id"), (F.col("hops") + 1).alias("hops")
+    ).distinct()
+
+
+def reach(
+    name: str,
+    seeds: DataFrame,
+    edges: DataFrame,
+    *,
+    rounds: int,
+    view: Callable[[DataFrame], DataFrame] | None = None,
+    extend: Callable[[DataFrame], DataFrame] = _hop,
+    driver: Callable[..., DataFrame | None] | None = None,
+) -> DataFrame:
+    """Visited-set BFS from the ``(start, id)`` rows of ``seeds`` as a
+    :func:`~samyama_graph_spark.algorithms.util.superstep` vertex
+    program: the ``(start, id, hops, ..., chg)`` state of every reached
+    pair, each at its first-reached hop (the seeds at hop 0).
+
+    Each superstep ``extend`` turns the edges leaving the last hop's
+    rows into candidate rows; the ones whose ``(start, id)`` is not yet
+    reached join the state flagged ``chg``.  The loop halts at the
+    first hop that reaches nothing new, or after ``rounds``.  ``view``
+    and ``driver`` are superstep's; the last round's plan is recorded
+    in ``PLAN_TRACE[name]``."""
+    return superstep(
+        name, edges, lambda e: _seed_state(seeds), _reach_step(extend),
+        rounds=rounds, driver=driver, view=view, active="chg",
+    )
+
+
 def _seed_state(seeds: DataFrame) -> DataFrame:
-    """A deep traversal's first superstep state: every start reached
-    from itself at hop 0, and sending.  Lazily checkpointed, so the
-    start ids are computed once, by the first round's count."""
+    """A reach loop's first superstep state: every seed at hop 0, and
+    sending.  Lazily checkpointed, so the seeds are computed once, by
+    the first round's count."""
     return checkpoint(
         seeds.withColumn("hops", F.lit(0)).withColumn("chg", F.lit(True)),
         eager=False,
@@ -158,12 +187,11 @@ def _seed_state(seeds: DataFrame) -> DataFrame:
 
 
 def _reach_step(extend: Callable[[DataFrame], DataFrame]):
-    """Visited-set BFS superstep over ``(start, id, hops, ..., chg)``:
-    ``extend`` turns the edges leaving the last hop's rows into
-    candidate rows, the ones whose ``(start, id)`` is not yet reached
-    join the state flagged ``chg``, and every earlier row stays with
-    ``chg`` cleared.  The loop halts at the first hop that reaches
-    nothing new."""
+    """The reach superstep: the state's rows with ``chg`` cleared plus
+    ``extend``'s candidates not yet in it, flagged ``chg``.  The union
+    is coalesced, with no shuffle, to the loop's shuffle partitions:
+    each hop's new rows would otherwise add that many partitions to
+    the checkpointed state, and as many tasks to every later hop."""
 
     def step(joined: DataFrame, state: DataFrame) -> DataFrame:
         new = extend(joined).join(
@@ -171,8 +199,11 @@ def _reach_step(extend: Callable[[DataFrame], DataFrame]):
             ["start", "id"],
             "left_anti",
         )
-        return state.withColumn("chg", F.lit(False)).unionByName(
-            new.withColumn("chg", F.lit(True))
+        n = int(state.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return (
+            state.withColumn("chg", F.lit(False))
+            .unionByName(new.withColumn("chg", F.lit(True)))
+            .coalesce(n)
         )
 
     return step
@@ -356,18 +387,17 @@ def var_length_paths(
         # frontier-pruned BFS: the state holds the BFS tree (or every
         # shortest path), never the simple paths the unrolled plan
         # enumerates
-        out = superstep(
+        out = reach(
             "var_length_paths",
+            base,
             edges,
-            lambda e: _seed_state(base),
-            _reach_step(
+            rounds=max_hops,
+            view=lambda e: _typed_view(e, direction),
+            extend=(
                 _extend
                 if all_shortest
                 else lambda j: _first_reach(_extend(j), False)
             ),
-            rounds=max_hops,
-            view=lambda e: _typed_view(e, direction),
-            active="chg",
         )
     else:
         # one lazy plan via SIMPLE-PATH ENUMERATION: each depth extends

@@ -21,12 +21,11 @@ predicate/subject filters that Catalyst pushes into the parquet scan.
 from __future__ import annotations
 
 import re
+import sys
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from samyama_graph_spark import lifecycle
 
 _SCHEMA = (
     "s string, p string, o string, o_kind string, "
@@ -362,9 +361,10 @@ class RdfStore:
         alternatives keep bag semantics; closure forms yield distinct
         node pairs (the spec's evaluation rules), with zero-length
         paths matching every term in the graph plus any bound endpoint
-        of the statement.  Closures run as distributed path-doubling
-        joins (O(log diameter) rounds).  A statement using path
-        operators must be '.'-separated from its neighbors.
+        of the statement.  Closures settle on the driver when small,
+        else on the superstep reach loop, one job per hop.  A
+        statement using path operators must be '.'-separated from its
+        neighbors.
 
         ``VALUES ?x { ... }`` / ``VALUES (?x ?y) { (..) (..) }``
         inline solution sets join the group on shared variables
@@ -1976,9 +1976,9 @@ def _path_rel(store: RdfStore, node, identity) -> DataFrame:
     """Path AST -> its node-pair relation as a frame ``__ps, __po``.
     Bag semantics for atoms/inverse/sequence/alternative, distinct
     pairs for the closure forms — the SPARQL 1.1 evaluation rules.
-    Scale posture: sequences are equi-joins, closures are distributed
-    semi-naive-style doubling joins (O(log diameter) rounds, distinct
-    pairs per round); nothing is collected to the driver."""
+    Sequences are equi-joins.  Closures are :func:`_path_closure`: a
+    numpy closure on the driver when the base relation is small, else
+    one superstep per hop of the longest shortest path."""
     kind = node[0]
     if kind == "atom":
         return store.df.filter(F.col("p") == node[1]).select(
@@ -2080,74 +2080,52 @@ def _closure_pairs_vec(src_idx, dst_idx, n: int, pair_budget: int):
     return seen // n, seen % n
 
 
-# pin owner of the distributed _path_closure rounds
-_CLOSURE_OWNER = "rdf.path_closure"
-# base pairs up to which _path_closure settles on the driver
-_CLOSURE_DRIVER_GUARD = 50_000
-
-
 def _path_closure(rel: DataFrame) -> DataFrame:
-    """Transitive closure (distinct node pairs) by path doubling: each
-    round joins the reachable-pair set with itself, so round r covers
-    paths up to 2^r hops — O(log diameter) rounds, convergence by pair
-    count (cycle-safe: distinct pairs can only grow to a fixpoint).
-    Every round is pinned under one owner that the next call releases
-    first, so at most one call's rounds stay cached.  The returned
-    frame reads those pins; once a later call has released them it
-    recomputes every round, and its plan triples per round (each round
-    reads the previous one three times).  So consume it before the next
-    closure: a nested or sequenced ``+``/``*`` path on the distributed
-    loop pays that recompute.
+    """Transitive closure of the pair relation ``rel`` (``__ps, __po``)
+    as distinct pairs: SPARQL's ``p+``.
 
-    Driver fast path (same pattern as the graph algorithms' edge
-    guard): below ``_CLOSURE_DRIVER_GUARD`` base pairs the closure
-    settles via the vectorized multi-source-BFS kernel
-    (_closure_pairs_vec, the numpy CSR family the algorithms package
-    uses) — RDF predicate relations in a query are usually
-    metadata-scale, and each doubling round otherwise costs two
-    scheduled jobs.  The
-    distributed loop is the ≥guard path, and also the fallback when
-    the closure itself would exceed ~4M pairs on the driver; all
-    paths yield the same distinct pair set."""
-    from samyama_graph_spark.algorithms.util import edges_pdf_if_small
+    A reach loop (:func:`operators.traversal.reach`) on
+    ``algorithms.util.superstep``, seeded with the distinct base pairs
+    as ``start = __ps, id = __po``: each superstep extends the pairs
+    reached at the last hop by one base edge, so ``(a, a)`` is reached
+    exactly when a cycle leads back to ``a``.  The loop halts at the
+    first hop that adds no pair, which a finite relation guarantees, so
+    an n-link chain costs n jobs.  The result reads the last round's
+    checkpoint, so a nested or sequenced closure reads it, not its
+    lineage.
 
-    base = rel.select("__ps", "__po")
-    pdf = edges_pdf_if_small(base, _CLOSURE_DRIVER_GUARD)
-    if pdf is not None:
-        import numpy as np
+    Under ``util.DRIVER_EDGE_GUARD`` base pairs (read at call time)
+    superstep's driver path collects them and :func:`_closure_pairs_vec`
+    settles the closure in numpy, unless it exceeds 4 M pairs; the loop
+    runs then.  Both yield the same pair set.  Pairs with a NULL end
+    lead nowhere."""
+    from samyama_graph_spark.operators.traversal import reach
+
+    spark = rel.sparkSession
+    base = rel.select("__ps", "__po").toDF("src", "dst").dropna()
+
+    def driver(pdf):
         import pandas as pd
 
-        spark = rel.sparkSession
         if len(pdf) == 0:
-            return spark.createDataFrame([], "__ps string, __po string")
-        s = pdf.iloc[:, 0].to_numpy(dtype=object)
-        o = pdf.iloc[:, 1].to_numpy(dtype=object)
-        # factorize IRI/literal strings to dense indices for the kernel
-        vid = np.unique(np.concatenate([s, o]))
-        si = np.searchsorted(vid, s)
-        oi = np.searchsorted(vid, o)
-        got = _closure_pairs_vec(si, oi, int(vid.size), pair_budget=4_000_000)
-        if got is not None:
-            roots, nodes = got
-            out = pd.DataFrame({"__ps": vid[roots], "__po": vid[nodes]})
-            return spark.createDataFrame(
-                out, "__ps string, __po string"
-            )
-        # closure too dense for the driver: fall through to the
-        # distributed doubling loop below
-    lifecycle.release(rel.sparkSession, _CLOSURE_OWNER)
-    cand, n = base, -1
-    while True:
-        paths = lifecycle.pin(cand.distinct(), _CLOSURE_OWNER, eager=False)
-        m = paths.count()
-        if m == n:
-            break
-        n = m
-        cand = paths.union(
-            paths.withColumnRenamed("__po", "__mid")
-            .join(paths.withColumnRenamed("__ps", "__mid"), "__mid")
-            .select("__ps", "__po")
+            return spark.createDataFrame([], "start string, id string")
+        # IRI/literal strings -> dense indices for the kernel
+        idx, vid = pd.factorize(pd.concat([pdf["src"], pdf["dst"]]))
+        m = len(pdf)
+        got = _closure_pairs_vec(
+            idx[:m], idx[m:], len(vid), pair_budget=4_000_000
         )
-    return paths
+        if got is None:
+            return None
+        return spark.createDataFrame(
+            pd.DataFrame({"start": vid[got[0]], "id": vid[got[1]]}),
+            "start string, id string",
+        )
+
+    seeds = base.toDF("start", "id").distinct()
+    reached = reach(
+        "path_closure", seeds, base, rounds=sys.maxsize, driver=driver
+    )
+    return reached.select("start", "id").toDF("__ps", "__po")
 
 

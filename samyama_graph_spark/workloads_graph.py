@@ -964,8 +964,8 @@ def rdf_sparql_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sparql/executor.rs:33-54 is a stub); the oracle is DuckDB's
     recursive CTE over the same successor edges.  The successor
     relation is 20 pairs at every shipped scale factor, far under
-    ``rdf._CLOSURE_DRIVER_GUARD``, so the closure settles on the driver
-    in ``rdf._closure_pairs_vec``; the distributed path-doubling join
+    ``util.DRIVER_EDGE_GUARD``, so the closure settles on the driver in
+    ``rdf._closure_pairs_vec``; the superstep reach loop
     (rdf.py:_path_closure) runs only above that guard."""
     from pyspark.sql import Window
 

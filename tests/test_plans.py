@@ -770,50 +770,56 @@ def test_var_length_broadcast_pipeline(spark):
     assert got == want and len(want) == 5
 
 
-def test_collect_if_small_count_probe_no_row_ship(spark, monkeypatch):
-    """Over-guard join-derived frames must be rejected by the count
-    probe (no row transfer), never by collecting guard+1 rows; frames
-    under the guard must still collect."""
-    from pyspark.sql import DataFrame
-
-    from samyama_graph_spark.algorithms.util import collect_if_small
-
-    left = spark.range(2000).withColumnRenamed("id", "a")
-    right = spark.range(2000).withColumnRenamed("id", "b")
-    # join-derived (untrustworthy estimate), 4M rows >> guard
-    big = left.crossJoin(right)
-    real_collect = DataFrame.collect
-
-    def trap(self):
-        raise AssertionError("over-guard frame must not ship rows")
-
-    monkeypatch.setattr(DataFrame, "collect", trap)
-    assert collect_if_small(big, 10_000) is None
-    monkeypatch.setattr(DataFrame, "collect", real_collect)
-    # under-guard join-derived frame still engages the fast path
-    small = left.join(right, left["a"] == right["b"]).limit(50)
-    rows = collect_if_small(small, 10_000, "a")
-    assert rows is not None and len(rows) == 50
-
-
-def test_edges_pdf_count_probe_no_row_ship(spark, monkeypatch):
-    from pyspark.sql import DataFrame
-
+def test_edges_pdf_probe_ships_at_most_guard_plus_one(
+    spark, tmp_path, monkeypatch
+):
+    """A join-derived frame over the guard is rejected by ONE bounded
+    ``toPandas`` of at most guard + 1 rows; a scan-shaped parquet frame
+    over the guard is rejected by its size estimate, with no job; a
+    frame under the guard comes back whole.  The traps patch the
+    frames' concrete class, which defines its own ``toPandas``."""
     from samyama_graph_spark.algorithms.util import edges_pdf_if_small
 
+    guard = 10_000
     left = spark.range(2000).withColumnRenamed("id", "src")
     right = spark.range(2000).withColumnRenamed("id", "dst")
+    # join-derived (untrustworthy estimate), 4M rows >> guard
     big = left.crossJoin(right)
+    cls = type(big)
+    real = cls.toPandas
+    shipped = []
+
+    def spy(self):
+        pdf = real(self)
+        shipped.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(cls, "toPandas", spy)
+    assert edges_pdf_if_small(big, guard) is None
+    assert len(shipped) == 1 and shipped[0] <= guard + 1, shipped
+
+    path = str(tmp_path / "scan")
+    spark.range(200_000).select(
+        (F.rand(1) * 1e18).cast("long").alias("src"),
+        (F.rand(2) * 1e18).cast("long").alias("dst"),
+    ).write.parquet(path)
+    scan = spark.read.parquet(path)
     monkeypatch.setattr(
-        DataFrame, "toPandas",
+        cls, "toPandas",
         lambda self: (_ for _ in ()).throw(
-            AssertionError("over-guard frame must not ship rows")
+            AssertionError("a trusted over-guard estimate ships no rows")
         ),
     )
-    assert edges_pdf_if_small(big, 10_000) is None
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(None))
+    assert edges_pdf_if_small(scan, guard) is None
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == jobs
+
     monkeypatch.undo()
     small = big.limit(100)
-    pdf = edges_pdf_if_small(small, 10_000)
+    pdf = edges_pdf_if_small(small, guard)
     assert pdf is not None and len(pdf) == 100
 
 

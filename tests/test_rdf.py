@@ -991,13 +991,50 @@ def test_sparql_select_expressions(spark, store):
     assert [(r["x"], r["d"]) for r in got] == [(f"{_EX}carol", 67.0)]
 
 
-def test_path_closure_driver_and_distributed_agree(spark, monkeypatch):
-    """The guarded driver BFS closure and the distributed path-doubling
-    loop must produce the same distinct pair set — including cycles
-    and self-loops."""
+def _closure_rel(spark, tmp_path, pairs):
+    """``pairs`` as a ``__ps, __po`` relation read from parquet, whose
+    size estimate lets the closure's driver path take it."""
+    path = str(tmp_path / "rel")
+    spark.createDataFrame(pairs, "__ps string, __po string").write.parquet(
+        path
+    )
+    return spark.read.parquet(path)
+
+
+def _distributed(monkeypatch):
+    """Send every closure to the superstep loop."""
+    from samyama_graph_spark.algorithms import util
+
+    monkeypatch.setattr(util, "DRIVER_EDGE_GUARD", 0)
+
+
+def _spy_kernel(monkeypatch):
+    """Count the calls of the closure's driver kernel."""
+    from samyama_graph_spark import rdf
+
+    calls = []
+    real = rdf._closure_pairs_vec
+    monkeypatch.setattr(
+        rdf, "_closure_pairs_vec",
+        lambda *a, **kw: calls.append(1) or real(*a, **kw),
+    )
+    return calls
+
+
+def _last_job(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def test_path_closure_driver_and_distributed_agree(
+    spark, tmp_path, monkeypatch
+):
+    """The guarded driver BFS closure and the distributed reach loop
+    must produce the same distinct pair set — including cycles and
+    self-loops."""
     import random
 
-    from samyama_graph_spark import rdf
     from samyama_graph_spark.rdf import _path_closure
 
     rng = random.Random(13)
@@ -1007,54 +1044,72 @@ def test_path_closure_driver_and_distributed_agree(spark, monkeypatch):
             for _ in range(60)
         }
     )
-    rel = spark.createDataFrame(pairs, "__ps string, __po string")
+    rel = _closure_rel(spark, tmp_path, pairs)
+    ran = _spy_kernel(monkeypatch)
     fast = {(r["__ps"], r["__po"]) for r in _path_closure(rel).collect()}
-    monkeypatch.setattr(rdf, "_CLOSURE_DRIVER_GUARD", 0)
+    assert ran
+    _distributed(monkeypatch)
     slow = {(r["__ps"], r["__po"]) for r in _path_closure(rel).collect()}
     assert fast == slow and len(fast) > len(pairs)
 
 
-def test_path_closure_releases_previous_call(spark, monkeypatch):
-    """The distributed doubling loop pins its rounds; the next call
-    releases them first.  Three calls on three different chains leave
-    at most one generation of pins (the previous call's persisted RDDs
-    are gone after each call) and each returns the chain's closure.
-    Chains of 3 to 5 links need two or three doubling rounds each, so
-    every call pins rounds."""
-    from samyama_graph_spark import rdf
+def test_path_closure_loop_pins_nothing_nests_and_budget(
+    spark, monkeypatch
+):
+    """On the superstep loop a closure leaves no lifecycle pin behind;
+    ``p+/q+`` with both closures on the loop equals the driver answer;
+    and an n-link chain's closure is exact in at most n + 2 jobs (one
+    superstep per hop, one for the empty hop, one to collect), with
+    the loop's plan in ``PLAN_TRACE["path_closure"]``."""
+    from samyama_graph_spark import lifecycle
+    from samyama_graph_spark.algorithms import util
     from samyama_graph_spark.rdf import _path_closure
 
-    def rdd_ids() -> set:
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
+    st = RdfStore(spark)
+    st.insert_ntriples(
+        "\n".join(
+            [f"<{_EX}a{i}> <{_EX}p> <{_EX}a{i + 1}> ." for i in range(4)]
+            + [f"<{_EX}a3> <{_EX}p> <{_EX}a1> ."]
+            + [f"<{_EX}a{i}> <{_EX}q> <{_EX}b{i}> ." for i in range(5)]
+            + [f"<{_EX}b{i}> <{_EX}q> <{_EX}b{i + 1}> ." for i in range(4)]
+        )
+    )
+    q = f"SELECT ?x ?y WHERE {{ ?x <{_EX}p>+/<{_EX}q>+ ?y . }}"
+    ran = _spy_kernel(monkeypatch)
+    want = sorted(tuple(r) for r in st.sparql(q).collect())
+    assert len(ran) == 2 and len(want) > 20
+    _distributed(monkeypatch)
+    held = lifecycle._held(spark).pins
+    before = {k: len(v) for k, v in held.items()}
+    got = sorted(tuple(r) for r in st.sparql(q).collect())
+    assert got == want and len(ran) == 2
+    assert {k: len(v) for k, v in held.items()} == before
 
-    monkeypatch.setattr(rdf, "_CLOSURE_DRIVER_GUARD", 0)
-    base = rdd_ids()
-    previous: set = set()
-    for n, tag in [(3, "a"), (4, "b"), (5, "c")]:
+    util.PLAN_TRACE.pop("path_closure", None)
+    for n in (20, 25, 30):
         rel = spark.createDataFrame(
-            [(f"{tag}{i}", f"{tag}{i + 1}") for i in range(n)],
+            [(f"c{i}", f"c{i + 1}") for i in range(n)],
             "__ps string, __po string",
         )
+        a = _last_job(spark)
         got = {(r["__ps"], r["__po"]) for r in _path_closure(rel).collect()}
+        jobs = _last_job(spark) - a
         assert got == {
-            (f"{tag}{i}", f"{tag}{j}")
-            for i in range(n) for j in range(i + 1, n + 1)
+            (f"c{i}", f"c{j}") for i in range(n) for j in range(i + 1, n + 1)
         }
-        live = rdd_ids()
-        assert not previous & live, sorted(previous & live)
-        previous = live - base
-        assert previous
+        assert jobs <= n + 2, (n, jobs)
+    assert "path_closure" in util.PLAN_TRACE
 
 
-def test_path_closure_vec_kernel_and_budget_fallback(spark, monkeypatch):
+def test_path_closure_vec_kernel_and_budget_fallback(
+    spark, tmp_path, monkeypatch
+):
     """The vectorized multi-source-BFS closure kernel (r8 advice:
     replaced the dict BFS with the numpy CSR family): chain + cycle +
     self-loop exactness, and a tiny pair budget returns None so
     _path_closure falls back to the distributed loop."""
     import numpy as np
 
-    from samyama_graph_spark import rdf
     from samyama_graph_spark.rdf import _closure_pairs_vec, _path_closure
 
     # 0->1->2->3 chain with a 3->1 back edge (cycle) and 0->0 self-loop
@@ -1070,12 +1125,12 @@ def test_path_closure_vec_kernel_and_budget_fallback(spark, monkeypatch):
     assert _closure_pairs_vec(src, dst, 4, pair_budget=5) is None
     # end-to-end: a dense 20-clique closure exceeds a tiny budget only
     # in the kernel; _path_closure must still answer via the
-    # distributed doubling loop with identical pairs
+    # distributed loop with identical pairs
     pairs = [(f"v{i}", f"v{j}") for i in range(12) for j in range(12)
              if i != j]
-    rel = spark.createDataFrame(pairs, "__ps string, __po string")
+    rel = _closure_rel(spark, tmp_path, pairs)
     fast = {(r["__ps"], r["__po"]) for r in _path_closure(rel).collect()}
-    monkeypatch.setattr(rdf, "_CLOSURE_DRIVER_GUARD", 0)
+    _distributed(monkeypatch)
     slow = {(r["__ps"], r["__po"]) for r in _path_closure(rel).collect()}
     assert fast == slow and len(fast) == 144  # full clique incl. i->i
 

@@ -317,3 +317,21 @@ def test_deep_traversal_job_budget_and_trace(spark, messy_edges):
             assert (b - a, c - b) == (jobs, 1), direction
     assert "ShuffledHashJoin" in util.PLAN_TRACE["var_length_expand"]
     assert "ShuffledHashJoin" in util.PLAN_TRACE["var_length_paths"]
+
+
+def test_deep_reach_keeps_partition_count_flat(spark, tmp_path):
+    """Each hop's union with the reached state is coalesced to the
+    loop's shuffle partitions, so a 20-hop reach returns no more
+    partitions than the loop's shuffles use, not one batch per hop."""
+    from samyama_graph_spark.algorithms import util
+
+    edges = _parquet(
+        spark, tmp_path / "chain", [(i, i + 1) for i in range(20)],
+        "src long, dst long",
+    )
+    starts = spark.createDataFrame([(0,)], "id long")
+    with util.iteration_scope(spark, edges):
+        loop_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    got = traversal.var_length_expand(starts, edges, 1, 25)
+    assert _rows(got) == [(0, i, i) for i in range(1, 21)]
+    assert got.rdd.getNumPartitions() <= loop_n
