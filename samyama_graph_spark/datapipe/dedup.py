@@ -215,7 +215,17 @@ def minhash_lsh_pairs(
         *[F.min(f"h{i}").alias(f"mh{i}") for i in range(num_hashes)],
         F.count(F.lit(1)).alias("__n"),
     )
-    cand = _lsh_candidates_with_sizes(sigs, num_hashes, bands)
+    # the sizes are functionally dependent on the ids, so the distinct
+    # over (x, y, nx, ny) has exactly the (x, y) cardinality
+    buckets = band_buckets(sigs, num_hashes, bands, carry=("__n",))
+    l = buckets.select(F.col("id").alias("x"), F.col("__n").alias("nx"), "bkt")
+    r = buckets.select(F.col("id").alias("y"), F.col("__n").alias("ny"), "bkt")
+    cand = (
+        l.join(r, "bkt")
+        .filter(F.col("x") < F.col("y"))
+        .select("x", "y", "nx", "ny")
+        .distinct()
+    )
     a = hashed.select(F.col("id").alias("x"), "sk")
     b = hashed.select(F.col("id").alias("y"), "sk")
     inter = (
@@ -231,39 +241,6 @@ def minhash_lsh_pairs(
             "jacc"
         ),
     ).filter(F.col("jacc") >= threshold)
-
-
-def _lsh_candidates_with_sizes(
-    sigs: DataFrame, num_hashes: int, bands: int
-) -> DataFrame:
-    """Banded-LSH candidate pairs ``(x, y, nx, ny)`` from signatures
-    that carry a ``__n`` shingle-set size: the sizes are functionally
-    dependent on the ids, so the distinct over (x, y, nx, ny) has
-    exactly the (x, y) cardinality and downstream Jaccard needs no
-    join back to a size aggregate."""
-    rows = num_hashes // bands
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            *[F.col(f"mh{b * rows + r}").alias(f"v{r}") for r in range(rows)],
-        )
-        for b in range(bands)
-    ]
-    buckets = sigs.select(
-        "id", "__n", F.explode(F.array(*band_cols)).alias("bkt")
-    )
-    l = buckets.select(
-        F.col("id").alias("x"), F.col("__n").alias("nx"), "bkt"
-    )
-    r = buckets.select(
-        F.col("id").alias("y"), F.col("__n").alias("ny"), "bkt"
-    )
-    return (
-        l.join(r, "bkt")
-        .filter(F.col("x") < F.col("y"))
-        .select("x", "y", "nx", "ny")
-        .distinct()
-    )
 
 
 def ngram_jaccard_pairs(
@@ -1226,11 +1203,14 @@ def apply_dedup(
 
 
 def band_buckets(
-    sigs: DataFrame, num_hashes: int = 8, bands: int = 4
+    sigs: DataFrame,
+    num_hashes: int = 8,
+    bands: int = 4,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Exploded band-bucket rows ``(id, bkt)`` from MinHash signatures
-    — the unit the LSH candidate join and the at-rest incremental
-    index share."""
+    """Exploded band-bucket rows ``(id, *carry, bkt)`` from MinHash
+    signatures — the unit the LSH candidate join and the at-rest
+    incremental index share."""
     rows = num_hashes // bands
     band_cols = [
         F.struct(
@@ -1239,7 +1219,7 @@ def band_buckets(
         )
         for b in range(bands)
     ]
-    return sigs.select("id", F.explode(F.array(*band_cols)).alias("bkt"))
+    return sigs.select("id", *carry, F.explode(F.array(*band_cols)).alias("bkt"))
 
 
 def minhash_index(

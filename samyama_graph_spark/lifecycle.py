@@ -1,13 +1,18 @@
 """Frame and conf lifecycle: the one module that pins (persists) a
-DataFrame, releases it, scopes a temporary Spark conf change, and
-reads a bounded frame onto the driver.
+DataFrame, memoizes a session's derived objects, releases both, scopes
+a temporary Spark conf change, and reads a bounded frame onto the
+driver.
 
-Every pin belongs to an owner inside its SparkSession.  An owner is
-either a name (``"dedup"``, ``"topology.closure"``, ...) whose caller
-releases it when its next invocation starts, or the innermost open
-:func:`scope`, which releases its pins on exit.  The registry lives on
-its session object, so two sessions sharing the process never release
-each other's live pins, and dropping a session frees its registry.
+Every pin and every memo belongs to an owner inside its SparkSession.
+An owner is either a name (``"dedup"``, ``("loaders.graph", sf_dir)``,
+...) whose caller releases it (a pin owner when its next invocation
+starts, a memo owner when it wants a fresh build), or the innermost
+open :func:`scope`, which releases its pins on exit.  A
+:func:`memo` holds what a session builds once and reuses: table
+handles, graphs, Cypher engines, checkpointed statistics.  Each
+session has one registry, kept as an attribute of the session object:
+two sessions sharing the process never see or release each other's
+state, and dropping a session frees everything it pinned or memoized.
 
 Plan identity.  Spark's CacheManager keys a cache entry on the
 canonicalized plan, not on the DataFrame object.  Persisting a frame
@@ -24,7 +29,7 @@ from __future__ import annotations
 
 import contextlib
 import threading
-from typing import Hashable, Iterator, Mapping, Sequence
+from typing import Callable, Hashable, Iterator, Mapping, Sequence, TypeVar
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
@@ -35,17 +40,21 @@ LITERAL_KEYS_MAX = 1024
 
 _LOCK = threading.Lock()
 
+T = TypeVar("T")
+
 
 class _Held:
     """A session's lifecycle state, kept as an attribute of the session:
-    owner -> pinned frames, and the owner tokens of its open scopes,
-    innermost last.  Each pinned frame holds its session, so a registry
-    keyed by session from outside it would keep every session alive."""
+    owner -> pinned frames, owner -> memoized value, and the owner
+    tokens of its open scopes, innermost last.  Each pinned frame or
+    memoized graph holds its session, so a registry keyed by session
+    from outside it would keep every session alive."""
 
-    __slots__ = ("pins", "scopes")
+    __slots__ = ("pins", "memos", "scopes")
 
     def __init__(self) -> None:
         self.pins: dict[Hashable, list[DataFrame]] = {}
+        self.memos: dict[Hashable, object] = {}
         self.scopes: list[object] = []
 
 
@@ -80,11 +89,27 @@ def pin(
     return df
 
 
-def release(spark: SparkSession, owner: Hashable) -> None:
-    """Unpersist, blocking, every frame pinned under ``owner`` in
-    ``spark``."""
+def memo(spark: SparkSession, owner: Hashable, build: Callable[[], T]) -> T:
+    """``build()``'s value, built once per (``spark``, ``owner``) and
+    held on the session until :func:`release` forgets it.  ``build``
+    runs outside the lock, so it may itself call :func:`memo`; when two
+    threads race, both build and the first value stored wins."""
     with _LOCK:
-        frames = _held(spark).pins.pop(owner, [])
+        held = _held(spark)
+        if owner in held.memos:
+            return held.memos[owner]
+    value = build()
+    with _LOCK:
+        return held.memos.setdefault(owner, value)
+
+
+def release(spark: SparkSession, owner: Hashable) -> None:
+    """Forget ``owner``'s memo in ``spark`` and unpersist, blocking,
+    every frame pinned under it."""
+    with _LOCK:
+        held = _held(spark)
+        held.memos.pop(owner, None)
+        frames = held.pins.pop(owner, [])
     for df in frames:
         df.unpersist(blocking=True)
 

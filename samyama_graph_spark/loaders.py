@@ -22,12 +22,12 @@ from __future__ import annotations
 
 import json
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.graph import EdgeMeta, PropertyGraph
 
 TABLES = [
@@ -61,6 +61,11 @@ def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _norm(sf_dir: str | None) -> str:
+    """The memo key of ``sf_dir``: None means the default directory."""
+    return os.path.normpath(sf_dir or default_sf_dir())
+
+
 def load_tables(
     spark: SparkSession, sf_dir: str | None = None, names: list[str] | None = None
 ) -> dict[str, DataFrame]:
@@ -80,11 +85,11 @@ def _load(
     spark: SparkSession, sf_dir: str | None, names: list[str] | None
 ) -> dict[str, tuple[DataFrame, int | None]]:
     """load_tables with each table's footer row count (None when the
-    footers could not be read)."""
-    sf_dir = sf_dir or default_sf_dir()
+    footers could not be read).  The frames are lazy plan handles:
+    memoizing them skips repeated footer reads without pinning data."""
+    sf_dir = _norm(sf_dir)
     wanted = names or TABLES
-    per = _TABLE_CACHE.setdefault(spark, {})
-    cached = per.setdefault(sf_dir, {})
+    cached = lifecycle.memo(spark, ("loaders.tables", sf_dir), dict)
     missing = [n for n in wanted if n not in cached]
     if missing:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -239,19 +244,6 @@ def _leaf_type(col, conf: dict[str, bool]) -> T.DataType:
     raise ValueError(f"parquet type {physical} {kind} left to Spark")
 
 
-# DataFrames are lazy plan handles: caching them per (session, sf_dir)
-# skips repeated footer reads without pinning any data.
-# Keyed WEAKLY on the live session object — id(spark) can be reused by
-# a new session after the old one is collected, which would hand out
-# plan handles bound to a dead context.
-_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict[str, tuple[DataFrame, int | None]]]]" = (
-    weakref.WeakKeyDictionary()
-)
-_GRAPH_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, PropertyGraph]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def register_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
     """Load + register each table as a temp view (name = table name)."""
     tables = load_tables(spark, sf_dir)
@@ -282,12 +274,16 @@ def tpch_graph(spark: SparkSession, sf_dir: str | None = None) -> PropertyGraph:
     Edges: IN_REGION (nation->region), IN_NATION (customer->nation,
     supplier->nation), PLACED (customer->order), CONTAINS
     (order->part, one edge per lineitem with its measures),
-    SUPPLIED_BY (part->supplier per lineitem).
+    SUPPLIED_BY (part->supplier per lineitem).  Memoized per (session,
+    sf_dir).
     """
-    sf_dir = sf_dir or default_sf_dir()
-    per = _GRAPH_CACHE.setdefault(spark, {})
-    if sf_dir in per:
-        return per[sf_dir]
+    sf_dir = _norm(sf_dir)
+    return lifecycle.memo(
+        spark, ("loaders.graph", sf_dir), lambda: _tpch_graph(spark, sf_dir)
+    )
+
+
+def _tpch_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
     loaded = _load(spark, sf_dir, None)
     t = {name: df for name, (df, _) in loaded.items()}
 
@@ -402,7 +398,6 @@ def tpch_graph(spark: SparkSession, sf_dir: str | None = None) -> PropertyGraph:
         for label, table in _ROW_PRESERVING.items()
         if loaded[table][1] is not None
     }
-    per[sf_dir] = g
     return g
 
 

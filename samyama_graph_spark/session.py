@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """The driver heap: 24g, capped at three quarters of physical RAM
+    so one heavy query fails in the JVM instead of exhausting the
+    machine."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 << 10, ram * 3 // 4 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "samyama_graph_spark",
     master: str | None = None,
@@ -42,7 +50,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # Long-lived-session hygiene.  The status store ingests every
         # job/stage/task event even with the UI off and its in-memory
         # eviction is O(retained); a many-query session (this engine's

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.datapipe.common import (
     hash60_sql,
     hash_family_member_sql,
@@ -52,13 +53,6 @@ sh AS (SELECT DISTINCT doc_id AS id,
 """
 
 
-import weakref
-
-_SPREAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table, parallelized.  The synthetic corpus tables are
     single-row-group parquet files, which Spark scans as ONE task —
@@ -69,17 +63,18 @@ def _spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     / multi-row-group inputs the condition never fires and the frame
     passes through untouched.  Operators themselves are unchanged —
     this is ingest wiring, the job of any real deployment's loader.
+    Memoized per (session, sf_dir, name).
     """
-    per = _SPREAD_CACHE.setdefault(spark, {})
-    key = (sf_dir, name)
-    if key not in per:
+
+    def build() -> DataFrame:
         df = load_tables(spark, sf_dir, [name])[name]
         target = min(32, spark.sparkContext.defaultParallelism)
         # plan-only partition probe: no job for a file scan
         if df.rdd.getNumPartitions() < target:
             df = df.repartition(target)
-        per[key] = df
-    return per[key]
+        return df
+
+    return lifecycle.memo(spark, ("workloads_datapipe.spread", sf_dir, name), build)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

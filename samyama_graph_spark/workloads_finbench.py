@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.cypher.engine import CypherEngine
 from samyama_graph_spark.graph import EdgeMeta, PropertyGraph
 from samyama_graph_spark.loaders import BASE, load_tables
@@ -122,22 +123,12 @@ accounts AS (
 )
 """
 
-# weakly keyed on the live session (loaders.py:85 convention):
-# id(spark) can be recycled by a new session after the old one is
-# collected, which would hand out frames bound to a dead context
-import weakref
-
-_GRAPHS: "weakref.WeakKeyDictionary[SparkSession, dict[str, PropertyGraph]]" = (
-    weakref.WeakKeyDictionary()
-)
-_ENGINES: "weakref.WeakKeyDictionary[SparkSession, dict[str, CypherEngine]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def finbench_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
-    per = _GRAPHS.setdefault(spark, {})
-    if sf_dir not in per:
+    """The FinBench property graph derived from the events table,
+    memoized per (session, sf_dir)."""
+
+    def build() -> PropertyGraph:
         ev = load_tables(spark, sf_dir, ["events"])["events"]
         k_col = F.get_json_object("props", "$.k").cast("long")
 
@@ -229,7 +220,7 @@ def finbench_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
             .otherwise("tablet")
             .alias("mediumType"),
         )
-        per[sf_dir] = PropertyGraph(
+        g = PropertyGraph(
             spark,
             {
                 "Account": accts,
@@ -259,15 +250,18 @@ def finbench_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
         )
         # parquet-derived, never written in place (write workloads use
         # fresh session graphs): safe for lazy compile-time stats
-        per[sf_dir].__dict__["_stats_safe"] = True
-    return per[sf_dir]
+        g.__dict__["_stats_safe"] = True
+        return g
+
+    return lifecycle.memo(spark, ("workloads_finbench.graph", sf_dir), build)
 
 
 def _engine(spark: SparkSession, sf_dir: str) -> CypherEngine:
-    per = _ENGINES.setdefault(spark, {})
-    if sf_dir not in per:
-        per[sf_dir] = CypherEngine(finbench_graph(spark, sf_dir))
-    return per[sf_dir]
+    return lifecycle.memo(
+        spark,
+        ("workloads_finbench.engine", sf_dir),
+        lambda: CypherEngine(finbench_graph(spark, sf_dir)),
+    )
 
 
 @query(

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from samyama_graph_spark import lifecycle
 from samyama_graph_spark.algorithms import pagerank, sssp, wcc
 from samyama_graph_spark.loaders import ID_BASE, load_tables, tpch_graph
 from samyama_graph_spark.operators import var_length_expand
@@ -312,17 +313,6 @@ def cdlp_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LCC (reference: lcc.rs:29) over the co-order part graph
 # --------------------------------------------------------------------------
 
-import weakref
-
-# Keyed WEAKLY on the live SparkSession object (not id(spark): a
-# stopped+collected session's id can be reused by a new session, which
-# would replay DataFrames bound to a dead context); the per-session dict
-# dies with the session.
-_TRI_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[DataFrame, DataFrame]]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def coorder_pairs(
     li: DataFrame,
     order_col: str,
@@ -359,6 +349,10 @@ def coorder_pairs(
     )
 
 
+# memo owner prefix of _coorder_stats, keyed (COORDER_STATS, sf_dir)
+COORDER_STATS = "workloads_graph.coorder_stats"
+
+
 def _coorder_stats(spark: SparkSession, sf_dir: str):
     """Per-vertex co-order (id, deg, triangles), computed ONCE per
     (session, sf_dir) and RELIABLY checkpointed so the lcc and
@@ -367,10 +361,12 @@ def _coorder_stats(spark: SparkSession, sf_dir: str):
     cached blocks between queries (reliable checkpoint files survive;
     only cache() blocks are swept).  triangle_stats routes small pair
     sets through its vectorized driver path."""
-    per = _TRI_CACHE.setdefault(spark, {})
-    if sf_dir in per:
-        return per[sf_dir]
+    return lifecycle.memo(
+        spark, (COORDER_STATS, sf_dir), lambda: _build_coorder_stats(spark, sf_dir)
+    )
 
+
+def _build_coorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from samyama_graph_spark.algorithms.topology import triangle_stats
     from samyama_graph_spark.session import ensure_checkpoint_dir
 
@@ -380,9 +376,7 @@ def _coorder_stats(spark: SparkSession, sf_dir: str):
     )
     pairs = coorder_pairs(li, "order_id", "part_id")
     ensure_checkpoint_dir(spark)
-    stats = triangle_stats(pairs, canonical=True).checkpoint()
-    per[sf_dir] = stats
-    return stats
+    return triangle_stats(pairs, canonical=True).checkpoint()
 
 
 @query(

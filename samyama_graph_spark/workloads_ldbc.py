@@ -111,25 +111,13 @@ def _knows_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ring
 
 
-# weakly keyed on the live session (loaders.py:85 convention):
-# id(spark) can be recycled by a new session after the old one is
-# collected, which would hand out frames bound to a dead context
-import weakref
-
-_LDBC_GRAPHS: "weakref.WeakKeyDictionary[SparkSession, dict[str, PropertyGraph]]" = (
-    weakref.WeakKeyDictionary()
-)
-_LDBC_ENGINES: "weakref.WeakKeyDictionary[SparkSession, dict[str, CypherEngine]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def ldbc_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
     """tpch_graph + the derived KNOWS social edge (FIXTURES.md F2 -> F5
     binding).  Node tables and the other edge types are shared with the
-    base projection, so plan caches and ANALYZE stats carry over."""
-    per = _LDBC_GRAPHS.setdefault(spark, {})
-    if sf_dir not in per:
+    base projection, so plan caches and ANALYZE stats carry over.
+    Memoized per (session, sf_dir)."""
+
+    def build() -> PropertyGraph:
         base = tpch_graph(spark, sf_dir)
         edges = dict(base.edges)
         edges["KNOWS"] = lifecycle.pin(
@@ -144,15 +132,17 @@ def ldbc_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
         )._carry_stats_from(base)
         # parquet-derived, never written: safe for lazy compile-time stats
         g.__dict__["_stats_safe"] = True
-        per[sf_dir] = g
-    return per[sf_dir]
+        return g
+
+    return lifecycle.memo(spark, ("workloads_ldbc.graph", sf_dir), build)
 
 
 def _engine(spark: SparkSession, sf_dir: str) -> CypherEngine:
-    per = _LDBC_ENGINES.setdefault(spark, {})
-    if sf_dir not in per:
-        per[sf_dir] = CypherEngine(ldbc_graph(spark, sf_dir))
-    return per[sf_dir]
+    return lifecycle.memo(
+        spark,
+        ("workloads_ldbc.engine", sf_dir),
+        lambda: CypherEngine(ldbc_graph(spark, sf_dir)),
+    )
 
 
 # ---------------------------------------------------------------------------

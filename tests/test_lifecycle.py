@@ -23,7 +23,7 @@ def _sources():
 
 
 def test_only_lifecycle_persists_frames_and_sets_confs():
-    frame_calls, conf_calls, old_names = [], [], []
+    frame_calls, conf_calls, old_names, weak_caches = [], [], [], []
     for rel, text in _sources():
         for no, line in enumerate(text.splitlines(), 1):
             where = f"{rel}:{no}: {line.strip()}"
@@ -43,9 +43,13 @@ def test_only_lifecycle_persists_frames_and_sets_confs():
                 line,
             ):
                 old_names.append(where)
+            # a session-keyed cache outside the session keeps it alive
+            if "WeakKeyDictionary" in line:
+                weak_caches.append(where)
     assert not frame_calls, frame_calls
     assert not conf_calls, conf_calls
     assert not old_names, old_names
+    assert not weak_caches, weak_caches
 
 
 def test_scope_restores_confs_and_releases_pins_after_exception(spark):
@@ -121,3 +125,100 @@ def test_dropped_session_frees_its_registry(spark):
         assert ref() is None
     finally:
         jdf.unpersist(True)
+
+
+def _collected(spark, build) -> bool:
+    """Whether a new session that ran ``build`` is collected once
+    dropped."""
+    import gc
+    import weakref
+
+    from pyspark.sql import session as pyspark_session
+
+    other = spark.newSession()
+    build(other)
+    ref = weakref.ref(other)
+    del other
+    # creating a session rebinds pyspark's RDD.toDF to it: bind it back
+    pyspark_session._monkey_patch_RDD(spark)
+    gc.collect()
+    return ref() is None
+
+
+def test_dropped_session_frees_its_graphs_and_engines(spark, sf_dir):
+    """Memoized graphs and engines hold their session, so they must be
+    held by the session, not by a module-level table keyed on it."""
+    from samyama_graph_spark import workloads_cypher, workloads_finbench
+    from samyama_graph_spark import workloads_ldbc
+    from samyama_graph_spark.loaders import tpch_graph
+
+    def build(other):
+        tpch_graph(other, sf_dir)
+        workloads_ldbc.ldbc_graph(other, sf_dir)
+        workloads_ldbc._engine(other, sf_dir)
+        workloads_cypher._engine(other, sf_dir)
+        workloads_finbench.finbench_graph(other, sf_dir)
+        # the KNOWS ring is cached in the CacheManager the sessions
+        # share: free it here, as dropping its session cannot
+        lifecycle.release(other, ("workloads_ldbc.knows", sf_dir))
+
+    assert _collected(spark, build)
+
+
+@pytest.fixture
+def other(spark):
+    """A second session on the shared context."""
+    from pyspark.sql import session as pyspark_session
+
+    second = spark.newSession()
+    # creating a session rebinds pyspark's RDD.toDF to it: bind it back
+    pyspark_session._monkey_patch_RDD(spark)
+    return second
+
+
+def test_memo_builds_once_per_session_and_owner(spark, other):
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    try:
+        first = lifecycle.memo(spark, "test.memo", build)
+        assert lifecycle.memo(spark, "test.memo", build) is first
+        assert len(calls) == 1
+        theirs = lifecycle.memo(other, "test.memo", build)
+        assert theirs is not first and len(calls) == 2
+        assert lifecycle.memo(other, "test.memo", build) is theirs
+        assert lifecycle.memo(spark, "test.memo.2", build) is not first
+        assert len(calls) == 3
+    finally:
+        for owner in ("test.memo", "test.memo.2"):
+            lifecycle.release(spark, owner)
+
+
+def test_memo_build_may_memo(spark):
+    """Builds nest (a graph memo builds the table memo), so a build
+    runs outside the registry lock."""
+    try:
+        outer = lifecycle.memo(
+            spark, "test.outer", lambda: [lifecycle.memo(spark, "test.inner", list)]
+        )
+        assert outer[0] is lifecycle.memo(spark, "test.inner", list)
+    finally:
+        lifecycle.release(spark, "test.outer")
+        lifecycle.release(spark, "test.inner")
+
+
+def test_release_forgets_only_that_sessions_memo(spark, other):
+    mine = lifecycle.memo(spark, "test.release", object)
+    theirs = lifecycle.memo(other, "test.release", object)
+    try:
+        lifecycle.release(other, "test.release")
+        assert lifecycle.memo(spark, "test.release", object) is mine
+        fresh = lifecycle.memo(other, "test.release", object)
+        assert fresh is not theirs
+    finally:
+        lifecycle.release(spark, "test.release")
+    assert lifecycle.memo(spark, "test.release", object) is not mine
+    lifecycle.release(spark, "test.release")

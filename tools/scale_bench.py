@@ -124,17 +124,22 @@ def main() -> None:
     def rss_mb() -> float:
         return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
 
-    def cleanup() -> None:
+    def release_coorder(sf_dir: str) -> None:
+        # the co-order stats and engine are session-memoized by design
+        # (a materialized view, like the reference's resident CSR) —
+        # but a SCALE artifact must price the build, not the memo read
+        from samyama_graph_spark import lifecycle, workloads_cypher, workloads_graph
+
+        for owner in (workloads_graph.COORDER_STATS, workloads_cypher.COORDER_ENGINE):
+            lifecycle.release(spark, (owner, sf_dir))
+
+    def cleanup(sf_dir: str) -> None:
         import gc
 
         from samyama_graph_spark.cypher.engine import clear_plan_caches
-        from samyama_graph_spark import workloads_graph
 
         clear_plan_caches()
-        # the co-order stats are session-memoized by design (a
-        # materialized view, like the reference's resident CSR) — but a
-        # SCALE artifact must price the build, not the memo read
-        workloads_graph._TRI_CACHE.clear()
+        release_coorder(sf_dir)
         gc.collect()
         for _rid, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
             rdd.unpersist()
@@ -165,11 +170,9 @@ def main() -> None:
             attempts = 0
             while len(samples) < 3 and attempts < 8 and err is None:
                 attempts += 1
-                # per-SAMPLE memo clear (not just per entry): the scale
+                # per-SAMPLE memo release (not just per entry): the scale
                 # slope must price every run's build, never a memo read
-                from samyama_graph_spark import workloads_graph
-
-                workloads_graph._TRI_CACHE.clear()
+                release_coorder(sf_dir)
                 p0 = probe()
                 j0, t0 = maxjob(), time.perf_counter()
                 try:
@@ -195,7 +198,7 @@ def main() -> None:
                     continue
                 samples.append(elapsed)
                 jobs.append(maxjob() - j0)
-            cleanup()
+            cleanup(sf_dir)
             dirty = False
             if not samples and dirty_samples:
                 samples, jobs, dirty = dirty_samples, dirty_jobs, True
